@@ -1,74 +1,34 @@
 package graft
-import org.apache.spark.sql.SparkSession
-object Bench {
 
-  /** Deterministic per-query WORK metrics, from the task-metrics
-    * listener: input rows/bytes, shuffle read/write bytes, task count,
-    * peak task execution memory. Wall time on this VM varies up to 2x
-    * run-to-run with zero code change (two rounds of judge effort went
-    * into litigating host noise); these numbers are properties of the
-    * PLAN, not the host — a query whose shuffle bytes or task count
-    * grows round-over-round changed its plan (the q_funnel
-    * CTE-inlining incident, SURVEY §4, is the class of regression this
-    * catches), while a wall-time-only wobble with flat work metrics is
-    * the host. tools/bench_compare.py gates on these and treats wall
-    * time as advisory.
-    */
-  final class WorkStats extends org.apache.spark.scheduler.SparkListener {
-    private var inRows = 0L
-    private var inBytes = 0L
-    private var shRead = 0L
-    private var shWrite = 0L
-    private var tasks = 0L
-    private var peakMem = 0L
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = synchronized {
-      val m = e.taskMetrics
-      if (m != null) {
-        tasks += 1
-        inRows += m.inputMetrics.recordsRead
-        inBytes += m.inputMetrics.bytesRead
-        shRead += m.shuffleReadMetrics.remoteBytesRead +
-          m.shuffleReadMetrics.localBytesRead
-        shWrite += m.shuffleWriteMetrics.bytesWritten
-        if (m.peakExecutionMemory > peakMem) peakMem = m.peakExecutionMemory
-      }
-    }
-    def reset(): Unit = synchronized {
-      inRows = 0; inBytes = 0; shRead = 0; shWrite = 0; tasks = 0; peakMem = 0
-    }
-    /** One compact JSON object (stable key order). */
-    def snapshotJson(): String = synchronized {
-      s"""{"in_rows":$inRows,"in_bytes":$inBytes,"sh_read":$shRead,""" +
-        s""""sh_write":$shWrite,"tasks":$tasks,"peak_mem":$peakMem}"""
-    }
-    def tasksNow(): Long = synchronized { tasks }
-    def shWriteNow(): Long = synchronized { shWrite }
-  }
+import graft.tools.TaskMetrics
+
+/** The benchmark sweep: every `SparkEntry.queries` entry (or the names
+  * given as arguments), one warm run and three timed steady runs each to
+  * a noop sink, with the work digest of the first steady run.
+  *
+  * Usage: `runMain graft.Bench [q_a q_b ...]`. With no arguments the
+  * sweep covers the whole registry and writes BENCH_SUMMARY.json and
+  * BENCH_FULL.json; a named subset prints the same lines but leaves
+  * those files, which describe the full sweep, untouched.
+  * Env: `SPARK_GRAFT_SF_DIR` (default: the sf0.1 test data); cores as
+  * in [[GraftSession.localCores]].
+  */
+object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // r16: AQE may re-plan cached-plan output partitioning — see the
-      // rationale in GraftSession.builder (same flag there); without it
-      // every pass over a persisted tiny intermediate costs
-      // shuffle.partitions tasks
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val selected =
+      if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
+      else args.toSeq.map(n => n -> SparkEntry.queries(n))
+    val spark = GraftSession.get("bench")
     // untimed warmup: JVM/codegen/session init and parquet footer reads
     // otherwise land on whichever query happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
     try SparkEntry.queries("q_scan_project")(spark, sfDir).count()
     catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
-    val work = new WorkStats
+    val work = new TaskMetrics
     spark.sparkContext.addSparkListener(work)
     val workJson = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val steadyRuns = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
@@ -76,7 +36,7 @@ object Bench {
     var shWriteTotal = 0L
     // a failed query is REPORTED and excluded, never silently timed as a
     // near-zero success
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       // noop sink forces FULL query execution — count() would let Catalyst
       // prune the very projections being measured. First run warms
       // (planning, codegen, file index); the steady-state figure is the
@@ -99,7 +59,7 @@ object Bench {
             None
         }
       }
-      run()
+      val warm = run()
       // work metrics cover the FIRST steady run only (drain the async
       // listener queue on both sides of the window so the warm run's
       // stragglers and the steady run's tail both land correctly).
@@ -115,9 +75,14 @@ object Bench {
         tasksTotal += work.tasksNow()
         shWriteTotal += work.shWriteNow()
       }
+      System.err.println(f"[bench] $name%-28s warm=${warm.getOrElse(-1.0)}%8.3f " +
+        f"steady=${s1.getOrElse(-1.0)}%8.3f jobs=${work.jobsNow()}%3d " +
+        f"stages=${work.stagesNow()}%3d work=${work.snapshotJson()}")
       val passes = (Seq(s1) ++ (if (s1.isDefined) Seq(run(), run()) else Nil)).flatten
       // median of 3; if a later pass fails (first succeeded), fall back
-      // to the first pass rather than dropping a query that does run
+      // to the first pass rather than dropping a query that does run —
+      // and record it in partial_steady, so a single-sample figure is
+      // told apart from a median
       val steady =
         if (passes.size == 3) Some(passes.sorted.apply(1))
         else passes.headOption
@@ -131,6 +96,7 @@ object Bench {
       name -> steady
     }
     val failed = results.collect { case (n, None) => n }
+    val partial = steadyRuns.collect { case (n, ps) if ps.size < 3 => n }.toSeq
     // The driver captures only the LAST 2000 chars of output. BENCH_r09's
     // tail ended MID-WAY through the old ~6KB full-map line, so nothing
     // parsed. Fix: the full map goes to a FILE (BENCH_FULL.json), the
@@ -144,25 +110,30 @@ object Bench {
     val qs = jmap(timed.sortBy { case (k, v) => (v, k) })
     val top10 = jmap(timed.sortBy { case (k, v) => (-v, k) }.take(10))
     val total = math.round(results.flatMap(_._2).sum * 1000) / 1000.0
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def jlist(names: Seq[String]): String = names.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val steadyNote =
+      if (partial.isEmpty) "median of 3 steady runs"
+      else "steady figure is the first run for partial_steady, else the median of three"
     // r17: the compact line carries the DETERMINISTIC work digest
     // (total steady-run tasks + shuffle write bytes — properties of the
     // plan, immune to host stalls) so the driver's 2000-char stdout tail
     // has a noise-free round-over-round signal even when wall is stalled.
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","ok":${results.count(_._2.isDefined)},"failed":$failedJson,"sf":"$sfDir","tasks_total":$tasksTotal,"shuffle_write_bytes":$shWriteTotal,"queries":$top10,"note":"top10 heaviest; median of 3 steady runs; full map in BENCH_FULL.json"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","ok":${results.count(_._2.isDefined)},"failed":${jlist(failed)},"partial_steady":${jlist(partial)},"sf":"$sfDir","tasks_total":$tasksTotal,"shuffle_write_bytes":$shWriteTotal,"queries":$top10,"note":"top10 heaviest; $steadyNote; full map in BENCH_FULL.json"}"""
     val workMap = workJson.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     val runsMap = steadyRuns.map { case (k, vs) =>
       s"\"$k\":" + vs.map(v => math.round(v * 1000) / 1000.0).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries_full":$qs,"steady_runs":$runsMap,"work":$workMap}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries_full":$qs,"steady_runs":$runsMap,"partial_steady":${jlist(partial)},"work":$workMap}"""
     def writeFile(path: String, body: String): Unit =
       try {
         val w = new java.io.PrintWriter(path, "UTF-8")
         try w.println(body) finally w.close()
       } catch { case e: Throwable => System.err.println(s"[bench] write $path failed: $e") }
-    writeFile("BENCH_SUMMARY.json", compact)
-    writeFile("BENCH_FULL.json", full)
+    if (args.isEmpty) {
+      writeFile("BENCH_SUMMARY.json", compact)
+      writeFile("BENCH_FULL.json", full)
+    }
     // Stop Spark BEFORE the summary lines and drop to ERROR so neither
     // stop() nor the exit-time shutdown hooks can log after them — if
     // the driver merges stderr into stdout, a stray "Shutdown hook

@@ -2,14 +2,22 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the settings the engine assumes.
+/** Session factory with the settings the engine assumes. Every main in
+  * the repo gets its session here, so the engine the bench times and the
+  * oracle dump verifies is the one the specs test.
   *
-  * Local testing runs `local[32]`; at cluster scale the same builder is used
+  * Local runs use `local[cores]`; at cluster scale the same builder is used
   * minus `master`, and `spark.sql.shuffle.partitions` should be ~4× executor
   * cores — AQE partition coalescing makes the setting a cap, not a constant.
   */
 object GraftSession {
-  def builder(appName: String = "graft", cores: Int = 32): SparkSession.Builder =
+  /** Local cores for every main: `SPARK_GRAFT_CPUS`, else the host's
+    * processor count. The only place the variable is read.
+    */
+  lazy val localCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def builder(appName: String = "graft", cores: Int = localCores): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .master(s"local[$cores]")
@@ -43,7 +51,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
 
-  def get(appName: String = "graft", cores: Int = 32): SparkSession = {
+  def get(appName: String = "graft", cores: Int = localCores): SparkSession = {
     val spark = builder(appName, cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -103,7 +111,7 @@ object GraftSession {
     *     ingest door died on scratch without it).
     */
   def scaleBuilder(appName: String, dataDirs: Seq[String],
-                   cores: Int = 32): SparkSession.Builder = {
+                   cores: Int = localCores): SparkSession.Builder = {
     val partitions = sys.env.get("SPARK_GRAFT_SHUFFLE") match {
       case Some(v) => v.toInt
       case None => derivedShufflePartitions(dataDirs.map(dirBytes).sum, cores)

@@ -16,7 +16,7 @@ object TextOps {
     "fr" -> Seq("le", "la", "les", "et", "est", "dans", "pour", "une"),
     "zh" -> Seq("的", "是", "不", "了", "在", "我", "有", "和"))
 
-  private def tokensExpr(textCol: String) = s"split(lower(trim($textCol)), '\\\\s+')"
+  private[graft] def tokensExpr(textCol: String) = s"split(lower(trim($textCol)), '\\\\s+')"
 
   /** Stopword-vote language ID; adds `s_<lang>` scores and `predicted`. */
   def languageId(df: DataFrame, textCol: String): DataFrame = {
@@ -414,9 +414,9 @@ object TextOps {
     */
   def repetitionSignals(df: DataFrame, idCol: String, textCol: String): DataFrame =
     // r17: counting moved into the native codegen'd RepetitionCounts
-    // kernel (one JVM pass per row — the HOF battery below was
-    // interpreted per lambda element; the GopherCounts pattern, VERDICT
-    // r16 #4). The quotient/round arithmetic stays HERE on the same
+    // kernel (one JVM pass per row — the HOF battery, now the test-side
+    // TextOpsHof, was interpreted per lambda element; the GopherCounts
+    // pattern, VERDICT r16 #4). The quotient/round arithmetic stays HERE on the same
     // Catalyst expression tree as before (same casts, same operand
     // order), so every emitted double is bit-identical to the HOF
     // formulation — pinned by RepetitionSpec's kernel-vs-HOF sweep.
@@ -427,46 +427,6 @@ object TextOps {
         col("_c.top2").as("top_bigram_n"),
         expr("round(IF(_c.n_bigrams = 0, 0D, CAST(_c.top2 AS DOUBLE) / _c.n_bigrams), 6)")
           .as("top_bigram_frac"))
-
-  /** The round-12 HOF formulation of [[repetitionSignals]] — retained as
-    * the independent reference implementation RepetitionSpec sweeps the
-    * native kernel against. Not used in any query path.
-    */
-  private[graft] def repetitionSignalsHof(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // intermediates bound as lambda variables (single-element transform
-    // wrap), NOT withColumn aliases — see [[gopherSignals]]: interpreted
-    // HOFs have no CSE and project collapse substitutes the defining
-    // expression into every reference, so `element_at(_s, i)` per filter
-    // position re-ran the whole sort (quadratic per row)
-    //
-    // guard: sequence(1, 0) counts DOWN in Spark, so short docs must
-    // short-circuit to an empty bigram list before any element_at
-    val bg = "IF(size(tk) < 2, array(), " +
-      "transform(sequence(1, size(tk) - 1), " +
-      "i -> concat_ws(' ', element_at(tk, i), element_at(tk, i + 1))))"
-    // run-length encode the sorted bigrams: starts = positions whose
-    // value differs from the previous; run lengths = start-to-start gaps
-    val starts = "IF(size(s) = 0, array(), " +
-      "filter(sequence(1, size(s)), i -> i = 1 OR element_at(s, i) != element_at(s, i - 1)))"
-    val top = "CAST(IF(size(s) = 0, 0, array_max(zip_with(st, " +
-      "concat(slice(st, 2, size(st) - 1), array(size(s) + 1)), " +
-      "(a, b) -> b - a))) AS BIGINT)"
-    val sig =
-      s"element_at(transform(array(${tokensExpr(textCol)}), tk -> " +
-        s"element_at(transform(array(array_sort($bg)), s -> " +
-        s"element_at(transform(array($starts), st -> " +
-        s"element_at(transform(array($top), tp -> named_struct(" +
-        "'n_tok', CAST(size(tk) AS BIGINT), " +
-        "'dup_token_frac', round(1D - CAST(size(array_distinct(tk)) AS DOUBLE) / size(tk), 6), " +
-        "'top_bigram_n', tp, " +
-        "'top_bigram_frac', round(IF(size(s) = 0, 0D, CAST(tp AS DOUBLE) / size(s)), 6)" +
-        ")), 1)), 1)), 1)), 1)"
-    df.withColumn("_sig", expr(sig))
-      .select(col(idCol), col("_sig.n_tok").as("n_tok"),
-        col("_sig.dup_token_frac").as("dup_token_frac"),
-        col("_sig.top_bigram_n").as("top_bigram_n"),
-        col("_sig.top_bigram_frac").as("top_bigram_frac"))
-  }
 
   /** Token-bounded chunking — [[chunk]]'s twin where the window is `size`
     * whitespace tokens (the unit LLM context budgets are written in)
@@ -763,28 +723,12 @@ object TextOps {
     // (binary search over the sorted broadcast vocab — the HOF filter
     // was interpreted per token AND array_contains re-scanned the whole
     // vocab per token). The rate arithmetic stays on the same Catalyst
-    // tree; OovSpec sweeps kernel vs the retained HOF reference.
+    // tree; OovSpec sweeps kernel vs the HOF reference in TextOpsHof.
     val vocabArr = vocab.toDF("_w").agg(sort_array(collect_set(col("_w"))).as("_vocab"))
     df.join(broadcast(vocabArr))
       .withColumn("_tk", expr(tokensExpr(textCol)))
       .withColumn("n_tok", expr("CAST(size(_tk) AS BIGINT)"))
       .withColumn("n_oov", expr("graft_oov_count(_tk, _vocab)"))
-      .withColumn("oov_rate",
-        expr("round(CAST(n_oov AS DOUBLE) / greatest(n_tok, CAST(1 AS BIGINT)), 6)"))
-      .drop("_tk", "_vocab")
-  }
-
-  /** The HOF formulation of [[oovRate]] — retained as the independent
-    * reference implementation OovSpec sweeps the native kernel against.
-    * Not used in any query path.
-    */
-  private[graft] def oovRateHof(df: DataFrame, textCol: String, vocab: DataFrame): DataFrame = {
-    val vocabArr = vocab.toDF("_w").agg(sort_array(collect_set(col("_w"))).as("_vocab"))
-    df.join(broadcast(vocabArr))
-      .withColumn("_tk", expr(tokensExpr(textCol)))
-      .withColumn("n_tok", expr("CAST(size(_tk) AS BIGINT)"))
-      .withColumn("n_oov",
-        expr("CAST(size(filter(_tk, t -> NOT array_contains(_vocab, t))) AS BIGINT)"))
       .withColumn("oov_rate",
         expr("round(CAST(n_oov AS DOUBLE) / greatest(n_tok, CAST(1 AS BIGINT)), 6)"))
       .drop("_tk", "_vocab")
@@ -811,10 +755,13 @@ object TextOps {
     *    distinct window in the partition (TopK's documented
     *    moderate-key-cardinality contract).
     *
-    * The pair table is persisted for the two passes (counts + examples)
-    * and not unpersisted — the plan is still lazy at return; long-lived
-    * sessions batching many corpora should `spark.catalog.clearCache()`
-    * between runs (the [[graft.operators.Dedup.minhashLsh]] contract).
+    * Not lazy: the call itself runs the jobs that materialize the pair
+    * table and the hot-window set, because the hot set's row count
+    * decides the broadcast guard below. Only the examples join is left
+    * for the returned plan. Both frames stay persisted after return;
+    * long-lived sessions batching many corpora should
+    * `spark.catalog.clearCache()` between runs (the
+    * [[graft.operators.Dedup.minhashLsh]] contract).
     */
   def repeatedWindows(df: DataFrame, idCol: String, textCol: String,
                       w: Int = 7, minDocs: Int = 2,
@@ -1022,8 +969,9 @@ object TextOps {
     */
   def gopherSignals(df: DataFrame, idCol: String, textCol: String): DataFrame =
     // r16: counting moved into the native codegen'd GopherCounts kernel
-    // (one JVM pass per row — the HOF battery below was interpreted per
-    // lambda element, 1.3–2.0 s for 10k ~54-token docs at sf0.1). The
+    // (one JVM pass per row — the HOF battery, now the test-side
+    // TextOpsHof, was interpreted per lambda element, 1.3–2.0 s for 10k
+    // ~54-token docs at sf0.1). The
     // quotient/round arithmetic stays HERE on the same Catalyst
     // expression tree as before (same casts, same operand order), so
     // every emitted double is bit-identical to the HOF formulation —
@@ -1035,57 +983,6 @@ object TextOps {
           .as("dup_5gram_frac"),
         expr("round(_c.sumlen / CAST(_c.n_tok AS DOUBLE), 6)").as("mean_word_len"),
         expr("round(CAST(_c.n_alpha AS DOUBLE) / _c.n_tok, 6)").as("alpha_frac"))
-
-  /** The round-12 HOF formulation of [[gopherSignals]] — retained as the
-    * independent reference implementation GopherSpec sweeps the native
-    * kernel against (adversarial inputs: empty/1-token docs, non-ASCII,
-    * repeated grams). Not used in any query path.
-    */
-  private[graft] def gopherSignalsHof(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // EVERY intermediate (tk, s3, st, g5) is bound as a LAMBDA VARIABLE
-    // via the single-element transform(array(x), v -> ...) trick, not a
-    // withColumn alias: HOF lambdas are interpreted with no common-
-    // subexpression elimination, and CollapseProject substitutes a
-    // withColumn's defining expression into EVERY reference — so
-    // `element_at(_s3, i)` inside a per-position filter re-ran the whole
-    // array_sort(grams) PER ELEMENT, turning a linear pass quadratic
-    // (measured: 22 s for 5000 x ~54-token docs at sf0.1; 1.5 s after
-    // binding — the scale-sweep pipeline phase dropped with it). A
-    // lambda variable is evaluated once and read by reference.
-    def grams(n: Int) = {
-      val parts = (0 until n).map(o => s"element_at(tk, i + $o)").mkString(", ")
-      s"IF(size(tk) < $n, array(), " +
-        s"transform(sequence(1, size(tk) - ${n - 1}), i -> concat_ws(' ', $parts)))"
-    }
-    // run-length encode the sorted trigrams: starts = positions whose
-    // value differs from the previous; the max start-to-start gap is
-    // the top trigram's occurrence count (same trick as
-    // repetitionSignals — identical to the oracle's GROUP BY max)
-    val starts = "IF(size(s3) = 0, array(), " +
-      "filter(sequence(1, size(s3)), i -> i = 1 OR element_at(s3, i) != element_at(s3, i - 1)))"
-    val top3 = "IF(size(s3) = 0, CAST(0 AS BIGINT), CAST(array_max(zip_with(st, " +
-      "concat(slice(st, 2, size(st) - 1), array(size(s3) + 1)), " +
-      "(a, b) -> b - a)) AS BIGINT))"
-    val sig =
-      s"element_at(transform(array(${tokensExpr(textCol)}), tk -> " +
-        s"element_at(transform(array(array_sort(${grams(3)})), s3 -> " +
-        s"element_at(transform(array($starts), st -> " +
-        s"element_at(transform(array(${grams(5)}), g5 -> named_struct(" +
-        "'n_tok', CAST(size(tk) AS BIGINT), " +
-        s"'top_trigram_frac', round(CAST($top3 * 3 AS DOUBLE) / size(tk), 6), " +
-        "'dup_5gram_frac', round(least(CAST(1 AS DOUBLE), " +
-        "CAST((size(g5) - size(array_distinct(g5))) * 5 AS DOUBLE) / size(tk)), 6), " +
-        "'mean_word_len', round(aggregate(tk, CAST(0 AS BIGINT), (acc, t) -> acc + length(t)) " +
-        "/ CAST(size(tk) AS DOUBLE), 6), " +
-        "'alpha_frac', round(CAST(size(filter(tk, t -> t rlike '^[a-z]+$')) AS DOUBLE) " +
-        "/ size(tk), 6))), 1)), 1)), 1)), 1)"
-    df.withColumn("_sig", expr(sig))
-      .select(col(idCol), col("_sig.n_tok").as("n_tok"),
-        col("_sig.top_trigram_frac").as("top_trigram_frac"),
-        col("_sig.dup_5gram_frac").as("dup_5gram_frac"),
-        col("_sig.mean_word_len").as("mean_word_len"),
-        col("_sig.alpha_frac").as("alpha_frac"))
-  }
 
   /** Feature-hashed bag-of-words embedding (hashing trick, Weinberger
     * et al. 2009): each token hashes to one of `dims` buckets via the

@@ -1,7 +1,6 @@
 package graft.tools
 
 import scala.collection.mutable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -14,47 +13,23 @@ import org.apache.spark.sql.execution.QueryExecution
   *
   *   - wall time per query/phase, at the base sf AND the target sf, so
   *     time-vs-rows scaling is measured inside one harness;
-  *   - per-stage task-input balance from a task-metrics listener
-  *     (max task input bytes, worst max/median ratio over stages with
-  *     meaningful input) — the "no task 10× the median" skew check;
+  *   - per-stage task-input balance from the task-metrics listener
+  *     ([[TaskMetrics]]: max task input bytes, worst max/median ratio
+  *     over stages with meaningful input) — the "no task 10× the median"
+  *     skew check;
   *   - AQE skew-split activations (final executed plans swept for
   *     `skew=true`) and peak task execution memory — the no-OOM check.
   *
   * Phases: (a) all 22 TPC-H queries, (b) the dedup battery
   * (minhashLsh → dropNearDuplicates → duplicateClusters), (c) the
   * IVF-PQ ANN read path (trained coarse cells + PQ codebook, nprobe
-  * pruning, broadcast-LUT ADC scoring, TopK.perKey merge).
+  * pruning, broadcast-LUT ADC scoring, TopK.perKey merge). Off by
+  * default: (d) `ingest`, the streaming ingest door, and (e)
+  * `components`, label propagation on a hot-label graph — run alone
+  * (`SPARK_GRAFT_PHASES=components`) its sweep-level skew figures are
+  * the connected-components skew probe.
   */
 object BenchSf10 {
-
-  /** Per-stage task input sizes + global peaks, by listener. */
-  final class TaskStats extends SparkListener {
-    val byStage = mutable.Map[Int, mutable.ArrayBuffer[Long]]()
-    @volatile var peakExecMem = 0L
-    @volatile var failedTasks = 0
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      if (e.reason.toString != "Success") failedTasks += 1
-      val m = e.taskMetrics
-      if (m != null) {
-        val in = m.inputMetrics.bytesRead +
-          m.shuffleReadMetrics.remoteBytesRead + m.shuffleReadMetrics.localBytesRead
-        byStage.getOrElseUpdate(e.stageId, mutable.ArrayBuffer[Long]()) += in
-        if (m.peakExecutionMemory > peakExecMem) peakExecMem = m.peakExecutionMemory
-      }
-    }
-    /** (maxTaskInput, worstMaxOverMedian) over stages with median > 1 MB. */
-    def skewSummary(): (Long, Double, Int, Int) = synchronized {
-      val maxIn = byStage.values.flatten.foldLeft(0L)(math.max)
-      var worst = 0.0
-      for (tasks <- byStage.values if tasks.length >= 4) {
-        val s = tasks.sorted
-        val med = s(s.length / 2)
-        if (med > (1L << 20)) worst = math.max(worst, s.last.toDouble / med)
-      }
-      (maxIn, math.round(worst * 100) / 100.0, byStage.size, byStage.values.map(_.size).sum)
-    }
-    def reset(): Unit = synchronized { byStage.clear(); peakExecMem = 0L; failedTasks = 0 }
-  }
 
   /** Counts AQE skew-split activations in final executed plans. */
   final class SkewCounter extends QueryExecutionListener {
@@ -79,8 +54,9 @@ object BenchSf10 {
   private def r3(d: Double): Double = math.round(d * 1000) / 1000.0
 
   /** Which sweep sections run — env `SPARK_GRAFT_PHASES` (comma list of
-    * tpch,dedup,spans,bpe,pipeline,ann; default all). Lets an sf100-scale run
-    * skip the training-dominated ANN phase (already measured at sf10 —
+    * tpch,dedup,dedup_incr,dedup_recall,stream,ingest,spans,bpe,pipeline,
+    * ann,components; default all but ingest and components). Lets an
+    * sf100-scale run skip the training-dominated ANN phase (already measured at sf10 —
     * its cost is kmeans+PQ training, which the frozen-codebook
     * streaming design amortizes anyway) without forking the tool.
     */
@@ -288,6 +264,30 @@ object BenchSf10 {
       println(s"[sf10] $dir dedup_recall: true=$nTrue lsh_in_win=$nLshInWin " +
         s"lsh_out_win=$nLshOutWin missed=$nMissed recall_ppm=$recallPpm")
     } catch { case e: Throwable => phaseFailed("dedup_recall", e) }
+
+    // connected components where one label is hot: a 20M-vertex graph
+    // from orders (the shape q_components declares at mod 60). At sf100
+    // it has ~150M edges and forms a single component, so every
+    // propagation round's persisted label frame is GBs and the label-keyed
+    // join concentrates on one key — the skew the worst/median task-input
+    // ratio of this phase measures.
+    if (phases("components")) try {
+      val (tCc, (nVertices, nClusters)) = time {
+        val edges = graft.sources.Tables(spark, dir, "orders")
+          .selectExpr("o_custkey % 20000000 AS src",
+            "(o_custkey + o_orderkey) % 20000000 AS dst")
+        val pairs = graft.operators.Graph.canonicalEdges(edges)
+          .selectExpr("a AS a_id", "b AS b_id")
+        val clusters = Dedup.duplicateClusters(pairs)
+        (clusters.count(), clusters.agg(count_distinct(col("cluster"))).head().getLong(0))
+      }
+      out += "components_label_propagation" -> r3(tCc)
+      out += "components_vertices" -> nVertices.toDouble
+      out += "components_clusters" -> nClusters.toDouble
+      graft.operators.Caches.unpersistAll()
+      reclaimShuffle()
+      println(s"[sf10] $dir components: vertices=$nVertices clusters=$nClusters")
+    } catch { case e: Throwable => phaseFailed("components", e) }
 
     // round-8 operators at scale: exact maximal dup spans (the planted
     // ~10% document duplicates give every sf real span work) and the
@@ -521,7 +521,7 @@ object BenchSf10 {
       s.sparkContext.setLogLevel("WARN")
       s
     }
-    val stats = new TaskStats
+    val stats = new TaskMetrics
     val skews = new SkewCounter
     spark.sparkContext.addSparkListener(stats)
     spark.listenerManager.register(skews)
@@ -539,8 +539,8 @@ object BenchSf10 {
       val qs = times.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
       s"""{"dir":"$dir","wall_sec":${r3(wall)},"queries":$qs,""" +
         s""""max_task_input_bytes":$maxIn,"worst_task_over_median":$worstRatio,""" +
-        s""""stages":$stages,"tasks":$tasks,"failed_tasks":${stats.failedTasks},""" +
-        s""""peak_task_exec_mem_bytes":${stats.peakExecMem},""" +
+        s""""stages":$stages,"tasks":$tasks,"failed_tasks":${stats.failedTasks()},""" +
+        s""""peak_task_exec_mem_bytes":${stats.peakExecMem()},""" +
         s""""degraded_after_failure":$sawFatal,""" +
         s""""aqe_skew_splits":${skews.reset()}}"""
     }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object HeadToHead {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.get("head2head", 32)
+    val spark = GraftSession.get("head2head")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).selectExpr("sum(id)").collect() // JVM warmup
 

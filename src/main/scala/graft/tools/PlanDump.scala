@@ -3,11 +3,19 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.{GraftSession, SparkEntry}
-import org.apache.spark.sql.execution.SimpleMode
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
 
-/** Dumps physical plans of headline queries to PLANS.md — the artifact
-  * backing the scale-design claims (pushdown, broadcast, TakeOrdered,
-  * narrow pipelines). Regenerate: `sbt "runMain graft.tools.PlanDump"`.
+/** Dumps physical plans, in two forms:
+  *
+  *   - no arguments: the headline queries' plans to PLANS.md — the
+  *     artifact backing the scale-design claims (pushdown, broadcast,
+  *     TakeOrdered, narrow pipelines). Regenerate:
+  *     `sbt "runMain graft.tools.PlanDump"`;
+  *   - `<outDir> <suffix> q...`: `.explain("formatted")` of each named
+  *     query to `<outDir>/<q>_<suffix>.txt` — before/after plan evidence
+  *     for an optimization. Env: `SPARK_GRAFT_SF_DIR` (default: the sf0.1
+  *     test data).
   */
 object PlanDump {
   private val headline = Seq(
@@ -74,10 +82,17 @@ object PlanDump {
     "q_dedup_sliced" -> "sliced full-corpus dedup: each slice equi-joins the BUCKETED saved band index (corpus side exchange-free), corpus_id < new_id keeps every pair exactly once — the bounded-scratch shape that completes at 1000x rows")
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.get("plandump", 8)
+    require(args.isEmpty || args.length >= 3, "usage: PlanDump [<outDir> <suffix> q...]")
+    val spark = GraftSession.get("plandump")
+    if (args.isEmpty) headlinePlans(spark)
+    else namedPlans(spark, args(0), args(1), args.toSeq.drop(2))
+    spark.stop()
+  }
+
+  private def headlinePlans(spark: SparkSession): Unit = {
     val dir = "/root/testdata/sf0.001"
     val sb = new StringBuilder
-    sb.append("# PLANS — headline physical plans (sf0.001, local[8])\n\n")
+    sb.append(s"# PLANS — headline physical plans (sf0.001, local[${GraftSession.localCores}])\n\n")
     sb.append("Generated by `graft.tools.PlanDump`; the properties asserted in\n")
     sb.append("PlanQualitySpec/BucketingSpec are visible below. `*(n)` marks a\n")
     sb.append("WholeStageCodegen stage.\n")
@@ -89,6 +104,22 @@ object PlanDump {
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
-    spark.stop()
+  }
+
+  private def namedPlans(spark: SparkSession, outDir: String, suffix: String,
+                         names: Seq[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      val out = s"$outDir/${name}_$suffix.txt"
+      try {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        Files.writeString(Paths.get(out), df.queryExecution.explainString(FormattedMode))
+        println(s"PLANDUMP wrote $out")
+      } catch {
+        case e: Throwable => System.err.println(s"PLANDUMP $name failed: $e")
+      }
+      graft.operators.Caches.unpersistAll()
+    }
   }
 }

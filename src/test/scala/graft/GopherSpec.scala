@@ -4,7 +4,7 @@ import graft.operators.TextOps
 
 /** r16: the native GopherCounts kernel must reproduce the HOF
   * formulation of gopherSignals BIT-FOR-BIT (the HOF form is retained as
-  * gopherSignalsHof purely as this spec's reference). Adversarial
+  * TextOpsHof.gopherSignals purely as this spec's reference). Adversarial
   * inputs: empty and 1-token docs (division edges), sub-trigram and
   * sub-5-gram lengths, heavy repetition, non-ASCII tokens, mixed
   * alphabetic/non-alphabetic tokens, multi-space runs.
@@ -34,7 +34,7 @@ class GopherSpec extends SparkSpec {
   test("native kernel reproduces the HOF gopherSignals bit-for-bit") {
     val native = TextOps.gopherSignals(docs, "doc_id", "text")
       .orderBy("doc_id").collect()
-    val hof = TextOps.gopherSignalsHof(docs, "doc_id", "text")
+    val hof = TextOpsHof.gopherSignals(docs, "doc_id", "text")
       .orderBy("doc_id").collect()
     assert(native.length == hof.length)
     native.zip(hof).foreach { case (n, h) =>

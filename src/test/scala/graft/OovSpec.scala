@@ -4,7 +4,7 @@ import graft.operators.TextOps
 
 /** r17: the native OovCount kernel (binary search over the sorted
   * broadcast vocabulary) must reproduce the HOF formulation of oovRate
-  * BIT-FOR-BIT (retained as oovRateHof purely as this spec's
+  * BIT-FOR-BIT (kept as TextOpsHof.oovRate purely as this spec's
   * reference). Adversarial inputs: empty docs, all-OOV and all-in-vocab
   * docs, tokens lexically below/above every vocab entry (binary-search
   * boundary probes), non-ASCII, repeated tokens.
@@ -31,7 +31,7 @@ class OovSpec extends SparkSpec {
   test("native kernel reproduces the HOF oovRate bit-for-bit") {
     val native = TextOps.oovRate(docs, "text", vocab)
       .orderBy("doc_id").collect()
-    val hof = TextOps.oovRateHof(docs, "text", vocab)
+    val hof = TextOpsHof.oovRate(docs, "text", vocab)
       .orderBy("doc_id").collect()
     assert(native.length == hof.length)
     native.zip(hof).foreach { case (n, h) =>

@@ -18,6 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   *    subexpressions inside lambda bodies — the signature CollapseProject
   *    leaves when a derived array is referenced per-element instead of
   *    bound as a lambda variable.
+  *
+  * 3. One engine configuration: only [[GraftSession]] builds a session
+  *    or reads the core count, so every main runs the conf the specs do.
   */
 class RegistryContractsSpec extends SparkSpec {
 
@@ -90,5 +93,31 @@ class RegistryContractsSpec extends SparkSpec {
         "tk -> transform(sequence(1, 3), i -> element_at(tk, i))), 1)) AS xs")
     assert(graft.plans.HofLint.lint(good).isEmpty,
       graft.plans.HofLint.lint(good).mkString("; "))
+  }
+
+  test("only GraftSession builds a SparkSession or reads SPARK_GRAFT_CPUS") {
+    // every main runs the engine the specs test: one session conf, one
+    // core count. Source scan, so a new main cannot drift silently.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }.filter(_.getFileName.toString != "GraftSession.scala")
+    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    def offenders(pattern: String): Seq[String] = {
+      val re = pattern.r
+      files.filter(f => re.findFirstIn(java.nio.file.Files.readString(f)).isDefined)
+        .map(root.relativize(_).toString).sorted
+    }
+    val builders = offenders("""SparkSession\s*\.\s*builder\b""")
+    assert(builders.isEmpty,
+      s"build the session with GraftSession.builder/get/scaleBuilder. Offenders:\n  " +
+        builders.mkString("\n  "))
+    val cpus = offenders("\"SPARK_GRAFT_CPUS\"")
+    assert(cpus.isEmpty,
+      s"take the core count from GraftSession.localCores. Offenders:\n  " +
+        cpus.mkString("\n  "))
   }
 }

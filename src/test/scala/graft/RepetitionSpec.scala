@@ -4,7 +4,7 @@ import graft.operators.TextOps
 
 /** r17: the native RepetitionCounts kernel must reproduce the HOF
   * formulation of repetitionSignals BIT-FOR-BIT (the HOF form is
-  * retained as repetitionSignalsHof purely as this spec's reference).
+  * kept as TextOpsHof.repetitionSignals purely as this spec's reference).
   * Adversarial inputs: empty and 1-token docs (no bigrams — division
   * edges), heavy token/bigram repetition, non-ASCII tokens, multi-space
   * runs, single repeated token.
@@ -32,7 +32,7 @@ class RepetitionSpec extends SparkSpec {
   test("native kernel reproduces the HOF repetitionSignals bit-for-bit") {
     val native = TextOps.repetitionSignals(docs, "doc_id", "text")
       .orderBy("doc_id").collect()
-    val hof = TextOps.repetitionSignalsHof(docs, "doc_id", "text")
+    val hof = TextOpsHof.repetitionSignals(docs, "doc_id", "text")
       .orderBy("doc_id").collect()
     assert(native.length == hof.length)
     native.zip(hof).foreach { case (n, h) =>
