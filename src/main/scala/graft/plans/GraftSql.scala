@@ -1,11 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Dialect front-end: accepts the reference engine's SQL dialect
   * (DuckDB/Postgres-flavored SELECT-only — reference: src/parse, syntax.md)
   * and executes it on Spark by rewriting the handful of constructs Spark
-  * SQL doesn't share, then delegating to `spark.sql`.
+  * SQL doesn't share, then handing the parsed plan to Catalyst.
   *
   * Spark already covers most of the dialect natively (ILIKE,
   * POSITION(x IN y), `::` casts, `||` concat, LIMIT/OFFSET, FILTER
@@ -43,7 +44,7 @@ object GraftSql {
 
   // the rewrite passes live in per-pass modules on the shared SqlTok
   // substrate (plans/rewrite/); this object keeps the ordered pipeline
-  // (rewriteImplUncached is THE one statement of pass order) and the
+  // (rewriteImpl is THE one statement of pass order) and the
   // host API
   import _root_.graft.plans.rewrite.RewriteSupport._
   import _root_.graft.plans.rewrite.SkeletonPasses._
@@ -104,49 +105,7 @@ object GraftSql {
   /** Rewrite one squirreling-dialect statement into Spark SQL. */
   def rewrite(sqlText: String): String = rewriteImpl(sqlText, notInExists = true)
 
-  /** The rewrite is a pure function of its text, and the host-facing
-    * entry points run it twice back-to-back (strictLint's parse for the
-    * duplicate-CTE check, then rewriteChecked) — a small LRU makes the
-    * second pass free without changing any semantics.
-    */
-  private val rewriteMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Boolean), String](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Boolean), String]): Boolean = size > 64
-    })
-
-  private def rewriteChecked(spark: SparkSession, sqlText: String): String = {
-    val full = rewriteImpl(sqlText, notInExists = true)
-    if (!full.contains("__nin")) full
-    else try {
-      spark.sql(full).queryExecution.analyzed
-      full
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        rewriteImpl(sqlText, notInExists = false)
-    }
-  }
-
   private def rewriteImpl(sqlText: String, notInExists: Boolean): String = {
-    // compute OUTSIDE the map's lock: computeIfAbsent would hold the
-    // single monitor for the whole multi-pass rewrite, serializing
-    // concurrent sessions; the rewrite is pure, so a duplicated
-    // computation on a race is harmless. Key on the comment-stripped,
-    // trailing-trimmed text: strictLint rewrites that form while
-    // rewriteChecked passes the original, and both must hit the same
-    // entry (stripComments is the pipeline's own first pass, so this
-    // changes no output).
-    val key = (stripComments(sqlText).stripTrailing(), notInExists)
-    val hit = rewriteMemo.get(key)
-    if (hit != null) hit
-    else {
-      val out = rewriteImplUncached(sqlText, notInExists)
-      rewriteMemo.put(key, out)
-      out
-    }
-  }
-
-  private def rewriteImplUncached(sqlText: String, notInExists: Boolean): String = {
     var s = sqlText
 
     // comments go first — they are whitespace to the engine, and every
@@ -288,8 +247,6 @@ object GraftSql {
     // drops them. Values ride inside a struct (never null) and unwrap
     // after; a trailing FILTER clause folds into the inner aggregate
     // (to_json/transform reject a FILTER suffix).
-    // __nkagg__ marker: the emitted text contains `array_agg(`, which
-    // would re-match the scan and wrap forever (rewriteCall restarts)
     // __nkagg__ marker: the emitted text contains `array_agg(`, which
     // would re-match the scan and wrap forever (rewriteCall restarts).
     // DISTINCT distributes over the struct wrap (distinct structs =
@@ -1048,9 +1005,6 @@ object GraftSql {
   private val renameMap: Map[String, String] =
     renames.map { case (k, v) => k.toUpperCase(java.util.Locale.ROOT) -> v }.toMap
 
-  /** Run a squirreling-dialect query. Tables must already be registered
-    * (e.g. via `graft.sources.Tables.registerAll`).
-    */
   /** Constructs Spark parses but silently misreads, where the reference
     * raises a parse error (reference: test/parse/parse.errors.test.js).
     * Spark's non-reserved keywords absorb them as aliases:
@@ -1069,39 +1023,29 @@ object GraftSql {
   private val aliasBanKw = Set("FROM", "WHERE", "GROUP", "ORDER", "LIMIT",
     "OFFSET", "HAVING", "JOIN", "ON", "UNION", "INTERSECT", "EXCEPT", "SELECT")
 
-  private def strictLint(spark: SparkSession, sqlTextIn: String): Option[String] = {
-    // comments can end a statement and double-quoted identifiers can
-    // contain keyword-shaped text (`SELECT x AS "AS FROM"` is a legal
-    // quoted alias); the token stream classifies both, so the checks
-    // read Word tokens directly — no masking pass needed
-    val unmasked = stripComments(sqlTextIn).stripTrailing()
-    val v = new SqlTok.View(unmasked)
-    val t = v.toks
-    val lastWord = t.reverseIterator.dropWhile(_.kind == SqlTok.Semi)
-      .nextOption().filter(x => x.kind == SqlTok.Word && clauseKw(x.up))
-    lastWord
+  /** The token half of the misparse gate, on comment-free text. */
+  private def tokenLint(text: String): Option[String] = {
+    // double-quoted identifiers can contain keyword-shaped text
+    // (`SELECT x AS "AS FROM"` is a legal quoted alias); the token
+    // stream classifies them, so the checks read Word tokens directly
+    val t = new SqlTok.View(text).toks
+    t.reverseIterator.dropWhile(_.kind == SqlTok.Semi).nextOption()
+      .filter(x => x.kind == SqlTok.Word && clauseKw(x.up))
       .map(w => s"query ends in a dangling ${w.up} clause")
       .orElse(t.indices.collectFirst {
         case k if t(k).is("AS") && k + 1 < t.length &&
             t(k + 1).kind == SqlTok.Word && aliasBanKw(t(k + 1).up) =>
           s"alias cannot be the clause keyword ${t(k + 1).up}"
       })
-      .orElse {
-        // duplicate CTE names (case-insensitive) within one WITH list:
-        // Spark would silently resolve to the last definition
-        import org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith
-        try {
-          val plan = spark.sessionState.sqlParser.parsePlan(rewrite(unmasked))
-          plan.collectFirst {
-            case w: UnresolvedWith
-                if w.cteRelations.map(_._1.toLowerCase(java.util.Locale.ROOT)).distinct.size < w.cteRelations.size =>
-              val dup = w.cteRelations.map(_._1.toLowerCase(java.util.Locale.ROOT))
-                .groupBy(identity).collectFirst { case (n, vs) if vs.size > 1 => n }.get
-              s"duplicate CTE name: $dup"
-          }
-        } catch { case scala.util.control.NonFatal(_) => None } // parse errors surface later
-      }
-      .orElse(setOpTypeGuard(spark, unmasked))
+  }
+
+  /** Duplicate CTE names (case-insensitive) within one WITH list: Spark
+    * would silently resolve to the last definition. */
+  private def duplicateCte(parsed: LogicalPlan): Option[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith
+    parsed.collect { case w: UnresolvedWith => w.cteRelations.map(_._1.toLowerCase(java.util.Locale.ROOT)) }
+      .iterator.flatMap(names => names.diff(names.distinct).headOption)
+      .nextOption().map(dup => s"duplicate CTE name: $dup")
   }
 
   /** Reject set operations whose arms disagree on a column's TYPE
@@ -1120,11 +1064,8 @@ object GraftSql {
     * correlated columns) are skipped — this guard only fires on a
     * PROVEN group mismatch.
     */
-  private def setOpTypeGuard(spark: SparkSession, unmasked: String): Option[String] = {
-    val up = unmasked.toUpperCase(java.util.Locale.ROOT)
-    if (!up.contains("INTERSECT") && !up.contains("EXCEPT") && !up.contains("UNION"))
-      return None
-    import org.apache.spark.sql.catalyst.plans.logical.{Except, Intersect, LogicalPlan, Union}
+  private def setOpTypeGuard(spark: SparkSession, parsed: LogicalPlan): Option[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Except, Intersect, Union}
     import org.apache.spark.sql.types._
     def group(dt: DataType): String = dt match {
       case _: NumericType => "numeric"
@@ -1143,40 +1084,65 @@ object GraftSql {
       a == b || a == "*" || b == "*" ||
         (a.startsWith("array<") && b.startsWith("array<") &&
           (a.contains("<*>") || b.contains("<*>")))
-    try {
-      val parsed = spark.sessionState.sqlParser.parsePlan(rewrite(unmasked))
-      var err: Option[String] = None
-      parsed.foreach {
-        case so if err.isEmpty && (so.isInstanceOf[Union] ||
-            so.isInstanceOf[Intersect] || so.isInstanceOf[Except]) =>
-          val arms = so.children.flatMap(armGroups(_))
-          if (arms.size == so.children.size && arms.nonEmpty) {
-            val head = arms.head
-            for (arm <- arms.tail if err.isEmpty;
-                 i <- head.indices if i < arm.size && err.isEmpty) {
-              if (!compatible(head(i)._2, arm(i)._2))
-                err = Some(
-                  s"heterogeneous set operation: column ${head(i)._1} is " +
-                    s"${head(i)._2} in one arm and ${arm(i)._2} in another — " +
-                    "the reference keys set-op rows by raw JS value (1 and '1' " +
-                    "are distinct), which Spark's unified column types cannot " +
-                    "represent; cast the arms to one type explicitly")
-            }
-          }
-        case _ => ()
-      }
-      err
-    } catch { case scala.util.control.NonFatal(_) => None }
+    def mismatch(so: LogicalPlan): Option[String] = {
+      val arms = so.children.flatMap(armGroups(_))
+      if (arms.size != so.children.size || arms.isEmpty) None
+      else arms.tail.iterator.flatMap(arm => arms.head.zip(arm).collectFirst {
+        case ((name, a), (_, b)) if !compatible(a, b) =>
+          s"heterogeneous set operation: column $name is $a in one arm and " +
+            s"$b in another — the reference keys set-op rows by raw JS value " +
+            "(1 and '1' are distinct), which Spark's unified column types " +
+            "cannot represent; cast the arms to one type explicitly"
+      }).nextOption()
+    }
+    parsed.collect { case so @ (_: Union | _: Intersect | _: Except) => so }
+      .iterator.flatMap(mismatch).nextOption()
   }
 
-  def sql(spark: SparkSession, sqlText: String): DataFrame = {
+  /** A query as [[prepare]] leaves it: the plan as parsed, and the
+    * analyzed DataFrame built from that same plan. */
+  private final case class Prepared(parsed: LogicalPlan, df: DataFrame)
+
+  /** The one path from dialect text to an analyzed plan, shared by every
+    * host entry point. In order: strip comments and run the token lint;
+    * rewrite once; parse once, in the session's conf; run the duplicate-
+    * CTE check and the set-op guard on that parse; analyze that same
+    * plan once. `Left` is the misparse gate's reason for refusing the
+    * text. When the analysis (or parse) of a text carrying the NOT IN →
+    * NOT EXISTS form (`__nin`) fails, the text is rewritten once more
+    * with NOT IN left as written, and that plan is analyzed instead.
+    */
+  private def prepare(spark: SparkSession, sqlText: String): Either[String, Prepared] = {
     ensureHelpers(spark)
-    strictLint(spark, sqlText).foreach(msg =>
-      throw new IllegalArgumentException(s"invalid query: $msg"))
-    val df = spark.sql(rewriteChecked(spark, sqlText))
-    // the dialect's only BinaryType values are geometries (the reference
-    // has no binary type) — render them as GeoJSON text, the reference's
-    // client-visible geometry shape, never the internal codec bytes
+    val text = stripComments(sqlText).stripTrailing()
+    tokenLint(text).toLeft(()).flatMap { _ =>
+      def analyze(parsed: LogicalPlan) = Prepared(parsed, GraftPlanBridge.ofRows(spark, parsed))
+      val rewritten = rewriteImpl(text, notInExists = true)
+      try {
+        val parsed = GraftPlanBridge.parse(spark, rewritten)
+        duplicateCte(parsed).orElse(setOpTypeGuard(spark, parsed)).toLeft(analyze(parsed))
+      } catch {
+        case _: AnalysisException if rewritten.contains("__nin") =>
+          Right(analyze(GraftPlanBridge.parse(spark, rewriteImpl(text, notInExists = false))))
+      }
+    }
+  }
+
+  /** [[prepare]], with a refusal thrown as `IllegalArgumentException`. */
+  private def prepareOrThrow(spark: SparkSession, sqlText: String): Prepared =
+    prepare(spark, sqlText).fold(
+      msg => throw new IllegalArgumentException(s"invalid query: $msg"), identity)
+
+  /** Run a squirreling-dialect query. Tables must already be registered
+    * (e.g. via `graft.sources.Tables.registerAll`).
+    */
+  def sql(spark: SparkSession, sqlText: String): DataFrame =
+    geoJson(prepareOrThrow(spark, sqlText).df)
+
+  // the dialect's only BinaryType values are geometries (the reference
+  // has no binary type) — render them as GeoJSON text, the reference's
+  // client-visible geometry shape, never the internal codec bytes
+  private def geoJson(df: DataFrame): DataFrame =
     if (df.schema.exists(_.dataType == org.apache.spark.sql.types.BinaryType)) {
       val cols = df.schema.fields.toIndexedSeq.map { f =>
         val c = org.apache.spark.sql.functions.col(s"`${f.name}`")
@@ -1187,7 +1153,6 @@ object GraftSql {
       }
       df.select(cols: _*)
     } else df
-  }
 
   /** [[sql]] with the reference's TWO-VALUED null comparison logic
     * (binary.js:32-35: comparisons/AND/OR with a null operand are
@@ -1198,11 +1163,8 @@ object GraftSql {
     * trades scan pushdown on the wrapped predicates for exact
     * reference rows, for the queries where that matters.
     */
-  def sqlStrictNulls(spark: SparkSession, sqlText: String): DataFrame = {
-    val df = sql(spark, sqlText)
-    org.apache.spark.sql.GraftPlanBridge.ofRows(
-      spark, StrictJsNulls(df.queryExecution.analyzed))
-  }
+  def sqlStrictNulls(spark: SparkSession, sqlText: String): DataFrame =
+    GraftPlanBridge.ofRows(spark, StrictJsNulls(sql(spark, sqlText).queryExecution.analyzed))
 
   /** Validate a query without executing it — the reference's
     * parse/validation error surface (reference: src/validation/
@@ -1212,18 +1174,11 @@ object GraftSql {
     * here as `Left(message)`.
     */
   def validate(spark: SparkSession, sqlText: String): Either[String, Unit] =
-    try {
-      ensureHelpers(spark)
-      strictLint(spark, sqlText) match {
-        case Some(msg) => return Left(msg)
-        case None => ()
-      }
-      spark.sql(rewriteChecked(spark, sqlText)).queryExecution.analyzed
-      Right(())
-    } catch {
+    try prepare(spark, sqlText).map(_ => ())
+    catch {
       // ParseException extends AnalysisException, so one case covers
       // both syntax and semantic errors
-      case e: org.apache.spark.sql.AnalysisException => Left(e.getMessage)
+      case e: AnalysisException => Left(e.getMessage)
       // the pre-parse dialect rewrites are regex surgery over untrusted
       // SQL text — any failure there is a validation failure, never a
       // crash of the host-facing surface
@@ -1238,10 +1193,8 @@ object GraftSql {
     * VALUES, single-row aggregates, joins and unions of bounded inputs;
     * an unbounded scan yields None. Analysis only — nothing executes.
     */
-  def maxRows(spark: SparkSession, sqlText: String): Option[Long] = {
-    ensureHelpers(spark)
-    spark.sql(rewriteChecked(spark, sqlText)).queryExecution.analyzed.maxRows
-  }
+  def maxRows(spark: SparkSession, sqlText: String): Option[Long] =
+    prepareOrThrow(spark, sqlText).df.queryExecution.analyzed.maxRows
 
   /** The optimized logical plan as text — the reference's `planSql`
     * surface (hosts introspect the plan BEFORE executing: is the filter
@@ -1250,10 +1203,8 @@ object GraftSql {
     * post-pushdown logical nodes (reference: src/plan/plan.js). Parse +
     * analyze + optimize only — no jobs run.
     */
-  def plan(spark: SparkSession, sqlText: String): String = {
-    ensureHelpers(spark)
-    spark.sql(rewriteChecked(spark, sqlText)).queryExecution.optimizedPlan.treeString.trim
-  }
+  def plan(spark: SparkSession, sqlText: String): String =
+    prepareOrThrow(spark, sqlText).df.queryExecution.optimizedPlan.treeString.trim
 
   /** The physical tables a query reads, first-seen order, CTE names
     * excluded scope-aware (a WITH inside a subquery doesn't shadow the
@@ -1289,7 +1240,8 @@ object GraftSql {
           case _ => ()
         })
     }
-    walk(spark.sessionState.sqlParser.parsePlan(rewrite(sqlText)), Set.empty)
+    // rewrite and parse only: this must work before the tables exist
+    walk(GraftPlanBridge.parse(spark, rewrite(sqlText)), Set.empty)
     out.toSeq
   }
 
@@ -1374,7 +1326,8 @@ object GraftSql {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedStar}
     import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
     import org.apache.spark.sql.catalyst.plans.logical._
-    val df = sql(spark, sqlText)
+    val prep = prepareOrThrow(spark, sqlText)
+    val df = geoJson(prep.df)
     // outermost projection list of the PARSED plan (pre-analysis keeps
     // UnresolvedAlias wrappers that mark "no alias written")
     def outerList(p: LogicalPlan): Option[Seq[NamedExpression]] = p match {
@@ -1390,9 +1343,8 @@ object GraftSql {
     // upper_graft_js_str_city); dialect-only syntax falls back to the
     // rewritten form
     val parsed =
-      try spark.sessionState.sqlParser.parsePlan(sqlText)
-      catch { case scala.util.control.NonFatal(_) =>
-        spark.sessionState.sqlParser.parsePlan(rewrite(sqlText)) }
+      try GraftPlanBridge.parse(spark, sqlText)
+      catch { case scala.util.control.NonFatal(_) => prep.parsed }
     outerList(parsed) match {
       case Some(list) if list.count(_.isInstanceOf[UnresolvedStar]) <= 1 =>
         val width = df.schema.length

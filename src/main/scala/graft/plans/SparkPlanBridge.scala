@@ -2,14 +2,23 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into `Dataset.ofRows` (private[sql]): build a DataFrame from
-  * a LOGICAL PLAN the caller has transformed. Used by GraftSql's
-  * strict-JS-nulls mode, which rewrites the analyzed plan's predicate
-  * expressions — there is no public API that turns a LogicalPlan back
-  * into a DataFrame, and round-tripping through SQL text would lose
-  * the transformation.
+/** Bridge into Spark's private[sql] plan entry points, so GraftSql can
+  * parse a query once and build its DataFrame from that same plan:
+  * `spark.sql` would parse the text again, and there is no public API
+  * that turns a LogicalPlan (parsed, or transformed like the
+  * strict-JS-nulls plan) back into a DataFrame.
   */
 object GraftPlanBridge {
+  private def classicSession(spark: SparkSession): classic.SparkSession =
+    spark.asInstanceOf[classic.SparkSession]
+
+  /** Parse SQL text as `spark.sql` does: with `spark` active, so the
+    * parser reads that session's conf (`doubleQuotedIdentifiers`, ANSI). */
+  def parse(spark: SparkSession, sqlText: String): LogicalPlan = {
+    val session = classicSession(spark)
+    session.withActive(session.sessionState.sqlParser.parsePlan(sqlText))
+  }
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+    classic.Dataset.ofRows(classicSession(spark), plan)
 }

@@ -1073,6 +1073,32 @@ class GraftSqlSpec extends SparkSpec {
       "SELECT a AS \"AS FROM\" FROM lint_t").collect().length == 1)
   }
 
+  test("every host entry point refuses what the misparse gate rejects") {
+    Seq(Tuple1(1L)).toDF("a").createOrReplaceTempView("lint_t")
+    // every surface shares the gate: a plan or row bound for
+    // `lint_t AS WHERE` would silently drop the user's clause
+    val rejected = Seq(
+      "SELECT a FROM lint_t WHERE" -> "dangling WHERE clause",
+      "SELECT a AS FROM lint_t" -> "alias cannot be the clause keyword FROM",
+      "WITH c AS (SELECT 1 AS x), C AS (SELECT 2 AS x) SELECT x FROM c" ->
+        "duplicate CTE name: c",
+      "SELECT 1 INTERSECT SELECT '1'" -> "heterogeneous set operation")
+    val entries = Seq[(String, String => Any)](
+      "sql" -> (GraftSql.sql(spark, _)),
+      "sqlStrictNulls" -> (GraftSql.sqlStrictNulls(spark, _)),
+      "sqlDerived" -> (GraftSql.sqlDerived(spark, _)),
+      "plan" -> (GraftSql.plan(spark, _)),
+      "maxRows" -> (GraftSql.maxRows(spark, _)))
+    for ((text, reason) <- rejected) {
+      val v = GraftSql.validate(spark, text)
+      assert(v.swap.exists(_.contains(reason)), s"validate($text) = $v")
+      for ((entry, run) <- entries) withClue(s"$entry($text): ") {
+        val err = intercept[IllegalArgumentException](run(text))
+        assert(err.getMessage.startsWith("invalid query: ") && err.getMessage.contains(reason))
+      }
+    }
+  }
+
   test("double-quoted identifiers select dotted columns, not string literals") {
     // reference: test/execute/execute.dot.test.js — "user.name" is the
     // COLUMN named user.name, never the nested field and never a string

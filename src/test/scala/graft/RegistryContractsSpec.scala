@@ -21,6 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   *
   * 3. One engine configuration: only [[GraftSession]] builds a session
   *    or reads the core count, so every main runs the conf the specs do.
+  *
+  * 4. One front door: every GraftSql host entry point rewrites, parses
+  *    and analyzes a query once, on `prepare`'s path.
   */
 class RegistryContractsSpec extends SparkSpec {
 
@@ -119,5 +122,28 @@ class RegistryContractsSpec extends SparkSpec {
     assert(cpus.isEmpty,
       s"take the core count from GraftSession.localCores. Offenders:\n  " +
         cpus.mkString("\n  "))
+  }
+
+  test("GraftSql rewrites, parses and analyzes each query on one path") {
+    // source scan: a second spark.sql, parse or rewrite call in a host
+    // entry point would repeat work prepare already did
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/plans/GraftSql.scala"))
+    val members = """(?m)^  (?:private )?def (\w+)""".r.findAllMatchIn(src)
+      .map(m => m.start -> m.group(1)).toSeq
+    // the GraftSql members whose bodies call `call`
+    def callers(call: String): Seq[String] = call.r.findAllMatchIn(src)
+      .map(m => members.takeWhile(_._1 < m.start).last._2).toSeq.distinct.sorted
+    assert(callers("""\bspark\.sql\(""").isEmpty, "spark.sql parses the text again")
+    assert(callers("""parsePlan\(""").isEmpty,
+      "parse with GraftPlanBridge.parse, in the session's conf")
+    // prepare's parse (and its NOT IN fallback), the raw-text parse that
+    // sqlDerived names columns from, and tables, which rewrites and parses only
+    assert(callers("""GraftPlanBridge\.parse\(""") == Seq("prepare", "sqlDerived", "tables"))
+    assert(callers("""(?<!def )\brewriteImpl\(""") == Seq("prepare", "rewrite"))
+    // prepare's one analysis, and sqlStrictNulls' transformed plan
+    assert(callers("""GraftPlanBridge\.ofRows\(""") == Seq("prepare", "sqlStrictNulls"))
+    // the set-op guard's per-arm analyses
+    assert(callers("""executePlan\(""") == Seq("setOpTypeGuard"))
   }
 }
