@@ -149,7 +149,7 @@ object Bpe {
     */
   def bpeTokenCounts(df: DataFrame, idCol: String, textCol: String,
                      ms: Seq[(String, String)] = merges): DataFrame = {
-    val toks = s"filter(split(lower(trim($textCol)), '\\\\s+'), x -> x <> '')"
+    val toks = TextOps.wordsExpr(textCol)
     val words = df
       .select(explode(expr(toks)).as("_w"))
       .distinct()

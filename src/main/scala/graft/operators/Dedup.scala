@@ -26,7 +26,7 @@ object Dedup {
   private def h60(x: String) = s"graft_hash60($x)"
 
   /** Tokens column expression for a text column. */
-  def tokens(textCol: String): Column = expr(s"split(lower(trim($textCol)), '\\\\s+')")
+  def tokens(textCol: String): Column = expr(TextOps.tokensExpr(textCol))
 
   /** `n`-word shingles of a token array column. */
   def shingles(tokensCol: String, n: Int = 3): Column = {
@@ -481,12 +481,8 @@ object Dedup {
     * 64-bit aggregate's lambda and re-ran it once per bit.
     */
   def simhash64(df: DataFrame, textCol: String, out: String = "simhash"): DataFrame =
-    // NB the s-interpolator processes escapes even in triple quotes, so
-    // \\\\ in source reaches Spark's parser as '\\s+' -> regex \s+
-    // ('\\s+' in source would parse as the regex s+ — split on the
-    // LETTER s; pinned by the whitespace-run test in DedupSpec)
     df.withColumn(out, expr(
-        s"""element_at(transform(array(array_distinct(split(lower(trim($textCol)), '\\\\s+'))), dt ->
+        s"""element_at(transform(array(array_distinct(${TextOps.tokensExpr(textCol)})), dt ->
            |  aggregate(sequence(0, 63), CAST(0 AS BIGINT), (acc, b) ->
            |    acc + CASE WHEN aggregate(dt, 0, (a2, w) ->
            |        a2 + CASE WHEN shiftright(${h60("w")}, b % 60) & 1 = 1 THEN 1 ELSE -1 END) >= 0

@@ -317,7 +317,7 @@ object Sampling {
   def dsirWeights(df: DataFrame, idCol: String, textCol: String,
                   targetExpr: String, buckets: Int = 128): DataFrame = {
     require(buckets >= 2, "need at least 2 feature buckets")
-    val tk = s"filter(split(lower(trim($textCol)), '\\\\s+'), x -> x <> '')"
+    val tk = TextOps.wordsExpr(textCol)
     // tk bound as a lambda variable (the TextOps.gopherSignals rule):
     // as a column alias the per-element element_at references re-ran
     // the whole split after project collapse — quadratic in doc length

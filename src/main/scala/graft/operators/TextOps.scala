@@ -16,7 +16,14 @@ object TextOps {
     "fr" -> Seq("le", "la", "les", "et", "est", "dans", "pour", "une"),
     "zh" -> Seq("的", "是", "不", "了", "在", "我", "有", "和"))
 
+  // the s-interpolator processes escapes, so \\\\ in source reaches
+  // Spark's parser as '\\s+' -> regex \s+ ('\\s+' in source would parse
+  // as the regex s+ — split on the LETTER s; pinned by the whitespace-run
+  // test in DedupSpec)
   private[graft] def tokensExpr(textCol: String) = s"split(lower(trim($textCol)), '\\\\s+')"
+
+  /** [[tokensExpr]] without the empty tokens a blank text splits into. */
+  private[graft] def wordsExpr(textCol: String) = s"filter(${tokensExpr(textCol)}, x -> x <> '')"
 
   /** Stopword-vote language ID; adds `s_<lang>` scores and `predicted`. */
   def languageId(df: DataFrame, textCol: String): DataFrame = {
@@ -144,7 +151,7 @@ object TextOps {
     require(maxTokens >= 1, "maxTokens must be >= 1")
     counter match {
       case None =>
-        df.withColumn("_tk", expr(s"filter(${tokensExpr(textCol)}, x -> x <> '')"))
+        df.withColumn("_tk", expr(wordsExpr(textCol)))
           .withColumn(out, expr(s"array_join(slice(_tk, 1, $maxTokens), ' ')"))
           .withColumn("n_tokens_kept",
             expr(s"CAST(least(size(_tk), $maxTokens) AS BIGINT)"))
@@ -170,7 +177,7 @@ object TextOps {
             "THEN named_struct('cum', s.cum, 'k', s.k, 'stop', true) " +
             "ELSE named_struct('cum', s.cum + element_at(c, i), 'k', s.k + 1, 'stop', false) END)"
         val sig =
-          s"element_at(transform(array(filter(${tokensExpr(textCol)}, x -> x <> '')), tk -> " +
+          s"element_at(transform(array(${wordsExpr(textCol)}), tk -> " +
             s"element_at(transform(array(${cn("tk")}), c -> " +
             s"element_at(transform(array($cut), cut -> named_struct(" +
             "'txt', array_join(slice(tk, 1, cut.k), ' '), " +
@@ -217,7 +224,7 @@ object TextOps {
          |  END,
          |  s -> s.chs)""".stripMargin
     df.withColumn("_chs", expr(
-        s"element_at(transform(array(filter(${tokensExpr(textCol)}, x -> x <> '')), tk -> " +
+        s"element_at(transform(array(${wordsExpr(textCol)}), tk -> " +
           s"element_at(transform(array(${counter("tk")}), c -> " +
           s"$walk), 1)), 1)"))
       .select(col("*"), posexplode(col("_chs")).as(Seq("chunk_id", "_ch")))
@@ -241,7 +248,7 @@ object TextOps {
     */
   def bigramModel(df: DataFrame, textCol: String): DataFrame = {
     val pairs = df
-      .withColumn("_tk", expr(s"filter(${tokensExpr(textCol)}, x -> x <> '')"))
+      .withColumn("_tk", expr(wordsExpr(textCol)))
       .select(explode(expr(
         // try_element_at: the final token has no successor (NULL, filtered)
         "filter(transform(_tk, (x, i) -> named_struct('w1', x, 'w2', try_element_at(_tk, i + 2))), s -> s.w2 IS NOT NULL)"))
@@ -277,7 +284,7 @@ object TextOps {
   def surprisal(df: DataFrame, idCol: String, textCol: String,
                 model: DataFrame): DataFrame = {
     val occ = df
-      .withColumn("_tk", expr(s"filter(${tokensExpr(textCol)}, x -> x <> '')"))
+      .withColumn("_tk", expr(wordsExpr(textCol)))
       .select(col(idCol), explode(expr(
         "filter(transform(_tk, (x, i) -> named_struct('w1', x, 'w2', try_element_at(_tk, i + 2))), s -> s.w2 IS NOT NULL)"))
         .as("bg"))
@@ -310,7 +317,7 @@ object TextOps {
            terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     val dl = df.select(col(idCol),
-      expr(s"size(filter(${tokensExpr(textCol)}, x -> x <> ''))").as("dl"))
+      expr(s"size(${wordsExpr(textCol)})").as("dl"))
     val toks = df.select(col(idCol), explode(expr(tokensExpr(textCol))).as("term"))
     val termList = terms.map(t => "'" + t.replace("'", "''") + "'").mkString(", ")
     val tf = toks.filter(expr(s"term IN ($termList)"))
@@ -770,7 +777,7 @@ object TextOps {
     require(w >= 2, "window must span at least 2 tokens")
     require(minDocs >= 2, "a repeat needs at least 2 docs")
     val pairs0 = df
-      .withColumn("_tk", expr(s"filter(${tokensExpr(textCol)}, x -> x <> '')"))
+      .withColumn("_tk", expr(wordsExpr(textCol)))
       // sequence(1, 0) would generate DESCENDING [1, 0] — guard short docs
       .withColumn("win", explode(expr(
         s"IF(size(_tk) >= $w, " +
@@ -870,7 +877,7 @@ object TextOps {
     */
   private def spanTokenArrays(df: DataFrame, idCol: String, textCol: String,
                               k: Int): DataFrame =
-    df.withColumn("_tk", expr(s"filter(${tokensExpr(textCol)}, x -> x <> '')"))
+    df.withColumn("_tk", expr(wordsExpr(textCol)))
       .filter(expr(s"size(_tk) >= $k"))
       .select(col(idCol), col("_tk"))
 

@@ -34,6 +34,12 @@ object TopK {
   /** Global top-k rows per key with a 1-based rank column `rankCol`
     * assigned in `orderCols` order (ties must be broken by `orderCols`
     * for a deterministic result).
+    *
+    * Throws `IllegalArgumentException` unless 0 < k ≤
+    * `spark.sql.optimizer.windowGroupLimitThreshold`. That precondition
+    * assumes Spark ≥ 3.5, where the conf and the rank-limit pushdown
+    * exist; on an older Spark the conf is absent, its default of 1000
+    * passes the check, and the pushdown never fires.
     */
   def perKey(df: DataFrame, keyCols: Seq[String], orderCols: Seq[Column], k: Int,
              rankCol: String = "rnk"): DataFrame = {

@@ -45,7 +45,11 @@ object GraftSql {
   // the rewrite passes live in per-pass modules on the shared SqlTok
   // substrate (plans/rewrite/); this object keeps the ordered pipeline
   // (rewriteImpl is THE one statement of pass order) and the
-  // host API
+  // host API. Each call-rewrite pass (rewriteCall/rewriteAggFilter)
+  // rewrites every site once, arguments first, never its own output, so
+  // a builder emits its target name directly; a pass sees only what
+  // EARLIER passes emitted, and that ordering is what the comments on
+  // the passes below pin.
   import _root_.graft.plans.rewrite.RewriteSupport._
   import _root_.graft.plans.rewrite.SkeletonPasses._
   import _root_.graft.plans.rewrite.JsCoercionPasses._
@@ -247,8 +251,6 @@ object GraftSql {
     // drops them. Values ride inside a struct (never null) and unwrap
     // after; a trailing FILTER clause folds into the inner aggregate
     // (to_json/transform reject a FILTER suffix).
-    // __nkagg__ marker: the emitted text contains `array_agg(`, which
-    // would re-match the scan and wrap forever (rewriteCall restarts).
     // DISTINCT distributes over the struct wrap (distinct structs =
     // distinct values, nulls kept).
     def nullKeepAgg(arg: String, filt: Option[String]): String = {
@@ -257,22 +259,30 @@ object GraftSql {
         case dist(e) => ("DISTINCT ", e.trim)
         case e => ("", e)
       }
-      s"transform(__nkagg__(${kw}struct(($x) AS __v))${filt.map(" FILTER " + _).getOrElse("")}, s -> s.__v)"
+      s"transform(array_agg(${kw}struct(($x) AS __v))${filt.map(" FILTER " + _).getOrElse("")}, s -> s.__v)"
     }
+    for ((f, sparkName) <- Seq("array_agg" -> "array_agg", "list" -> "collect_list"))
+      s = rewriteAggFilter(s, f, (args, filt) =>
+        if (args.length == 1) nullKeepAgg(args.head, filt)
+        else s"$sparkName(${args.mkString(", ")})${filt.map(" FILTER " + _).getOrElse("")}")
+    // after the array_agg pass, which would otherwise wrap the
+    // array_agg this one emits
     for (f <- Seq("json_group_array", "json_arrayagg"))
       s = rewriteAggFilter(s, f, (args, filt) =>
         s"to_json(${nullKeepAgg(args.mkString(", "), filt)})")
-    for (f <- Seq("array_agg", "list"))
-      s = rewriteAggFilter(s, f, (args, filt) =>
-        if (args.length == 1) nullKeepAgg(args.head, filt)
-        else s"__agg_${f}__(${args.mkString(", ")})${filt.map(" FILTER " + _).getOrElse("")}")
-    s = s.replace("__agg_array_agg__(", "array_agg(")
-    s = s.replace("__agg_list__(", "collect_list(")
-    s = s.replace("__nkagg__(", "array_agg(")
     s = rewriteCall(s, "json_group_object", args =>
       if (args.length == 2)
         s"to_json(map_from_arrays(collect_list(${args(0)}), collect_list(${args(1)})))"
       else s"json_group_object_unsupported(${args.mkString(", ")})")
+
+    // TYPEOF → DuckDB-style names over Spark typeof (the doubled
+    // upper(typeof(..)) is free — typeof is foldable, so Catalyst
+    // constant-folds it at analysis time). Runs before the cast, JSON
+    // and octet passes, whose type guards emit Spark typeof unrenamed.
+    s = rewriteCall(s, "typeof", args => {
+      val t = s"upper(typeof(${args.mkString(", ")}))"
+      s"(CASE $t WHEN 'STRING' THEN 'VARCHAR' WHEN 'INT' THEN 'INTEGER' ELSE $t END)"
+    })
 
     // Lenient NUMERIC casts (reference: src/expression/evaluate.js:711-726
     // — Number(val) with NaN → null, Math.trunc for integer targets, a
@@ -283,6 +293,15 @@ object GraftSql {
     // (the bigint shortcut), truncation-through-double for numeric
     // strings (including the reference's inherent >2^53 precision loss),
     // null for garbage. Non-numeric targets keep ANSI semantics.
+    def lenientNum(e: String, tgt: String): String = {
+      // JS Number('') = 0 — a blank string casts to ZERO, not null
+      val blankZero = s"CASE WHEN trim(($e)) = '' THEN try_cast(0 AS $tgt) END"
+      if (tgt == "DOUBLE" || tgt == "FLOAT" || tgt == "REAL")
+        s"coalesce(try_cast(($e) AS $tgt), $blankZero)"
+      else
+        s"coalesce(try_cast(($e) AS $tgt), " +
+          s"try_cast(try_cast(($e) AS DOUBLE) AS $tgt), $blankZero)"
+    }
     s = rewriteCall(s, "cast", args =>
       if (args.length == 1) {
         val m = raw"(?is)^(.*\S)\s+AS\s+(INTEGER|INT|BIGINT|SMALLINT|TINYINT|FLOAT|REAL|DOUBLE)\s*$$".r
@@ -295,33 +314,22 @@ object GraftSql {
           // error, for unparseable text (execute.cast tests). typeof
           // dispatches so an already-typed timestamp/date stays exact.
           case mt(e) =>
-            s"(CASE WHEN __typeofkeep__(($e)) IN ('timestamp', 'date') " +
+            s"(CASE WHEN typeof(($e)) IN ('timestamp', 'date') " +
               s"THEN try_cast(($e) AS TIMESTAMP) " +
               s"WHEN try_cast(($e) AS BIGINT) IS NOT NULL " +
               s"THEN timestamp_millis(try_cast(($e) AS BIGINT)) " +
               s"WHEN try_cast(($e) AS DOUBLE) IS NOT NULL " +
-              s"THEN timestamp_millis(CAST(try_cast(($e) AS DOUBLE) AS BIGINT)) " +
+              s"THEN timestamp_millis(${lenientNum(s"try_cast(($e) AS DOUBLE)", "BIGINT")}) " +
               s"ELSE try_cast(($e) AS TIMESTAMP) END)"
           // string targets render JS-style: String(2.0) = '2', not
           // '2.0' — and objects/Dates via JSON.stringify (cast mode:
           // CAST([1,2] AS VARCHAR) = '[1,2]', a Date casts to the
           // QUOTED ISO form; evaluate.js:703-706)
           case ms(e, _) => s"graft_js_cast_str(($e))"
-          case m(e, t) =>
-            val tgt = t.toUpperCase(java.util.Locale.ROOT)
-            // JS Number('') = 0 — a blank string casts to ZERO, not null
-            val blankZero = s"CASE WHEN trim(($e)) = '' THEN try_cast(0 AS $tgt) END"
-            if (tgt == "DOUBLE" || tgt == "FLOAT" || tgt == "REAL")
-              s"coalesce(try_cast(($e) AS $tgt), $blankZero)"
-            else
-              s"coalesce(try_cast(($e) AS $tgt), " +
-                s"try_cast(try_cast(($e) AS DOUBLE) AS $tgt), $blankZero)"
-          // __cast__ marker: emitting `cast(` verbatim would re-match the
-          // scan pattern forever (same trick as __position__ below)
-          case other => s"__cast__($other)"
+          case m(e, t) => lenientNum(e, t.toUpperCase(java.util.Locale.ROOT))
+          case other => s"cast($other)"
         }
-      } else s"__cast__(${args.mkString(", ")})")
-    s = s.replace("__cast__(", "cast(")
+      } else s"cast(${args.mkString(", ")})")
 
     // CONCAT / STRING_AGG stringify their arguments with JS String(v)
     // (strings.js CONCAT, evaluate.js:371 STRING_AGG): doubles render
@@ -329,20 +337,16 @@ object GraftSql {
     // string-typed listagg would reject. Wrapping in graft_js_str fixes
     // both (no-op on strings, null-propagating). Runs BEFORE renames so
     // array_concat/list_concat → concat stays untouched array concat.
-    // __concat__/__agg__ markers: the replacements contain the scanned
-    // names (same trick as __position__).
     s = rewriteCall(s, "concat", args =>
-      s"__concat__(${args.map(a => s"graft_js_str($a)").mkString(", ")})")
-    s = s.replace("__concat__(", "concat(")
+      s"concat(${args.map(a => s"graft_js_str($a)").mkString(", ")})")
     s = rewriteCall(s, "string_agg", args =>
       if (args.length == 2) {
         val dist = raw"(?is)^DISTINCT\s+(.*)$$".r
         args(0) match {
-          case dist(e) => s"__stragg__(DISTINCT graft_js_str($e), ${args(1)})"
-          case e => s"__stragg__(graft_js_str($e), ${args(1)})"
+          case dist(e) => s"string_agg(DISTINCT graft_js_str($e), ${args(1)})"
+          case e => s"string_agg(graft_js_str($e), ${args(1)})"
         }
-      } else s"__stragg__(${args.mkString(", ")})")
-    s = s.replace("__stragg__(", "string_agg(")
+      } else s"string_agg(${args.mkString(", ")})")
 
     // JSON inspection family (reference: src/expression/evaluate.js:502-700).
     // JSON_VALID parse-checks a string with WHOLE-INPUT strictness:
@@ -372,8 +376,7 @@ object GraftSql {
     s = rewriteCall(s, "json_keys", args =>
       s"json_object_keys(graft_json_input(${args.mkString(", ")}))")
     s = rewriteCall(s, "json_array_length", args =>
-      s"__jal__(graft_json_input(${args.mkString(", ")}))")
-    s = s.replace("__jal__(", "json_array_length(")
+      s"json_array_length(graft_json_input(${args.mkString(", ")}))")
     // JSON_OBJECT(k1, v1, ...): keep null-valued fields ({"k":null}),
     // as the reference's JSON.stringify does. Literal keys (incl.
     // numeric — JS object keys stringify) go through named_struct;
@@ -420,13 +423,11 @@ object GraftSql {
     // renames to octet_length only at the very end, so it gets the same
     // guard under its own name here.
     s = rewriteCall(s, "octet_length", args =>
-      if (args.length == 1) s"__olen__(${octetStrict(args.head)})"
-      else s"__olen__(${args.mkString(", ")})")
-    s = s.replace("__olen__(", "octet_length(")
+      if (args.length == 1) s"octet_length(${octetStrict(args.head)})"
+      else s"octet_length(${args.mkString(", ")})")
     s = rewriteCall(s, "strlen", args =>
-      if (args.length == 1) s"__strlen__(${octetStrict(args.head)})"
-      else s"__strlen__(${args.mkString(", ")})")
-    s = s.replace("__strlen__(", "strlen(")
+      if (args.length == 1) s"strlen(${octetStrict(args.head)})"
+      else s"strlen(${args.mkString(", ")})")
 
     // regexp_split_to_table(x, p) → explode(split(x, p))
     s = rewriteCall(s, "regexp_split_to_table", args =>
@@ -440,8 +441,7 @@ object GraftSql {
     // whose IN-form semantics already agree.
     s = rewriteCall(s, "position", args =>
       if (args.length == 2) s"instr(${args(0)}, ${args(1)})"
-      else s"__position__(${args.mkString(", ")})")
-    s = s.replace("__position__(", "position(")
+      else s"position(${args.mkString(", ")})")
 
     // ARRAY_LENGTH(arr[, dim]): Spark has no array_length; graft_size
     // covers the 1-dimensional form, graft_size_dim the reference's
@@ -459,8 +459,7 @@ object GraftSql {
     // arrays at analysis. OCTET_LENGTH stays strict (string-only).
     s = rewriteCall(s, "length", args =>
       if (args.length == 1) s"graft_length(${args.head})"
-      else s"__len__(${args.mkString(", ")})")
-    s = s.replace("__len__(", "length(")
+      else s"length(${args.mkString(", ")})")
 
     // ARRAY_POSITION / LIST_POSITION return NULL when absent in the
     // reference (src/expression/evaluate.js:597-601, indexOf+1 with -1
@@ -494,8 +493,7 @@ object GraftSql {
         val mult = s"power(10, coalesce(${args(1)}, 0))"
         s"(${jsRound(s"((${args(0)}) * $mult)")} / $mult)"
       } else if (args.length == 1) jsRound(s"(${args(0)})")
-      else s"__round__(${args.mkString(", ")})")
-    s = s.replace("__round__(", "round(")
+      else s"round(${args.mkString(", ")})")
 
     // PERCENTILE_CONT(fraction, expr): reference argument order
     // (src/validation/functions.js PERCENTILE_CONT) with exact linear
@@ -505,12 +503,10 @@ object GraftSql {
     // src/expression/evaluate.js:314-350), so it maps to percentile too.
     s = rewriteCall(s, "percentile_cont", args =>
       if (args.length == 2) s"percentile(${args(1)}, ${args(0)})"
-      else s"__pcont__(${args.mkString(", ")})")
-    s = s.replace("__pcont__(", "percentile_cont(")
+      else s"percentile_cont(${args.mkString(", ")})")
     s = rewriteCall(s, "approx_quantile", args =>
       if (args.length == 2) s"percentile(${args(0)}, ${args(1)})"
-      else s"__aq__(${args.mkString(", ")})")
-    s = s.replace("__aq__(", "approx_quantile(")
+      else s"approx_quantile(${args.mkString(", ")})")
 
     // SUM/AVG fold JS `Number(value)` and keep only FINITE results
     // (src/execute/accumulator.js:60-67): a string column accumulates
@@ -519,7 +515,7 @@ object GraftSql {
     // that coercion for string/boolean children and is identity on
     // numeric ones, where StripIdentityJsNum removes it at optimization
     // time — typed columns keep native codegen'd aggregation.
-    for (f <- Seq("sum", "avg")) {
+    for (f <- Seq("sum", "avg"))
       s = rewriteCall(s, f, args =>
         // SUM(*)/AVG(*) must stay invalid on both engines — wrapping
         // would let Spark's star expansion accept what the reference's
@@ -533,10 +529,8 @@ object GraftSql {
             case quant(q, rest) => (q + " ", rest)
             case _ => ("", a)
           }
-          s"__${f}agg__(${pre}graft_js_num($core))"
-        } else s"__${f}agg__(${args.mkString(", ")})")
-      s = s.replace(s"__${f}agg__(", s"$f(")
-    }
+          s"$f(${pre}graft_js_num($core))"
+        } else s"$f(${args.mkString(", ")})")
 
     // list_slice(l, a, b) [1-based inclusive ends] → slice(l, a, b - a + 1)
     s = rewriteCall(s, "list_slice", args =>
@@ -544,24 +538,10 @@ object GraftSql {
         s"slice(${args(0)}, ${args(1)}, (${args(2)}) - (${args(1)}) + 1)"
       else s"list_slice_unsupported(${args.mkString(", ")})")
 
-    // TYPEOF → DuckDB-style names over Spark typeof (placeholder avoids
-    // rescanning our own output; the doubled upper(typeof(..)) is free —
-    // typeof is foldable, so Catalyst constant-folds it at analysis time)
-    s = rewriteCall(s, "typeof", args => {
-      val t = s"upper(__typeof__(${args.mkString(", ")}))"
-      s"(CASE $t WHEN 'STRING' THEN 'VARCHAR' WHEN 'INT' THEN 'INTEGER' ELSE $t END)"
-    })
-    s = s.replace("__typeof__(", "typeof(")
-    // typeof emitted by the lenient TIMESTAMP cast above — kept out of
-    // the user-facing TYPEOF rename (which maps to DuckDB-style names)
-    s = s.replace("__typeofkeep__(", "typeof(")
-
     // DAYOFWEEK / WEEKDAY: reference maps both to date_part('dow') —
     // Sunday=0 (syntax.md item 13); Spark's dayofweek is Sunday=1
-    // (placeholder avoids rescanning our own output)
     for (f <- Seq("dayofweek", "weekday"))
-      s = rewriteCall(s, f, args => s"(__dow__(${args.mkString(", ")}) - 1)")
-    s = s.replace("__dow__(", "dayofweek(")
+      s = rewriteCall(s, f, args => s"(dayofweek(${args.mkString(", ")}) - 1)")
 
     // DATE_PART('dow', x) / EXTRACT(DOW FROM x) themselves: Spark's DOW
     // field is Sunday=1..Saturday=7, the reference's (and DuckDB's) is
@@ -570,9 +550,10 @@ object GraftSql {
     // above already fixed
     s = rewriteCall(s, "date_part", args =>
       if (args.length == 2 && args(0).trim.toLowerCase(java.util.Locale.ROOT).matches("'dow'"))
-        s"(__dow__(${args(1)}) - 1)"
-      else s"__dpart__(${args.mkString(", ")})")
-    s = s.replace("__dpart__(", "date_part(")
+        s"(dayofweek(${args(1)}) - 1)"
+      else s"date_part(${args.mkString(", ")})")
+    // `EXTRACT ( DOW FROM` collapses to a marker call head, so the call
+    // walker finds the remaining argument's close paren
     s = tokenEdit(s) { v =>
       val t = v.toks
       t.indices.collect {
@@ -580,8 +561,7 @@ object GraftSql {
           (t(k).start, t(k + 3).end, "__exdow__(")
       }
     }
-    s = rewriteCall(s, "__exdow__", args => s"(__dow__(${args.mkString(", ")}) - 1)")
-    s = s.replace("__dow__(", "dayofweek(")
+    s = rewriteCall(s, "__exdow__", args => s"(dayofweek(${args.mkString(", ")}) - 1)")
 
     // LIKE is CASE-INSENSITIVE in the reference dialect — its evaluator
     // compiles the pattern with the `i` regex flag (reference:
@@ -694,9 +674,8 @@ object GraftSql {
 
     // regexp_replace(..., 'g'): Spark replaces globally by default
     s = rewriteCall(s, "regexp_replace", args =>
-      s"__rgflag__(${(if (args.nonEmpty &&
+      s"regexp_replace(${(if (args.nonEmpty &&
         args.last.equalsIgnoreCase("'g'")) args.init else args).mkString(", ")})")
-    s = s.replace("__rgflag__(", "regexp_replace(")
 
     // DuckDB SELECT * EXCLUDE (...) → Spark SELECT * EXCEPT (...)
     s = tokenEdit(s) { v =>
@@ -727,20 +706,20 @@ object GraftSql {
         s = rewriteCall(s, f, args =>
           if (args.length == 2 && intLit(args(1)).exists(_ < 0))
             bad(f.toUpperCase(java.util.Locale.ROOT), "length must be a non-negative integer", args(1))
-          else s"__argchk_${f}__(${args.mkString(", ")})")
+          else s"$f(${args.mkString(", ")})")
       for (f <- Seq("regexp_extract", "regexp_substr"))
         s = rewriteCall(s, f, args =>
           if (args.length >= 3 && intLit(args(2)).exists(_ < 1))
             bad(f.toUpperCase(java.util.Locale.ROOT), "position must be a positive integer", args(2))
           else if (args.length == 4 && intLit(args(3)).exists(_ < 1))
             bad(f.toUpperCase(java.util.Locale.ROOT), "occurrence must be a positive integer", args(3))
-          else s"__argchk_${f}__(${args.mkString(", ")})")
+          else s"$f(${args.mkString(", ")})")
       s = rewriteCall(s, "regexp_replace", args =>
         if (args.length >= 4 && intLit(args(3)).exists(_ < 1))
           bad("REGEXP_REPLACE", "position must be a positive integer", args(3))
         else if (args.length == 5 && intLit(args(4)).exists(_ < 0))
           bad("REGEXP_REPLACE", "occurrence must be a non-negative integer", args(4))
-        else s"__argchk_regexp_replace__(${args.mkString(", ")})")
+        else s"regexp_replace(${args.mkString(", ")})")
       // SUBSTRING start/length guards (strings.js:118-127: start must be
       // a positive 1-based integer, length non-negative) — round-13
       // replay-corner closure, same literal-only contract as the rest
@@ -750,10 +729,7 @@ object GraftSql {
             bad(f.toUpperCase(java.util.Locale.ROOT), "start position must be a positive integer", args(1))
           else if (args.length == 3 && intLit(args(2)).exists(_ < 0))
             bad(f.toUpperCase(java.util.Locale.ROOT), "length must be a non-negative integer", args(2))
-          else s"__argchk_${f}__(${args.mkString(", ")})")
-      for (f <- Seq("left", "right", "regexp_extract", "regexp_substr",
-          "regexp_replace", "substring", "substr"))
-        s = s.replace(s"__argchk_${f}__(", f + "(")
+          else s"$f(${args.mkString(", ")})")
     }
 
 
@@ -769,14 +745,12 @@ object GraftSql {
     // the regexp fuzz battery.
     for (f <- Seq("regexp_extract", "regexp_substr"))
       s = rewriteCall(s, f, args =>
-        if (args.length == 2) s"__rsub__(${args(0)}, ${args(1)})"
+        if (args.length == 2) s"regexp_substr(${args(0)}, ${args(1)})"
         else if (args.length == 3)
           s"try_element_at(regexp_extract_all(substring(${args(0)}, CAST(${args(2)} AS INT)), ${args(1)}, 0), 1)"
         else if (args.length == 4)
           s"try_element_at(regexp_extract_all(substring(${args(0)}, CAST(${args(2)} AS INT)), ${args(1)}, 0), CAST(${args(3)} AS INT))"
-        else s"__rext_bad__(${args.mkString(", ")})")
-    s = s.replace("__rsub__(", "regexp_substr(")
-    s = s.replace("__rext_bad__(", "regexp_extract(")
+        else s"regexp_extract(${args.mkString(", ")})")
 
     // REGEXP_REPLACE: both engines replace ALL by default and share the
     // prefix-preserving 4-arg position form; the reference's 5-arg form
@@ -786,16 +760,14 @@ object GraftSql {
       if (args.length == 5)
         s"graft_regexp_replace_occ(${args(0)}, ${args(1)}, ${args(2)}, " +
           s"CAST(${args(3)} AS INT), CAST(${args(4)} AS INT))"
-      else s"__rrep__(${args.mkString(", ")})")
-    s = s.replace("__rrep__(", "regexp_replace(")
+      else s"regexp_replace(${args.mkString(", ")})")
 
     // regexp_matches(x, p) → x RLIKE p — paren-aware (the old regex
     // form mangled nested calls like regexp_matches(try_element_at(...))
     // — found by the regexp fuzz battery)
     s = rewriteCall(s, "regexp_matches", args =>
       if (args.length == 2) s"((${args(0)}) RLIKE ${args(1)})"
-      else s"__rmatch__(${args.mkString(", ")})")
-    s = s.replace("__rmatch__(", "regexp_matches(")
+      else s"regexp_matches(${args.mkString(", ")})")
 
     // STRING_SPLIT's delimiter is a LITERAL in the reference (and in
     // DuckDB) — indexOf, not a pattern (src/expression/strings.js:165);
@@ -828,8 +800,7 @@ object GraftSql {
       if (args.length == 3 && args(1).trim == "''")
         s"(CASE WHEN CAST(${args(2)} AS INT) IN (1, -1) " +
           s"THEN graft_js_str(${args(0)}) ELSE '' END)"
-      else s"__spart__(${args.mkString(", ")})")
-    s = s.replace("__spart__(", "split_part(")
+      else s"split_part(${args.mkString(", ")})")
 
     // TRIM is JS String.prototype.trim (strings.js:103): Unicode
     // whitespace including \t \n NBSP FEFF — Spark's trim strips only
@@ -838,8 +809,7 @@ object GraftSql {
     s = rewriteCall(s, "trim", args =>
       if (args.length == 1 && raw"(?i)\bFROM\b".r.findFirstIn(args.head).isEmpty)
         s"graft_js_trim(graft_js_str(${args.head}))"
-      else s"__trim__(${args.mkString(", ")})")
-    s = s.replace("__trim__(", "trim(")
+      else s"trim(${args.mkString(", ")})")
 
     // GREATEST/LEAST accept a single argument in the reference
     // (evaluate.js:434 — reduces over whatever it gets); Spark requires
@@ -848,13 +818,10 @@ object GraftSql {
     for (f <- Seq("greatest", "least"))
       s = rewriteCall(s, f, args =>
         if (args.length == 1) s"(${args.head})"
-        else s"__1arg_${f}__(${args.mkString(", ")})")
-    s = s.replace("__1arg_greatest__(", "greatest(")
-    s = s.replace("__1arg_least__(", "least(")
+        else s"$f(${args.mkString(", ")})")
     s = rewriteCall(s, "atan", args =>
       if (args.length == 2) s"atan2(${args.mkString(", ")})"
-      else s"__atan__(${args.mkString(", ")})")
-    s = s.replace("__atan__(", "atan(")
+      else s"atan(${args.mkString(", ")})")
 
     // Every string function coerces its text arguments with JS
     // String(v) (strings.js:66 `const str = String(val)`, :112
@@ -867,7 +834,7 @@ object GraftSql {
     // non-strings, strings.js:38-56) — deliberately not wrapped.
     // Placed AFTER the rewrites that generate these names (position →
     // instr, string_split → split); strpos is wrapped here pre-rename
-    // (renames run last). Markers dodge rewriteCall's rescan.
+    // (renames run last).
     locally {
       val wraps: Seq[(String, Seq[String] => Seq[Int])] = Seq(
         "upper" -> (a => if (a.length == 1) Seq(0) else Nil),
@@ -884,15 +851,13 @@ object GraftSql {
         "split" -> (a => if (a.length == 2) Seq(0) else Nil),
         "instr" -> (a => if (a.length == 2) Seq(0, 1) else Nil),
         "strpos" -> (a => if (a.length == 2) Seq(0, 1) else Nil))
-      for ((f, pick) <- wraps) {
+      for ((f, pick) <- wraps)
         s = rewriteCall(s, f, args => {
           val idx = pick(args).toSet
           val out = args.zipWithIndex.map { case (a, i) =>
             if (idx(i)) s"graft_js_str($a)" else a }
-          s"__jsw_${f}__(${out.mkString(", ")})"
+          s"$f(${out.mkString(", ")})"
         })
-        s = s.replace(s"__jsw_${f}__(", f + "(")
-      }
     }
 
     // `a || b` and ILIKE operands coerce the same way (binary.js:27-30
@@ -906,9 +871,8 @@ object GraftSql {
     for (f <- Seq("unnest", "explode"))
       s = rewriteCall(s, f, args =>
         if (args.length == 1 && args.head.trim.equalsIgnoreCase("null"))
-          "__unn__(array())"
-        else s"__unn__(${args.mkString(", ")})")
-    s = s.replace("__unn__(", "explode(")
+          "explode(array())"
+        else s"explode(${args.mkString(", ")})")
 
     // LEAD/LAG offsets run through JS Number(v) in the reference: a
     // QUOTED numeric offset works like the bare number ('' is 0), a
@@ -937,9 +901,8 @@ object GraftSql {
               off.map(o => args.updated(1, o)).getOrElse(args)
             case _ => args
           }
-        s"__woff_${f}__(${fixed.mkString(", ")})"
+        s"$f(${fixed.mkString(", ")})"
       })
-      s = s.replace(s"__woff_${f}__(", f + "(")
     }
 
     // Ranking/offset window functions REQUIRE an ORDER BY in Spark; the

@@ -2,9 +2,11 @@ package graft.plans
 package rewrite
 
 /** Shared substrate of the GraftSql rewrite pipeline: the call-site
-  * scanner ([[rewriteCall]]/[[callSite]]), token-edit splicing, the
-  * strict-type raise helpers, the higher-order-function context guard,
-  * and the small keyword/regex tables more than one pass consumes.
+  * walker ([[rewriteCall]]/[[rewriteAggFilter]] — each pass rewrites
+  * every site once, arguments first, never its own output), token-edit
+  * splicing, the strict-type raise helpers, the higher-order-function
+  * context guard, and the small keyword/regex tables more than one pass
+  * consumes.
   * Every pass module imports this; ALL quote/paren/comment
   * classification stays in [[graft.plans.SqlTok]].
   */
@@ -38,13 +40,9 @@ private[plans] object RewriteSupport {
   // TYPE dispatch, not per-row data validation: a dirty CELL in a
   // string column stays lenient. (LENGTH itself gets the same
   // strictness inside LengthAny.)
-  // __typeofkeep__ marker, not bare typeof: these guards are emitted
-  // BEFORE the user-facing TYPEOF → DuckDB-name rewrite runs, and the
-  // marker resolves back to Spark typeof right after it (same dance as
-  // the lenient TIMESTAMP cast)
   private[plans] def numericTypeof(x: String): String =
-    s"(__typeofkeep__($x) IN ('tinyint','smallint','int','bigint','float'," +
-      s"'double','boolean') OR __typeofkeep__($x) LIKE 'decimal%')"
+    s"(typeof($x) IN ('tinyint','smallint','int','bigint','float'," +
+      s"'double','boolean') OR typeof($x) LIKE 'decimal%')"
 
 
   // the null check nests INSIDE the raise branch: the reference
@@ -64,7 +62,7 @@ private[plans] object RewriteSupport {
 
 
   private[plans] def octetStrict(x: String): String =
-    s"(CASE WHEN __typeofkeep__($x) NOT IN ('string', 'void') THEN ${strictRaise(x,
+    s"(CASE WHEN typeof($x) NOT IN ('string', 'void') THEN ${strictRaise(x,
       "OCTET_LENGTH(string): expected string. Use CAST to convert to a string first.")} " +
       s"ELSE $x END)"
 
@@ -108,78 +106,63 @@ private[plans] object RewriteSupport {
   }
 
 
-  /** Call-site scan shared by rewriteCall/rewriteAggFilter: the first
-    * `fname (` site (Word token, then LPar, whitespace tolerated)
-    * starting at or after char `fromChar`, as (nameTokIdx, closeTokIdx)
-    * — or null when none. An unbalanced open paren ends the scan like
-    * the char version did.
+  /** Rewrite every `fname(args)` call site via `f(args)`, token-driven
+    * (nested calls, commas inside arguments, string literals and
+    * comments are classified by the shared lexer). Each pass rewrites
+    * every site once, arguments first, never its own output: a builder
+    * may emit `fname(` itself. An unbalanced call paren ends the pass —
+    * that site and all text after it stay as written.
     */
-  private[plans] def callSite(v: SqlTok.View, up: String, fromChar: Int): (Int, Int) = {
-    val toks = v.toks
-    var k = 0
-    while (k + 1 < toks.length) {
-      if (toks(k).is(up) && toks(k).start >= fromChar &&
-          toks(k + 1).kind == SqlTok.LPar) {
-        val close = v.brk(k + 1)
-        return if (close < 0) null else (k, close)
-      }
-      k += 1
-    }
-    null
-  }
-
-
-  /** Rewrite every `fname(args)` call via `f(splitArgs)` — token-driven,
-    * so nested calls, commas inside arguments, string literals and
-    * comments are classified by the shared lexer; inner occurrences of
-    * `fname` are rewritten on subsequent passes (builders emit markers
-    * when their output contains the scanned name).
-    */
-  private[plans] def rewriteCall(sql: String, fname: String, f: Seq[String] => String): String = {
-    val up = fname.toUpperCase(java.util.Locale.ROOT)
-    var s = sql
-    var guard = 0
-    while (guard < 1000) {
-      guard += 1
-      val v = new SqlTok.View(s)
-      val site = callSite(v, up, 0)
-      if (site == null) return s
-      val (name, close) = site
-      val args = splitTopLevel(s.substring(v.toks(name + 1).end, v.toks(close).start))
-      s = s.substring(0, v.toks(name).start) + f(args) + s.substring(v.toks(close).end)
-    }
-    s
-  }
+  private[plans] def rewriteCall(sql: String, fname: String, f: Seq[String] => String): String =
+    walkCalls(sql, fname, withFilter = false)((args, _) => f(args))
 
 
   /** Like rewriteCall, but also captures a trailing `FILTER (WHERE ...)`
-    * clause so the builder can fold it INSIDE the rewritten aggregate —
-    * needed when the aggregate ends up nested in a non-aggregate wrapper
-    * (to_json/transform), which reject a FILTER suffix.
+    * clause (its own call sites rewritten first) so the builder can fold
+    * it INSIDE the rewritten aggregate — needed when the aggregate ends
+    * up nested in a non-aggregate wrapper (to_json/transform), which
+    * reject a FILTER suffix.
     */
   private[plans] def rewriteAggFilter(sql: String, fname: String,
-                               f: (Seq[String], Option[String]) => String): String = {
+                               f: (Seq[String], Option[String]) => String): String =
+    walkCalls(sql, fname, withFilter = true)(f)
+
+
+  /** The one call-site walker: tokenize once, then splice sites in text
+    * order, each site's argument and FILTER spans walked (innermost
+    * first) before its builder runs.
+    */
+  private def walkCalls(sql: String, fname: String, withFilter: Boolean)(
+      f: (Seq[String], Option[String]) => String): String = {
     val up = fname.toUpperCase(java.util.Locale.ROOT)
-    var s = sql
-    var guard = 0
-    while (guard < 1000) {
-      guard += 1
-      val v = new SqlTok.View(s)
-      val site = callSite(v, up, 0)
-      if (site == null) return s
-      val (name, close) = site
-      val toks = v.toks
-      val args = splitTopLevel(s.substring(toks(name + 1).end, toks(close).start))
-      // optional FILTER ( ... ) suffix, consumed into the builder
-      val (filt, endTok) =
-        if (close + 2 < toks.length && toks(close + 1).is("FILTER") &&
-            toks(close + 2).kind == SqlTok.LPar && v.brk(close + 2) >= 0) {
-          val fc = v.brk(close + 2)
-          (Some(s.substring(toks(close + 2).start, toks(fc).end)), fc)
-        } else (None, close)
-      s = s.substring(0, toks(name).start) + f(args, filt) + s.substring(toks(endTok).end)
+    val v = new SqlTok.View(sql)
+    val t = v.toks
+    var stopped = false
+    // chars [from, to) holding tokens [lo, hi), every site rewritten
+    def walk(from: Int, to: Int, lo: Int, hi: Int): String = {
+      val out = new java.lang.StringBuilder
+      var pos = from
+      var k = lo
+      while (!stopped && k + 1 < hi) {
+        if (t(k).is(up) && t(k + 1).kind == SqlTok.LPar) {
+          val close = v.brk(k + 1)
+          if (close < 0) stopped = true
+          else {
+            val args = splitTopLevel(walk(t(k + 1).end, t(close).start, k + 2, close))
+            val fc = if (withFilter && close + 2 < hi && t(close + 1).is("FILTER") &&
+                t(close + 2).kind == SqlTok.LPar) v.brk(close + 2) else -1
+            val filt = Option.when(fc >= 0)(walk(t(close + 2).start, t(fc).end, close + 2, fc + 1))
+            val end = if (fc >= 0) fc else close
+            out.append(sql, pos, t(k).start).append(f(args, filt))
+            pos = t(end).end
+            k = end
+          }
+        }
+        k += 1
+      }
+      out.append(sql, pos, to).toString
     }
-    s
+    walk(0, sql.length, 0, t.length)
   }
 
 

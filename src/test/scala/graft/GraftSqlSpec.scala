@@ -608,6 +608,15 @@ class GraftSqlSpec extends SparkSpec {
     assert(d.getDecimal(0).doubleValue() == 12.75)
   }
 
+  test("lenient TIMESTAMP casts: numeric text beyond BIGINT or NaN is NULL") {
+    // the epoch-millis branch truncates through the lenient BIGINT cast;
+    // a bare CAST(... AS BIGINT) there throws CAST_OVERFLOW
+    for (lit <- Seq("'1e30'", "'NaN'")) {
+      val rows = GraftSql.sql(spark, s"SELECT CAST($lit AS TIMESTAMP) AS t").collect()
+      assert(rows.length == 1 && rows.head.isNullAt(0), lit)
+    }
+  }
+
   test("fuzz-found zero divisors: division/modulo never error (JS Infinity/NaN)") {
     // reference: 5/0 = Infinity, 5%0 = NaN — never an error, and both
     // serialize as null on its JSON surface. Spark ANSI throws
