@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType,
+  StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators as a public DataFrame API — the composable
   * counterparts of the oracle-checked queries in
@@ -357,40 +360,168 @@ object Dedup {
     * near-dup pair graph, labeling every member with the MINIMUM doc id
     * of its component (the canonical representative).
     *
-    * Algorithm is min-label propagation — each round every vertex takes
-    * the smallest label among itself and its neighbors — which converges
-    * in O(component diameter) rounds. That is the scale-correct choice:
-    * a transitive-closure join (the tempting one-shot formulation)
-    * materializes O(n²) reachability pairs per component, while each
-    * propagation round here is one shuffle of (vertex, label) pairs.
-    * Near-dup components are shallow (duplicates of a common source), so
-    * rounds stay in the low single digits; `maxIter` bounds the loop and
-    * the per-round `count` action is the convergence check.
+    * Two paths, one labelling:
+    *  - Driver finish. The pairs are persisted, and one job over them
+    *    both counts them and, while they fit, ships the two id columns
+    *    to the driver ([[pairsWithin]]). `maxEdges` is the session's
+    *    `spark.sql.autoBroadcastJoinThreshold` over 24 bytes (the
+    *    UnsafeRow size of a two-long row: ~437k edges at the 10 MB
+    *    default); a threshold ≤ 0 turns this path off. When the edges
+    *    fit and the ids are integral, union-find with union-by-min-root
+    *    runs on the driver (every root is its set's minimum id) and the
+    *    result is a local frame the caller's joins can broadcast. The
+    *    operator then runs one job of its own (two if one partition
+    *    holds more than its share of the budget), where the rounds run
+    *    one or two per round.
+    *  - Rounds, for larger graphs and non-integral ids: min-label
+    *    propagation — each round every vertex takes the smallest label
+    *    among itself and its neighbors — with pointer jumping from round
+    *    3, so a round is one shuffle of (vertex, label) pairs and long
+    *    chains collapse in O(log diameter) rounds. A transitive-closure
+    *    join (the tempting one-shot formulation) would materialize O(n²)
+    *    reachability pairs per component instead. The per-round aggregate
+    *    is the convergence check; a loop that reaches `maxIter` without a
+    *    fixpoint throws `IllegalStateException` rather than return
+    *    unconverged labels.
     *
     * Input: pairs with columns `a_id`, `b_id` (e.g. [[minhashLsh]]
-    * output). Output: `(id, cluster)` for every id in some pair.
+    * output). Output: `(id, cluster)` for every id in some pair, both of
+    * the ids' (widened) type. A NULL id joins no component: its own row
+    * takes the least label among the ids it is paired with (NULL if
+    * none), and the ids paired with it keep their own components.
     */
   def duplicateClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // materialize the pair source ONCE before fanning it into both union
-    // branches: an unpersisted `pairs` would re-run its (LSH) lineage per
-    // branch, doubling the most expensive stage of the whole operator
-    val p = pairs.persist(lvl)
-    p.count()
-    val edges = p.selectExpr("a_id AS src", "b_id AS dst")
+    // materialize the pair source ONCE: on the rounds path it fans into
+    // both union branches, and an unpersisted `pairs` would re-run its
+    // (LSH) lineage per branch, doubling the most expensive stage of the
+    // whole operator
+    val p = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    val idType = symmetric(p).schema("src").dataType
+    val maxEdges = math.min(
+      p.sparkSession.sessionState.conf.autoBroadcastJoinThreshold / 24,
+      Int.MaxValue - 1L).toInt
+    val fetched =
+      if (maxEdges <= 0 || !integralIds(idType)) None
+      else pairsWithin(p, maxEdges)
+    fetched match {
+      case Some(rows) =>
+        p.unpersist()
+        val schema = StructType(Seq(
+          StructField("id", idType), StructField("cluster", idType)))
+        p.sparkSession.createDataFrame(
+          java.util.Arrays.asList(minIdLabels(rows, idType): _*), schema)
+      case _ => labelRounds(p, maxIter)
+    }
+  }
+
+  private def symmetric(p: DataFrame): DataFrame =
+    p.selectExpr("a_id AS src", "b_id AS dst")
       .union(p.selectExpr("b_id AS src", "a_id AS dst"))
-      .distinct()
-      .persist(lvl)
+
+  /** The `(a_id, b_id)` rows of `p` if it holds at most `maxEdges` of
+    * them, else None. One job over every partition counts each one and
+    * ships its rows while it holds at most its share of the budget; a
+    * second job fetches the partitions over their share, only when the
+    * total fits. The driver never holds much more than twice the budget,
+    * and every partition of `p` is cached for the rounds either way.
+    * (`limit(maxEdges + 1).collect()` would scan 1, then 4, 16, ...
+    * partitions: one job more per factor of 4.)
+    */
+  private def pairsWithin(p: DataFrame, maxEdges: Int): Option[Array[Row]] = {
+    val rdd = p.select("a_id", "b_id").rdd
+    val share = maxEdges / math.max(rdd.getNumPartitions, 1) + 1
+    val sc = p.sparkSession.sparkContext
+    val parts = sc.runJob(rdd, (it: Iterator[Row]) => {
+      val head = Array.newBuilder[Row]
+      var n = 0L
+      while (it.hasNext) {
+        val r = it.next()
+        if (n < share) head += r
+        n += 1
+      }
+      (n, if (n <= share) head.result() else Array.empty[Row])
+    })
+    if (parts.map(_._1).sum > maxEdges) None
+    else {
+      val over = parts.indices.filter(i => parts(i)._1 > share)
+      val rest =
+        if (over.isEmpty) Array.empty[Array[Row]]
+        else sc.runJob(rdd, (it: Iterator[Row]) => it.toArray, over)
+      Some(parts.flatMap(_._2) ++ rest.flatten)
+    }
+  }
+
+  private def integralIds(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** The driver finish of [[duplicateClusters]]: `(id, cluster)` rows of
+    * `idType` for collected `(a_id, b_id)` rows, sorted by id (a NULL id
+    * last), labelled exactly as the rounds label them.
+    */
+  private def minIdLabels(pairs: Array[Row], idType: DataType): Array[Row] = {
+    def id(r: Row, i: Int): Long = r.get(i).asInstanceOf[Number].longValue
+    val src = Array.newBuilder[Long]
+    val dst = Array.newBuilder[Long]
+    val nullPartners = Array.newBuilder[Long]
+    var nullId = false
+    for (r <- pairs) (r.isNullAt(0), r.isNullAt(1)) match {
+      case (false, false) => src += id(r, 0); dst += id(r, 1)
+      case (true, false) => nullId = true; nullPartners += id(r, 1)
+      case (false, true) => nullId = true; nullPartners += id(r, 0)
+      case (true, true) => nullId = true
+    }
+    val (as, bs, loose) = (src.result(), dst.result(), nullPartners.result())
+    val ids = (as ++ bs ++ loose).sorted.distinct
+    val parent = Array.range(0, ids.length)
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    def index(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    // ids are indexed in ascending order, so linking the larger root under
+    // the smaller keeps every root its set's minimum id
+    for (e <- as.indices) {
+      val ra = find(index(as(e)))
+      val rb = find(index(bs(e)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    def label(v: Long): Long = ids(find(index(v)))
+    val toType: Long => Any = idType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => v => v
+    }
+    val rows = ids.map(v => Row(toType(v), toType(label(v))))
+    // a NULL id receives the labels of its partners but sends them none
+    if (!nullId) rows
+    else rows :+ Row(null, if (loose.isEmpty) null else toType(loose.map(label).min))
+  }
+
+  /** The distributed path of [[duplicateClusters]]: label propagation
+    * rounds over the persisted pairs `p`, which it releases.
+    */
+  private def labelRounds(p: DataFrame, maxIter: Int): DataFrame = {
+    val lvl = StorageLevel.MEMORY_AND_DISK
+    val edges = symmetric(p).distinct().persist(lvl)
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("cluster", col("id"))
       .persist(lvl)
-    // convergence check: labels only ever DECREASE (min of neighbors), so
-    // an unchanged label-sum means a fixpoint — one cheap aggregate per
-    // round instead of a join-and-count against the previous labels.
-    // DECIMAL sum: id sums at corpus scale overflow int64.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("cluster").cast("decimal(38,0)"))).head.getDecimal(0)
-    var prevSum = labelSum(labels)
+    // convergence check: a label only ever DECREASES (min of neighbors),
+    // or, for a NULL id, goes from NULL to a value — so an unchanged
+    // (label sum, labelled count) means a fixpoint: one cheap aggregate
+    // per round instead of a join-and-count against the previous labels.
+    // The count is what catches a NULL id's first label cancelling out a
+    // drop elsewhere in the sum. DECIMAL sum: id sums at corpus scale
+    // overflow int64.
+    def labelState(df: DataFrame): (java.math.BigDecimal, Long) = {
+      val r = df.agg(sum(col("cluster").cast("decimal(38,0)")), count(col("cluster"))).head
+      (r.getDecimal(0), r.getLong(1))
+    }
+    var prev = labelState(labels)
     var i = 0
     var converged = false
     while (!converged && i < maxIter) {
@@ -424,19 +555,24 @@ object Dedup {
       // and the driver OOMs just rendering/optimizing it by round ~12.
       // Checkpointing cuts each round to a LogicalRDD of the materialized
       // labels — driver-side plan work stays O(1) per round. r16: the
-      // checkpoint is LAZY so the convergence sum is the round's ONE
+      // checkpoint is LAZY so the convergence aggregate is the round's ONE
       // action — it materializes (and saves) the checkpoint partitions it
       // scans; eager + sum was two jobs per round for the same work.
       val next = hopped.localCheckpoint(eager = false)
-      val s = labelSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
+      val s = labelState(next)
+      converged = s == prev
+      prev = s
       labels.unpersist()
       labels = next
       i += 1
     }
     edges.unpersist()
     p.unpersist()
+    if (!converged) {
+      labels.unpersist()
+      throw new IllegalStateException(
+        s"duplicateClusters: no fixpoint after $i label-propagation rounds (maxIter = $maxIter)")
+    }
     labels
   }
 

@@ -67,9 +67,9 @@ object FuzzyJoin {
     * row its cluster's minimum id as `canonical_id`. Rows in no fuzzy
     * pair are their own canonical. The composition is
     * [[byEditDistance]] self-join (LSH candidates + thresholded verify)
-    * → [[Dedup.duplicateClusters]] (pointer-jumped min-label
-    * propagation) → one left join back — every stage is the scalable
-    * shape, no cross join, no driver-side closure.
+    * → [[Dedup.duplicateClusters]] (union-find on the driver while the
+    * pairs fit the broadcast threshold, pointer-jumped min-label
+    * propagation above it) → one left join back — no cross join.
     */
   def resolveEntities(df: DataFrame, idCol: String, nameCol: String,
                       maxDist: Int = 2, k: Int = 8, bands: Int = 4,

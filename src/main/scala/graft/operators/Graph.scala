@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Iterative graph ranking over an edge table — the quality-weighting
   * signal of web-crawl corpora (rank pages, weight their documents).
-  * Complements [[Dedup.duplicateClusters]] (the other iterative graph
-  * operator: components there, importance here).
+  * Complements [[Dedup.duplicateClusters]] (the other graph operator:
+  * components there — union-find on the driver for small edge sets,
+  * label-propagation rounds for large ones — importance here).
   */
 object Graph {
 
@@ -46,17 +47,17 @@ object Graph {
     trianglesCanonical(canonicalEdges(edges, src, dst))
 
   /** The canonical undirected edge set — distinct `(a < b)` pairs,
-    * self-loops dropped, PERSISTED (it feeds three join sides in
-    * [[trianglesCanonical]], and callers computing node/edge stats
-    * alongside should reuse this one frame instead of re-canonicalizing).
+    * self-loops dropped, PERSISTED through [[Caches.track]] (it feeds
+    * three join sides in [[trianglesCanonical]], and callers computing
+    * node/edge stats alongside should reuse this one frame instead of
+    * re-canonicalizing; [[Caches.unpersistAll]] releases it).
     */
   def canonicalEdges(edges: DataFrame, src: String = "src",
                      dst: String = "dst"): DataFrame =
-    edges
+    Caches.track(edges
       .selectExpr(s"least($src, $dst) AS a", s"greatest($src, $dst) AS b")
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
 
   /** [[triangles]] over an ALREADY-canonical `(a, b)` edge frame (from
     * [[canonicalEdges]]) — each triangle `a < b < c` exactly once.
@@ -106,9 +107,10 @@ object Graph {
     * the settled set feeds the NEXT round twice (union branch + anti-join
     * build side), so without lineage truncation the analyzed plan DOUBLES
     * per round and the driver OOMs just rendering it by hop ~10 — same
-    * failure mode [[Dedup.duplicateClusters]] guards against. The
-    * materialization also makes the empty-frontier probe free, so
-    * exhausted searches stop early instead of scheduling no-op rounds.
+    * failure mode the rounds of [[Dedup.duplicateClusters]] guard
+    * against. The materialization also makes the empty-frontier probe
+    * free, so exhausted searches stop early instead of scheduling no-op
+    * rounds.
     * Unreached nodes are absent from the output (the caller left-joins if
     * it wants NULL-hops rows).
     *

@@ -201,9 +201,10 @@ object PipelineQueries {
     },
 
     // ---- Duplicate clusters: connected components over the LSH pair
-    // graph (operator Dedup.duplicateClusters — min-label propagation,
-    // O(diameter) rounds of (vertex, label) shuffles; the oracle takes
-    // the recursive-CTE transitive closure DuckDB can afford at sf0.01)
+    // graph (operator Dedup.duplicateClusters — union-find on the driver
+    // while the pairs fit the broadcast threshold, min-label propagation
+    // rounds of (vertex, label) shuffles above it; the oracle takes the
+    // recursive-CTE transitive closure DuckDB can afford at sf0.01)
     QueryDef("q_dedup_clusters", {
       val sigs = (0 until 8).map(k => s"${minhashD(k)} AS s$k").mkString(", ")
       val bandSel = (0 until 4).map(b =>

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.{Features, Graph, TextOps}
+import graft.operators.{Caches, Features, Graph, TextOps}
 import graft.sources.Tables
 
 /** Round-5 ranking / windowing surface: iterative PageRank (exact
@@ -358,16 +358,15 @@ object RankQueries {
       // aggregation buffer — the collect_list input is ≤ 50 rows/token by
       // construction. n_docs comes from a separate count aggregate whose
       // buffer is O(1) (map-side partial combine). One persisted token
-      // frame feeds both branches (one scan of documents); deliberately
-      // not unpersisted — the returned plan is still lazy; long-lived
-      // sessions clearCache() between batches (the minhashLsh contract).
+      // frame feeds both branches (one scan of documents); not unpersisted
+      // here — the returned plan is still lazy — but tracked, so
+      // Caches.unpersistAll releases it between batches.
       import graft.operators.TopK
-      val tok = Tables(s, dir, "documents")
+      val tok = Caches.track(Tables(s, dir, "documents")
         .select(col("doc_id"),
           explode(expr("split(lower(trim(text)), '\\\\s+')")).as("token"))
         .filter(col("token") =!= "")
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .distinct())
       val counts = tok.groupBy("token")
         .agg(count(lit(1)).cast("bigint").as("n_docs"))
       val heads = TopK.perKey(tok, Seq("token"), Seq(col("doc_id")), 50)
@@ -420,9 +419,10 @@ object RankQueries {
     // ---- Connected components (Dedup.duplicateClusters) ------------------
     // the graph trio's third member (pagerank = importance, triangles =
     // density, components = membership) on the same orders-derived
-    // 60-node graph: pointer-jumped min-label propagation on Spark, a
-    // recursive reachability CTE on the oracle — two different exact
-    // algorithms that must agree on every label.
+    // 60-node graph: on Spark, union-find on the driver (the edges fit
+    // the broadcast threshold, and one job fetches them); on the oracle,
+    // a recursive reachability CTE — two different exact algorithms that
+    // must agree on every label.
     QueryDef("q_components",
       """WITH e AS (
         |  SELECT DISTINCT least(o_custkey % 60, (o_custkey + o_orderkey) % 60) AS a,

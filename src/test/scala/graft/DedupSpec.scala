@@ -192,9 +192,18 @@ class DedupSpec extends SparkSpec {
     // a 200-vertex path graph has diameter 199: plain min-label
     // propagation needs ~200 rounds, pointer jumping needs ~log2(200)+2.
     // maxIter = 14 only converges if the shortcutting actually engages.
+    // A 199-edge chain fits the driver finish, so a broadcast threshold of
+    // -1 keeps it on the rounds path.
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val got = Dedup.duplicateClusters(chain, maxIter = 14)
-      .as[(Long, Long)].collect()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val got =
+      try Dedup.duplicateClusters(chain, maxIter = 14).as[(Long, Long)].collect()
+      finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
     assert(got.length == 200)
     assert(got.forall(_._2 == 0L),
       s"chain not fully collapsed: ${got.filter(_._2 != 0L).take(5).mkString(", ")}")

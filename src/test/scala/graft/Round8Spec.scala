@@ -228,9 +228,11 @@ class Round8Spec extends SparkSpec {
   }
 
   test("operator-internal caches are tracked and released by Caches.unpersistAll") {
-    import graft.operators.{Caches, Dedup, TextOps}
+    import graft.operators.{Caches, Dedup, Graph, TextOps}
     Caches.unpersistAll() // other suites may have left tracked caches
     assert(Caches.trackedCount == 0)
+    Graph.canonicalEdges(Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")).count()
+    assert(Caches.trackedCount == 1)
     val docs = Seq(
       (1L, "a b c d e f g h i j"), (2L, "a b c d e f g h i j"),
       (3L, "k l m n o p q r s t")).toDF("doc_id", "text")
