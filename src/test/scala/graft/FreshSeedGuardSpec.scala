@@ -20,9 +20,9 @@ class FreshSeedGuardSpec extends FuzzHarness {
     .getOrElse(900000L + java.time.LocalDate.now(java.time.ZoneOffset.UTC).toEpochDay)
 
   test("fresh-seed dialect fuzz: today's queries agree with the reference") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
-    assume(new java.io.File("/root/reference/src/index.js").isFile, "reference missing")
+    assume(new java.io.File(RefCheckout.index).isFile, "reference missing")
     fuzzTables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     info(s"fresh seed=$seed (replay: GRAFT_FUZZ_SEED=$seed)")
     val queries = FuzzGen.queries(seed = seed, n = 100)
@@ -35,9 +35,9 @@ class FreshSeedGuardSpec extends FuzzHarness {
   }
 
   test("fresh-seed scalar fuzz: today's scalar surface agrees with the reference") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
-    assume(new java.io.File("/root/reference/src/index.js").isFile, "reference missing")
+    assume(new java.io.File(RefCheckout.index).isFile, "reference missing")
     fuzzTables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     info(s"fresh seed=${seed + 1} (replay: GRAFT_FUZZ_SEED=$seed)")
     val queries = FuzzGen.scalarQueries(seed = seed + 1, n = 50)
@@ -59,9 +59,9 @@ class FreshSeedGuardSpec extends FuzzHarness {
   }
 
   test("fresh-seed spatial-join fuzz: today's multi-row geometry queries agree") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
-    assume(new java.io.File("/root/reference/src/index.js").isFile, "reference missing")
+    assume(new java.io.File(RefCheckout.index).isFile, "reference missing")
     import spark.implicits._
     fuzzTables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     info(s"fresh seed=${seed + 2} (replay: GRAFT_FUZZ_SEED=$seed)")

@@ -22,10 +22,6 @@ trait FuzzHarness extends SparkSpec {
     d.toString
   }
 
-  protected lazy val nodeOk =
-    try new ProcessBuilder("node", "--version").start().waitFor() == 0
-    catch { case _: Exception => false }
-
   /** The four fuzz tables, value-identical in both engines: Spark reads
     * parquet (timestamps cast to string so the JSON the reference reads
     * carries the same values Spark computes on) and registers views;
@@ -125,7 +121,7 @@ trait FuzzHarness extends SparkSpec {
     pb.redirectErrorStream(true)
     val proc = pb.start()
     val log = new String(proc.getInputStream.readAllBytes())
-    assert(proc.waitFor() == 0, s"fuzz_ref.mjs failed:\n${log.takeRight(2000)}")
+    RefCheckout.assertScriptRan("fuzz_ref.mjs", proc.waitFor(), log.takeRight(2000))
     val root = om.readTree(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$workDir/ref_out.json")))
     (0 until root.size()).map { i =>
       val e = root.get(i)

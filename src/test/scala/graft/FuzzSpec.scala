@@ -24,9 +24,9 @@ class FuzzSpec extends FuzzHarness {
     seedBase.map(_ + offset).getOrElse(default)
 
   test("differential fuzz: seeded dialect queries agree with the reference") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
-    assume(new java.io.File("/root/reference/src/index.js").isFile, "reference missing")
+    assume(new java.io.File(RefCheckout.index).isFile, "reference missing")
     fuzzTables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
 
     val queries = FuzzGen.queries(seed = seedOr(20260814L, 0), n = nQueries)
@@ -48,7 +48,7 @@ class FuzzSpec extends FuzzHarness {
   }
 
   test("strict-nulls differential fuzz: nullable predicates agree with the reference") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
     fuzzTables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     // the one grammar the MAIN battery must avoid: NULLIF-built nulls
@@ -72,7 +72,7 @@ class FuzzSpec extends FuzzHarness {
   }
 
   test("scalar-function differential fuzz: math/JSON/array/date surface agrees with the reference") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     fuzzTables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     // jsonBridge: Spark's JSON path functions return JSON TEXT where the
     // reference returns typed values — equality modulo JSON parse is the
@@ -98,7 +98,7 @@ class FuzzSpec extends FuzzHarness {
   }
 
   test("spatial differential fuzz: integer-grid geometries agree with the reference") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     fuzzTables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     // integer grids make shared vertices / collinear edges / touching
     // boundaries the COMMON case — the exact corners where two
@@ -115,7 +115,7 @@ class FuzzSpec extends FuzzHarness {
   }
 
   test("spatial JOIN / window-over-spatial differential fuzz: multi-row geometry relations agree") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     import spark.implicits._
     fuzzTables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     // the round-13 widening: spatial predicates as JOIN conditions,
@@ -136,7 +136,7 @@ class FuzzSpec extends FuzzHarness {
   }
 
   test("mutation fuzz: single-edit mutants — agreement on rejection, no reference-only queries") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     fuzzTables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     // both the BASE queries and the EDITS re-seed under GRAFT_FUZZ_SEED
     // (mutants found the only two engine gaps of round 13 — the
@@ -347,7 +347,7 @@ class FuzzSpec extends FuzzHarness {
   }
 
   test("reference registry sweep: every public function has a canonical agreeing call") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     fuzzTables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     // the list is read from the reference AT TEST TIME, so a function
     // added there without a canonical call here fails the sweep
@@ -511,7 +511,7 @@ class FuzzSpec extends FuzzHarness {
   }
 
   test("interval property fuzz: graft_js_interval == applyIntervalToDate on random cases") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     import spark.implicits._
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val r = new scala.util.Random(2024L)
@@ -561,7 +561,7 @@ class FuzzSpec extends FuzzHarness {
     pb.redirectErrorStream(true)
     val proc = pb.start()
     val log = new String(proc.getInputStream.readAllBytes())
-    assert(proc.waitFor() == 0, s"fuzz_interval_ref.mjs failed:\n${log.takeRight(1000)}")
+    RefCheckout.assertScriptRan("fuzz_interval_ref.mjs", proc.waitFor(), log.takeRight(1000))
     val refOut = om.readTree(java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$workDir/ivl_out.json")))
     // graft side: the UDF over the same batch, with the string-world
@@ -581,7 +581,7 @@ class FuzzSpec extends FuzzHarness {
   }
 
   test("interval CHAIN property fuzz: multi-step dialect arithmetic == reference fold") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val r = new scala.util.Random(4242L)
     val units = Seq("SECOND", "MINUTE", "HOUR", "DAY", "MONTH", "YEAR")
@@ -630,7 +630,7 @@ class FuzzSpec extends FuzzHarness {
     pb.redirectErrorStream(true)
     val proc = pb.start()
     val log = new String(proc.getInputStream.readAllBytes())
-    assert(proc.waitFor() == 0, s"fuzz_interval_ref.mjs failed:\n${log.takeRight(1000)}")
+    RefCheckout.assertScriptRan("fuzz_interval_ref.mjs", proc.waitFor(), log.takeRight(1000))
     val refOut = om.readTree(java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$workDir/ivl_chain_out.json")))
     // graft side: the DIALECT TEXT itself (literal base ± chain) runs
@@ -658,7 +658,7 @@ class FuzzSpec extends FuzzHarness {
   }
 
   test("fuzz corpus also exercises validate/tables/maxRows without crashing") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     val queries = FuzzGen.queries(seed = 7L, n = 60)
     fuzzTables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     queries.foreach { q =>

@@ -34,10 +34,6 @@ class ParseReplaySpec extends SparkSpec {
 
   import com.fasterxml.jackson.databind.JsonNode
 
-  private lazy val nodeOk =
-    try new ProcessBuilder("node", "--version").start().waitFor() == 0
-    catch { case _: Exception => false }
-
   private case class PEntry(
     kind: String, file: String, testName: String,
     query: Option[String], udf: Boolean, error: Option[String],
@@ -53,7 +49,7 @@ class ParseReplaySpec extends SparkSpec {
     pb.redirectErrorStream(true)
     val proc = pb.start()
     val log = new String(proc.getInputStream.readAllBytes())
-    assert(proc.waitFor() == 0, s"record_ref_parse.mjs failed:\n${log.takeRight(2000)}")
+    RefCheckout.assertScriptRan("record_ref_parse.mjs", proc.waitFor(), log.takeRight(2000))
     info(log.trim.linesIterator.toSeq.lastOption.getOrElse(""))
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = om.readTree(java.nio.file.Files.readString(out))
@@ -114,7 +110,7 @@ class ParseReplaySpec extends SparkSpec {
   }
 
   test("reference-accepted queries parse through the dialect front-end") {
-    assume(nodeOk, "node required to record the reference suite")
+    assume(RefCheckout.nodeOk, "node required to record the reference suite")
     val accepted = entries
       .filter(e => e.kind == "parse" && e.error.isEmpty && !e.udf)
       .flatMap(_.query).distinct
@@ -126,7 +122,7 @@ class ParseReplaySpec extends SparkSpec {
   }
 
   test("reference-rejected queries reject, modulo the pinned leniency allowlist") {
-    assume(nodeOk, "node required to record the reference suite")
+    assume(RefCheckout.nodeOk, "node required to record the reference suite")
     val rejected = entries
       .filter(e => e.kind == "parse" && e.error.isDefined && !e.udf)
       .flatMap(_.query).distinct
@@ -139,7 +135,7 @@ class ParseReplaySpec extends SparkSpec {
   }
 
   test("extractTables fixtures match GraftSql.tables") {
-    assume(nodeOk, "node required to record the reference suite")
+    assume(RefCheckout.nodeOk, "node required to record the reference suite")
     val fixtures = entries
       .filter(e => e.kind == "tables" && e.query.isDefined && e.tables.isDefined)
       .map(e => (e.query.get, e.tables.get)).distinct
@@ -155,7 +151,7 @@ class ParseReplaySpec extends SparkSpec {
   }
 
   test("WKT fixtures round-trip through ST_GEOMFROMTEXT / ST_ASTEXT / ST_ASGEOJSON") {
-    assume(nodeOk, "node required to record the reference suite")
+    assume(RefCheckout.nodeOk, "node required to record the reference suite")
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val wkts = entries.filter(_.kind == "wkt")
@@ -190,7 +186,7 @@ class ParseReplaySpec extends SparkSpec {
   }
 
   test("spatial-internal fixtures replay through the ST_ predicate surface") {
-    assume(nodeOk, "node required to record the reference suite")
+    assume(RefCheckout.nodeOk, "node required to record the reference suite")
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val geoKinds = Set("geomeq", "pip", "pol", "plr", "pdist", "segint", "segring")
@@ -270,7 +266,7 @@ class ParseReplaySpec extends SparkSpec {
   }
 
   test("plan fixtures: every reference-planned scan is a table graft reads") {
-    assume(nodeOk, "node required to record the reference suite")
+    assume(RefCheckout.nodeOk, "node required to record the reference suite")
     val fx = planEntries.filter(e => e.error.isEmpty && e.query.isDefined)
     assert(fx.size >= 30, s"recorder found only ${fx.size} ok plan fixtures")
     // subset, not equality: the reference ELIDES scans its plan answers
@@ -293,7 +289,7 @@ class ParseReplaySpec extends SparkSpec {
   }
 
   test("plan-validation fixtures accept/reject through validate with the same tables") {
-    assume(nodeOk, "node required to record the reference suite")
+    assume(RefCheckout.nodeOk, "node required to record the reference suite")
     val fx = planEntries.filter(e =>
       e.query.isDefined && e.node.get("tbls") != null && !e.node.get("tbls").isNull)
     assert(fx.size >= 15, s"recorder found only ${fx.size} with-tables plan fixtures")
@@ -313,7 +309,7 @@ class ParseReplaySpec extends SparkSpec {
   }
 
   test("column pruning matches the reference's pushed scan hints") {
-    assume(nodeOk, "node required to record the reference suite")
+    assume(RefCheckout.nodeOk, "node required to record the reference suite")
     import spark.implicits._
     // single-scan fixtures whose Scan carries a pushed column list: the
     // columns Catalyst prunes the leaf to must be exactly the columns

@@ -3,10 +3,13 @@ package graft
 import graft.plans.GraftSql
 import org.apache.spark.sql.functions._
 
-/** The replay classifiers' residual cases, each pinned against the
-  * LIVE reference (tools/ref_probe.mjs) instead of passing through a
-  * hand-reviewed allow-list. For every residual this spec establishes
-  * one of two things, mechanically:
+/** The replay classifiers' residual cases, each pinned instead of
+  * passing through a hand-reviewed allow-list. Graft's half of each
+  * case is pinned to literal values and runs on every host; the
+  * reference's half runs where the reference checkout is present, and
+  * probes the live reference (tools/ref_probe.mjs) for that same
+  * answer. For every residual this spec establishes one of two things,
+  * mechanically:
   *
   *   - SAME-INPUT AGREEMENT: when graft is given the same single-typed
   *     inputs the recorded snapshot carries, its rows equal the
@@ -19,11 +22,7 @@ import org.apache.spark.sql.functions._
   *     correlation scoping — with the boundary demonstrated, not
   *     asserted.
   */
-class ReplayResidualSpec extends SparkSpec {
-
-  private lazy val nodeOk =
-    try new ProcessBuilder("node", "--version").start().waitFor() == 0
-    catch { case _: Exception => false }
+class ReplayResidualSpec extends SparkSpec with RefPinned {
 
   private val om = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -45,7 +44,6 @@ class ReplayResidualSpec extends SparkSpec {
   }
 
   test("SUM/AVG over a string-typed column: same-input agreement (was untyped-artifact)") {
-    assume(nodeOk, "node not available")
     // the recorded snapshot of execute.aggregate.test.js »
     // 'should skip non-numeric values in SUM/AVG/MIN/MAX' loads `value`
     // as a STRING column (mixed 10/'abc' has no Spark type). The
@@ -57,9 +55,11 @@ class ReplayResidualSpec extends SparkSpec {
     val coerced = """{"data":[{"id":1,"value":"10"},{"id":2,"value":null},
       {"id":3,"value":"abc"},{"id":4,"value":"20"}]}""".stripMargin.replaceAll("\n\\s*", "")
     val q = "SELECT SUM(value) AS total, AVG(value) AS avg FROM data"
-    val ref = refProbe(coerced, q).toOption.get
-    assert(ref.length == 1 && ref.head.get("total").asDouble() == 30.0 &&
-      ref.head.get("avg").asDouble() == 15.0, s"reference changed: $ref")
+    onReference {
+      val ref = refProbe(coerced, q).toOption.get
+      assert(ref.length == 1 && ref.head.get("total").asDouble() == 30.0 &&
+        ref.head.get("avg").asDouble() == 15.0, s"reference changed: $ref")
+    }
     import spark.implicits._
     Seq((1, "10"), (2, null), (3, "abc"), (4, "20")).toDF("id", "value")
       .createOrReplaceTempView("data")
@@ -69,7 +69,6 @@ class ReplayResidualSpec extends SparkSpec {
   }
 
   test("GREATEST/LEAST with an all-null column: same-input agreement via NullType load") {
-    assume(nodeOk, "node not available")
     // execute.strings.test.js » 'should skip null values' (GREATEST and
     // LEAST describes): column `a` is all-null — no type in the JS rows.
     // Loaded as NullType (the faithful choice, now what loadViews does),
@@ -78,8 +77,10 @@ class ReplayResidualSpec extends SparkSpec {
     val tables = """{"data":[{"id":1,"a":null,"b":3,"c":1}]}"""
     for ((fn, want) <- Seq("GREATEST" -> 3, "LEAST" -> 1)) {
       val q = s"SELECT $fn(a, b, c) AS result FROM data"
-      val ref = refProbe(tables, q).toOption.get
-      assert(ref.head.get("result").asInt() == want, s"reference changed: $ref")
+      onReference {
+        val ref = refProbe(tables, q).toOption.get
+        assert(ref.head.get("result").asInt() == want, s"reference changed: $ref")
+      }
       spark.range(1).select(lit(null).as("a"), lit(3L).as("b"), lit(1L).as("c"))
         .createOrReplaceTempView("data")
       val got = GraftSql.sqlDerived(spark, q).collect().head
@@ -88,7 +89,6 @@ class ReplayResidualSpec extends SparkSpec {
   }
 
   test("COALESCE over a mixed number/string column: the EXPECTED OUTPUT is untypeable") {
-    assume(nodeOk, "node not available")
     // execute.strings.test.js » 'should work with mixed types': the
     // reference's expected rows are {result: 42} then {result:
     // 'string'} — ONE output column holding a number in row 1 and a
@@ -99,9 +99,11 @@ class ReplayResidualSpec extends SparkSpec {
     // graft's single-typed answer agrees cell-TEXT-wise.
     val tables = """{"data":[{"id":1,"a":null,"b":42},{"id":2,"a":"string","b":42}]}"""
     val q = "SELECT COALESCE(a, b) AS result FROM data"
-    val ref = refProbe(tables, q).toOption.get
-    assert(ref(0).get("result").isNumber && ref(1).get("result").isTextual,
-      s"reference output no longer heterogeneous: $ref")
+    onReference {
+      val ref = refProbe(tables, q).toOption.get
+      assert(ref(0).get("result").isNumber && ref(1).get("result").isTextual,
+        s"reference output no longer heterogeneous: $ref")
+    }
     import spark.implicits._
     Seq((1, null, 42L), (2, "string", 42L)).toDF("id", "a", "b")
       .createOrReplaceTempView("data")
@@ -118,7 +120,6 @@ class ReplayResidualSpec extends SparkSpec {
   }
 
   test("JSON_KEYS insertion order: engine agrees on text input; loss is read.json's sorted structs") {
-    assume(nodeOk, "node not available")
     // execute.json.test.js » 'should return the keys of a JSON object':
     // the reference asserts INSERTION key order. The snapshot (JSON
     // text) still carries that order — it is Spark's read.json schema
@@ -130,11 +131,13 @@ class ReplayResidualSpec extends SparkSpec {
     // pin keeps the underlying engine agreement and the loader-artifact
     // demonstration on record.
     val doc = """{"b":1,"a":2,"c":3}"""
-    val ref = refProbe("""{"t":[{"x":1}]}""",
-      s"SELECT JSON_KEYS('$doc') AS ks FROM t")
-    val refKs = ref.toOption.get.head.get("ks")
-    assert((0 until refKs.size()).map(refKs.get(_).asText()) == Seq("b", "a", "c"),
-      s"reference changed: $refKs")
+    onReference {
+      val ref = refProbe("""{"t":[{"x":1}]}""",
+        s"SELECT JSON_KEYS('$doc') AS ks FROM t")
+      val refKs = ref.toOption.get.head.get("ks")
+      assert((0 until refKs.size()).map(refKs.get(_).asText()) == Seq("b", "a", "c"),
+        s"reference changed: $refKs")
+    }
     import spark.implicits._
     Seq(doc).toDF("j").createOrReplaceTempView("t")
     val got = GraftSql.sqlDerived(spark, "SELECT JSON_KEYS(j) AS ks FROM t")
@@ -149,15 +152,16 @@ class ReplayResidualSpec extends SparkSpec {
   }
 
   test("JSON_KEYS of an empty object: engine agrees on text input; all-{} columns vanish at load") {
-    assume(nodeOk, "node not available")
     // execute.json.test.js » 'should return an empty array for an empty
     // object': an all-{} column infers no fields at all, so the COLUMN
     // disappears from the loaded schema — nothing for any engine to
     // query. On the original text, graft agrees with the reference.
     // CLOSED in round 12 via SuiteReplaySpec.rawJsonTextLoad (see the
     // insertion-order test above) — the row replays cell-exact now.
-    val ref = refProbe("""{"t":[{"x":1}]}""", "SELECT JSON_KEYS('{}') AS ks FROM t")
-    assert(ref.toOption.get.head.get("ks").size() == 0, "reference changed")
+    onReference {
+      val ref = refProbe("""{"t":[{"x":1}]}""", "SELECT JSON_KEYS('{}') AS ks FROM t")
+      assert(ref.toOption.get.head.get("ks").size() == 0, "reference changed")
+    }
     import spark.implicits._
     Seq("{}").toDF("j").createOrReplaceTempView("t")
     val got = GraftSql.sqlDerived(spark, "SELECT JSON_KEYS(j) AS ks FROM t")
@@ -169,7 +173,6 @@ class ReplayResidualSpec extends SparkSpec {
   }
 
   test("ORDER BY + LIMIT over fully-tied keys: any subset is legal; graft satisfies the test's own assertions") {
-    assume(nodeOk, "node not available")
     // execute.orderby.test.js » 'should sort many groups without
     // overflowing the call stack' (the replay's one tie-limited row):
     // 200k groups, every cnt = 1, ORDER BY cnt DESC LIMIT 5 — the sort
@@ -179,9 +182,11 @@ class ReplayResidualSpec extends SparkSpec {
     // the reference keeps ITS arbitrary legal subset...
     val tables = """{"data":[{"g":0},{"g":1},{"g":2},{"g":3},{"g":4},{"g":5}]}"""
     val q = "SELECT g, COUNT(*) AS cnt FROM data GROUP BY g ORDER BY cnt DESC LIMIT 3"
-    val ref = refProbe(tables, q).toOption.get
-    assert(ref.length == 3 && ref.forall(_.get("cnt").asInt() == 1),
-      s"reference changed: $ref")
+    onReference {
+      val ref = refProbe(tables, q).toOption.get
+      assert(ref.length == 3 && ref.forall(_.get("cnt").asInt() == 1),
+        s"reference changed: $ref")
+    }
     // ...and graft, run at the ORIGINAL 200k scale, satisfies exactly
     // the assertions the reference test itself makes: 5 rows, cnt = 1.
     spark.range(200000).selectExpr("id AS g").createOrReplaceTempView("data")
@@ -193,7 +198,6 @@ class ReplayResidualSpec extends SparkSpec {
   }
 
   test("missing struct field: reference resolves per row to null, graft rejects at analysis") {
-    assume(nodeOk, "node not available")
     // the replay's one schema-lenient row: the reference resolves
     // object FIELDS lazily per row, so selecting an absent field
     // yields an all-null column; Spark analyzes the schema up front
@@ -202,9 +206,11 @@ class ReplayResidualSpec extends SparkSpec {
     // billion nulls). Probed live on the analog shape.
     val tables = """{"t":[{"id":1,"o":{"x":1}},{"id":2,"o":{"x":2}}]}"""
     val q = "SELECT o.y AS y FROM t"
-    val ref = refProbe(tables, q).toOption.get
-    assert(ref.length == 2 && ref.forall(r => r.get("y") == null || r.get("y").isNull),
-      s"reference changed: $ref")
+    onReference {
+      val ref = refProbe(tables, q).toOption.get
+      assert(ref.length == 2 && ref.forall(r => r.get("y") == null || r.get("y").isNull),
+        s"reference changed: $ref")
+    }
     import spark.implicits._
     spark.read.json(Seq("""{"id":1,"o":{"x":1}}""", """{"id":2,"o":{"x":2}}""").toDS())
       .createOrReplaceTempView("t")
@@ -215,7 +221,6 @@ class ReplayResidualSpec extends SparkSpec {
   }
 
   test("nested lateral UNNEST correlating two levels out: Spark scoping boundary, semantics expressible") {
-    assume(nodeOk, "node not available")
     // execute.subquery.test.js » 'should preserve the enclosing
     // correlated row inside nested lateral UNNEST': the scalar subquery
     // joins UNNEST(o.arr) where `o` is the OUTER query's row — a
@@ -228,8 +233,10 @@ class ReplayResidualSpec extends SparkSpec {
     val q = """SELECT o.arr,
       (SELECT COUNT(*) FROM t JOIN UNNEST(o.arr) AS u(x) ON TRUE) AS n
       FROM outers AS o"""
-    val ref = refProbe(tables, q).toOption.get
-    assert(ref.map(_.get("n").asInt()) == Seq(4, 2), s"reference changed: $ref")
+    onReference {
+      val ref = refProbe(tables, q).toOption.get
+      assert(ref.map(_.get("n").asInt()) == Seq(4, 2), s"reference changed: $ref")
+    }
     import spark.implicits._
     Seq((1, Seq(10, 20)), (2, Seq(30))).toDF("id", "arr")
       .createOrReplaceTempView("outers")

@@ -20,10 +20,6 @@ class SuiteReplaySpec extends SparkSpec {
 
   import com.fasterxml.jackson.databind.JsonNode
 
-  private lazy val nodeOk =
-    try new ProcessBuilder("node", "--version").start().waitFor() == 0
-    catch { case _: Exception => false }
-
   private case class Entry(
     file: String, testName: String, query: String,
     tablesJson: Option[JsonNode], hasDates: Boolean,
@@ -39,7 +35,7 @@ class SuiteReplaySpec extends SparkSpec {
     pb.redirectErrorStream(true)
     val proc = pb.start()
     val log = new String(proc.getInputStream.readAllBytes())
-    assert(proc.waitFor() == 0, s"record_ref_suite.mjs failed:\n${log.takeRight(2000)}")
+    RefCheckout.assertScriptRan("record_ref_suite.mjs", proc.waitFor(), log.takeRight(2000))
     info(log.trim.linesIterator.toSeq.lastOption.getOrElse(""))
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = om.readTree(java.nio.file.Files.readString(out))
@@ -314,7 +310,7 @@ class SuiteReplaySpec extends SparkSpec {
     ("execute.json.test.js", "should return an empty array for an empty object"))
 
   test("the reference's own test suite replays on GraftSql (recorded at test time)") {
-    assume(nodeOk, "node not available")
+    assume(RefCheckout.nodeOk, "node not available")
     assume(new java.io.File("/root/reference/test/execute").isDirectory, "reference missing")
     val entries = record()
     assert(entries.size > 900, s"suspiciously small corpus: ${entries.size}")

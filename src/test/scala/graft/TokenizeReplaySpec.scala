@@ -32,10 +32,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TokenizeReplaySpec extends AnyFunSuite {
 
-  private lazy val nodeOk =
-    try new ProcessBuilder("node", "--version").start().waitFor() == 0
-    catch { case _: Exception => false }
-
   private case class TEntry(
     testName: String, query: String,
     tokens: Seq[(String, String, Int, Int)], // (type, value, start, end)
@@ -48,7 +44,7 @@ class TokenizeReplaySpec extends AnyFunSuite {
     pb.redirectErrorStream(true)
     val proc = pb.start()
     val log = new String(proc.getInputStream.readAllBytes())
-    assert(proc.waitFor() == 0, s"record_ref_tokenize.mjs failed:\n${log.takeRight(2000)}")
+    RefCheckout.assertScriptRan("record_ref_tokenize.mjs", proc.waitFor(), log.takeRight(2000))
     info(log.trim.linesIterator.toSeq.lastOption.getOrElse(""))
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = om.readTree(java.nio.file.Files.readString(out))
@@ -87,7 +83,7 @@ class TokenizeReplaySpec extends AnyFunSuite {
     }
 
   test("every accepted tokenizer fixture segments boundary-compatibly in SqlTok") {
-    assume(nodeOk, "node unavailable")
+    assume(RefCheckout.nodeOk, "node unavailable")
     val accepted = entries.filter(_.error.isEmpty)
     assert(accepted.size >= 30, s"recorder returned only ${accepted.size} accepted fixtures")
     for (e <- accepted) {
@@ -134,7 +130,7 @@ class TokenizeReplaySpec extends AnyFunSuite {
   }
 
   test("every rejected tokenizer fixture still tokenizes positionally in SqlTok (never throws)") {
-    assume(nodeOk, "node unavailable")
+    assume(RefCheckout.nodeOk, "node unavailable")
     val rejected = entries.filter(_.error.isDefined)
     assert(rejected.size >= 25, s"recorder returned only ${rejected.size} rejected fixtures")
     for (e <- rejected) {
