@@ -11,26 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** PageRank with EXACT integer arithmetic, ranks in parts-per-million:
-    *
-    *   r_0(v)     = 1_000_000
-    *   r_{i+1}(v) = 150_000 + (850 · Σ_{u→v} (r_i(u) div outdeg(u))) div 1000
-    *
-    * i.e. damping 0.85 applied as BIGINT multiply-then-divide; every
-    * intermediate is a BIGINT, so the result is identical under ANY
-    * partitioning, partial-agg order, or engine — the property that
-    * makes a cross-engine oracle (and re-runs on 1000 executors) stable.
-    * Truncation loses < 1 ppm per hop vs the real-valued recurrence;
-    * dangling-node mass is dropped (ranks are relative quality weights
-    * here, not a probability distribution — document the contract, don't
-    * renormalize).
-    *
-    * Scale shape: per iteration ONE equi-join of ranks onto the edge
-    * list (shuffle on the join key) and one partial+final sum by dst —
-    * the standard Pregel message round expressed declaratively. `iters`
-    * is fixed and small (rank weights converge geometrically); lineage
-    * is linear in iters, no checkpoint needed at these depths.
-    */
   /** Triangle enumeration over an UNDIRECTED edge set — the clustering-
     * coefficient / community-density primitive. Input edges are
     * canonicalized to distinct `(a < b)` pairs; each triangle
@@ -68,6 +48,26 @@ object Graph {
       .join(e.as("e3"),
         col("ta") === col("e3.a") && col("tc") === col("e3.b"), "left_semi")
 
+  /** PageRank with EXACT integer arithmetic, ranks in parts-per-million:
+    *
+    *   r_0(v)     = 1_000_000
+    *   r_{i+1}(v) = 150_000 + (850 · Σ_{u→v} (r_i(u) div outdeg(u))) div 1000
+    *
+    * i.e. damping 0.85 applied as BIGINT multiply-then-divide; every
+    * intermediate is a BIGINT, so the result is identical under ANY
+    * partitioning, partial-agg order, or engine — the property that
+    * makes a cross-engine oracle (and re-runs on 1000 executors) stable.
+    * Truncation loses < 1 ppm per hop vs the real-valued recurrence;
+    * dangling-node mass is dropped (ranks are relative quality weights
+    * here, not a probability distribution — document the contract, don't
+    * renormalize).
+    *
+    * Scale shape: per iteration ONE equi-join of ranks onto the edge
+    * list (shuffle on the join key) and one partial+final sum by dst —
+    * the standard Pregel message round expressed declaratively. `iters`
+    * is fixed and small (rank weights converge geometrically); lineage
+    * is linear in iters, no checkpoint needed at these depths.
+    */
   def pageRank(edges: DataFrame, iters: Int = 5,
                src: String = "src", dst: String = "dst"): DataFrame = {
     require(iters >= 1 && iters <= 20, "iters must be in [1,20]")

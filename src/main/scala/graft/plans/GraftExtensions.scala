@@ -6,8 +6,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.spatial.SpatialExpressions
 import graft.functions.spatial.SpatialExpressions._
 
-/** Engine extension point: registers the ST_* spatial family (and future
-  * custom expressions) into Catalyst's FunctionRegistry.
+/** Engine extension point, installed in every [[graft.GraftSession]]:
+  *
+  *   - functions: the ST_* spatial family and the `graft_*` native
+  *     kernels and dialect coercions, into Catalyst's FunctionRegistry;
+  *   - optimizer rules: [[StripIdentityJsStr]] and [[StripIdentityJsNum]]
+  *     drop the dialect's coercion wrappers where they are identity;
+  *   - planner strategy: [[SingleTaskSort]] plans a global sort whose
+  *     child fits `spark.sql.autoBroadcastJoinThreshold` as one sort task
+  *     over a single-partition exchange, so no range-sampling job runs;
+  *     the query-stage preparation rule [[DropRedundantGather]] removes
+  *     that exchange where the child is already one partition.
   *
   * Install with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
   * or `.withExtensions(new GraftExtensions)`.
@@ -108,6 +117,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           args(0), args(1))))
     ext.injectOptimizerRule(_ => StripIdentityJsStr)
     ext.injectOptimizerRule(_ => StripIdentityJsNum)
+    ext.injectPlannerStrategy(_ => SingleTaskSort)
+    ext.injectQueryStagePrepRule(_ => DropRedundantGather)
   }
 }
 

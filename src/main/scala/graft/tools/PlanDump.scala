@@ -33,7 +33,7 @@ object PlanDump {
     "q_range_join" -> "range join as bucketed equi-join + residual BETWEEN — no BroadcastNestedLoop",
     "q_text_pack" -> "sequence packing: per-shard running-sum window — parallel across shards, sequential only within one",
     "q_interval_overlap" -> "interval overlap join: both sides explode to spanned buckets, equi-join + residual, pair kept only in its overlap-start bucket (no DISTINCT)",
-    "q_text_repetition" -> "repetition signals: sorted-run-length HOFs over the token array — one narrow codegen pipeline, ZERO shuffle",
+    "q_text_repetition" -> "repetition signals: sorted-run-length HOFs over the token array — one narrow codegen pipeline; the one exchange is the ordered output's",
     "q_ts_resample" -> "time-series resample: tiny per-key bounds agg, narrow grid explode, then the as-of union-merge (one shuffle + sort)",
     "q_fuzzy_join" -> "fuzzy join: char-2gram LSH band equi-join for candidates, thresholded levenshtein verify — no cross join",
     "q_sample_per_key" -> "per-key sample: TopK.perKey — WindowGroupLimit partial k-smallest pass (r16), window only over survivors",
@@ -75,7 +75,7 @@ object PlanDump {
     "q_text_dup_spans" -> "maximal dup spans: exact-gram count partial-combines, occurrences LEFT SEMI the hot duplicated set, per-doc island window, ONE join back for span text — no cartesian, no suffix array",
     "q_text_bpe_exact" -> "tokenizer-exact BPE: the nested-replace encoder runs once per DISTINCT word, occurrences take a BROADCAST dictionary join, corpus moves only into the per-doc partial+final sum",
     "q_sample_dsir" -> "DSIR importance weights: bucket stats aggregate to 128 rows + a 1-row total, log-ratios BROADCAST back onto the corpus explode — only the per-id sum shuffles",
-    "q_text_gopher" -> "Gopher rule battery: sorted-run-length + distinct-count HOFs per row — one narrow codegen pipeline, ZERO shuffle",
+    "q_text_gopher" -> "Gopher rule battery: sorted-run-length + distinct-count HOFs per row — one narrow codegen pipeline; the one exchange is the ordered output's",
     "q_ann_indexed" -> "on-disk IVF-PQ search: probe cells from a 1-row broadcast seed set, codes scan equi-joins the partition column (file pruning), broadcast LUT ADC, TopK.perKey merge",
     "q_dedup_representative" -> "cluster representatives: clusters join members once, max_by(score, ties lowest id) partial+final — no per-cluster window, no collect",
     "q_multimodal_audio" -> "audio features: typed-Dataset map through the REAL javax.sound decode — narrow, payloads never shuffle, one Exchange for the ordered output",

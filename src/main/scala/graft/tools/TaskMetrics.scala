@@ -10,14 +10,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   * `BenchSf10`). Between two [[reset]]s it counts:
   *
   *   - the WORK digest `graft.Bench` records per query: input rows/bytes,
-  *     shuffle read/write bytes, task count, peak task execution memory.
+  *     shuffle read/write bytes, task count, jobs started, peak task
+  *     execution memory.
   *     Wall time on a shared VM varies up to 2x run-to-run with zero code
   *     change; these numbers are properties of the PLAN, not the host — a
   *     query whose shuffle bytes or task count grows changed its plan (the
   *     q_funnel CTE-inlining incident, SURVEY §4, is the class of
   *     regression this catches). tools/bench_compare.py gates on them and
   *     treats wall time as advisory;
-  *   - jobs started and stages completed;
+  *   - stages completed;
   *   - per-stage task input (scan + shuffle read bytes) and failed tasks,
   *     for the scale runs' "no task 10× the median" skew check.
   *
@@ -66,7 +67,7 @@ final class TaskMetrics extends SparkListener {
   /** The work digest as one compact JSON object (stable key order). */
   def snapshotJson(): String = synchronized {
     s"""{"in_rows":$inRows,"in_bytes":$inBytes,"sh_read":$shRead,""" +
-      s""""sh_write":$shWrite,"tasks":$tasks,"peak_mem":$peakMem}"""
+      s""""sh_write":$shWrite,"tasks":$tasks,"jobs":$jobs,"peak_mem":$peakMem}"""
   }
   def tasksNow(): Long = synchronized { tasks }
   def shWriteNow(): Long = synchronized { shWrite }

@@ -17,7 +17,8 @@ PLAN: a query whose shuffle bytes or task count grows round-over-round
 changed its plan (the q_funnel CTE-inlining incident, SURVEY §4, is the
 class of regression this catches). When both sides carry work metrics,
 the exit code keys on work regressions (>10% growth in shuffle bytes or
-task count, above noise floors) and wall time is ADVISORY; without work
+task count, above noise floors; ANY growth in a query's Spark jobs, where
+both sides record them) and wall time is ADVISORY; without work
 on both sides it falls back to the old wall-time gate (default noise
 factor 2.5 — a flag means "re-run and look", not "proven regression").
 """
@@ -84,7 +85,12 @@ def load(path):
 
 
 def work_regressions(base_work, cur_work):
-    """Queries whose shuffle bytes or task count grew >10% above floors.
+    """Queries whose shuffle bytes or task count grew >10% above floors,
+    or whose job count grew at all. Jobs are a fixed cost per query at
+    bench scale (a range-sampling job re-runs the sort's child) and a
+    count, not a timing, so there is no floor and no tolerance: a query
+    whose count moves between identical runs is a defect to fix. Digests
+    written before jobs were recorded carry no "jobs" key and skip it.
     Returns [(query, metric, base, cur, ratio)]."""
     out = []
     for q in sorted(set(base_work) & set(cur_work)):
@@ -96,6 +102,9 @@ def work_regressions(base_work, cur_work):
         b_t, c_t = int(b.get("tasks", 0)), int(c.get("tasks", 0))
         if c_t > max(b_t, TASK_FLOOR) * WORK_GROWTH:
             out.append((q, "tasks", b_t, c_t, c_t / max(b_t, 1)))
+        if "jobs" in b and "jobs" in c and int(c["jobs"]) > int(b["jobs"]):
+            b_j, c_j = int(b["jobs"]), int(c["jobs"])
+            out.append((q, "jobs", b_j, c_j, c_j / max(b_j, 1)))
     return out
 
 
@@ -137,7 +146,7 @@ def main():
     if have_work:
         print(f"\nwork gate ({len(set(base_work) & set(cur_work))} queries with "
               f"metrics on both sides; >{(WORK_GROWTH-1)*100:.0f}% growth in "
-              f"shuffle bytes or task count flags):")
+              f"shuffle bytes or task count, or any growth in jobs, flags):")
         if wr:
             print(f"{len(wr)} WORK regressions — the plan changed, this is not host noise:")
             for q, metric, b, c, ratio in wr:

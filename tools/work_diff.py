@@ -12,7 +12,8 @@ attached, but they don't fail the verdict — "pass (N intended)". An
 not linger).
 
 Diffs the per-query WORK metrics (input rows/bytes, shuffle read/write,
-task count, peak task memory — plan properties, immune to host noise)
+task count, jobs, peak task memory — plan properties, immune to host
+noise)
 between two BENCH_FULL.json files and writes a machine-readable verdict
 so the driver/judge can read the gate's result without re-deriving it:
 
@@ -21,7 +22,7 @@ so the driver/judge can read the gate's result without re-deriving it:
                 "ratio": …}, …],          # explicit [] when clean
    "verdict": "pass" | "fail",
    "thresholds": {"growth": 1.10, "shuffle_floor_bytes": 1048576,
-                  "task_floor": 16}}
+                  "task_floor": 16, "jobs": "any growth"}}
 
 Exit code 1 on "fail" so shell pipelines can gate on it directly.
 """
@@ -74,7 +75,8 @@ def main():
                     f"pass ({n_intended} intended)" if n_intended else "pass"),
         "thresholds": {"growth": WORK_GROWTH,
                        "shuffle_floor_bytes": SHUFFLE_FLOOR,
-                       "task_floor": TASK_FLOOR},
+                       "task_floor": TASK_FLOOR,
+                       "jobs": "any growth"},
     }
     with open(out_path, "w") as f:
         json.dump(out, f, indent=1, sort_keys=False)
