@@ -24,20 +24,21 @@ object Graph {
     */
   def triangles(edges: DataFrame, src: String = "src",
                 dst: String = "dst"): DataFrame =
-    trianglesCanonical(canonicalEdges(edges, src, dst))
+    trianglesCanonical(Caches.track(canonicalEdges(edges, src, dst)))
 
   /** The canonical undirected edge set — distinct `(a < b)` pairs,
-    * self-loops dropped, PERSISTED through [[Caches.track]] (it feeds
-    * three join sides in [[trianglesCanonical]], and callers computing
-    * node/edge stats alongside should reuse this one frame instead of
-    * re-canonicalizing; [[Caches.unpersistAll]] releases it).
+    * self-loops dropped. Not persisted: a caller that reads it more than
+    * once (the three join sides of [[trianglesCanonical]], node/edge
+    * stats alongside) persists it through [[Caches.track]]; a single
+    * reader such as [[Dedup.duplicateClusters]], which persists its own
+    * input, would only pay for a second cache.
     */
   def canonicalEdges(edges: DataFrame, src: String = "src",
                      dst: String = "dst"): DataFrame =
-    Caches.track(edges
+    edges
       .selectExpr(s"least($src, $dst) AS a", s"greatest($src, $dst) AS b")
       .filter(col("a") =!= col("b"))
-      .distinct())
+      .distinct()
 
   /** [[triangles]] over an ALREADY-canonical `(a, b)` edge frame (from
     * [[canonicalEdges]]) — each triangle `a < b < c` exactly once.

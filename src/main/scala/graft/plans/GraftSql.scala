@@ -5,108 +5,47 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Dialect front-end: accepts the reference engine's SQL dialect
   * (DuckDB/Postgres-flavored SELECT-only — reference: src/parse, syntax.md)
-  * and executes it on Spark by rewriting the handful of constructs Spark
-  * SQL doesn't share, then handing the parsed plan to Catalyst.
+  * and runs it on Spark, translating it in two halves:
   *
-  * Spark already covers most of the dialect natively (ILIKE,
-  * POSITION(x IN y), `::` casts, `||` concat, LIMIT/OFFSET, FILTER
-  * (WHERE ...), QUALIFY-free window queries, lambda-free arrays), so the
-  * rewrite list is deliberately small and token-based — a full parser
-  * would duplicate what Catalyst does better.
-  *
-  * Rewrites:
-  *  - JSON arrows: `x -> 'k'` / `x ->> 'k'` / `x -> i` (chainable) to
-  *    `get_json_object` paths — skipped inside higher-order-function
-  *    lambdas (`list_transform(xs, x -> 'p' || x)` is left alone).
-  *  - `SELECT DISTINCT ON (k) ...` → row_number window + `__rn = 1`.
-  *  - `struct_pack(k := v)` → `named_struct('k', v)`; `struct_extract`.
-  *  - `json_group_array` / `json_group_object` aggregates.
-  *  - `x GLOB 'pat'` → `x RLIKE '^…$'` (glob→regex on the literal).
-  *  - `TYPEOF` → DuckDB-style type names over Spark `typeof`.
-  *  - Function renames: string_split/str_split → split, strlen →
-  *    octet_length, list_* → array_*, `list(x)` → collect_list,
-  *    regexp_split_to_array → split, regexp_split_to_table →
-  *    explode(split(..)), charindex → position, to_timestamp →
-  *    timestamp_seconds, strftime → %-format helper, json_query →
-  *    get_json_object, regexp_matches → RLIKE, epoch(x) → unix seconds.
+  *  - text passes ([[rewrite]]) for what Spark's parser cannot read or
+  *    would misread: FROM-first statements, set-op arm tails, bracket
+  *    array literals and subscripts, POSITIONAL JOIN, DISTINCT ON, comma
+  *    table functions, select-alias expansion, NOT IN, zero divisors,
+  *    JSON arrows, `struct_pack(k := v)`, TYPEOF, CAST (VARCHAR/TEXT
+  *    targets do not parse), LIKE → ILIKE, GLOB, CURRENT_TIME, TIMESTAMP
+  *    literals, INTERVAL arithmetic, unit-form date_diff, the `~`/`!~`
+  *    operators, `* EXCLUDE`, `||`/ILIKE operand coercion, window ORDER
+  *    BY injection and bare-DESC null ordering;
+  *  - every other function call (renames, JS value coercions, literal
+  *    argument guards, the DISTINCT/FILTER-aware aggregates, EXTRACT
+  *    fields) in one transform on the parsed plan,
+  *    [[graft.plans.rewrite.PlanCalls]], which [[prepare]] runs before
+  *    its checks and the analysis.
   */
 object GraftSql {
 
   // ALL quote/paren/comment classification lives in the shared lexer —
-  // every rewrite pass consumes its token stream (SqlTok.View); the
-  // only character-level helpers left are fragment utilities
-  // (splitTopLevel over an extracted argument list, matchParen for
-  // unwrapping one extracted primary, stripComments as the pipeline's
-  // first pass). No pass keeps a private scanner (the per-rewrite
-  // guard stacks produced the alias-after-paren wrong-rows bugs of
-  // rounds 11-12).
-  import SqlTok.{matchParen, splitTopLevel, stripComments}
+  // every text pass consumes its token stream (SqlTok.View); no pass
+  // keeps a private scanner (the per-rewrite guard stacks produced the
+  // alias-after-paren wrong-rows bugs of rounds 11-12).
+  import SqlTok.stripComments
 
-  // the rewrite passes live in per-pass modules on the shared SqlTok
-  // substrate (plans/rewrite/); this object keeps the ordered pipeline
-  // (rewriteImpl is THE one statement of pass order) and the
-  // host API. Each call-rewrite pass (rewriteCall/rewriteAggFilter)
-  // rewrites every site once, arguments first, never its own output, so
-  // a builder emits its target name directly; a pass sees only what
-  // EARLIER passes emitted, and that ordering is what the comments on
-  // the passes below pin.
+  // the text passes live in per-pass modules on the shared SqlTok
+  // substrate (plans/rewrite/); this object keeps their ordered pipeline
+  // (rewriteImpl is THE one statement of pass order) and the host API.
+  // A pass stays text only where Spark's parser cannot read its input or
+  // would misread it, or where a later text pass emits the name it
+  // matches (TYPEOF); each call-shaped one says why at the pass. Every
+  // call Spark parses is translated after parsing, by PlanCalls.
   import _root_.graft.plans.rewrite.RewriteSupport._
   import _root_.graft.plans.rewrite.SkeletonPasses._
   import _root_.graft.plans.rewrite.JsCoercionPasses._
   import _root_.graft.plans.rewrite.IntervalPasses._
+  import _root_.graft.plans.rewrite.PlanCalls
 
-  private val renames: Seq[(String, String)] = Seq(
-    // string_split / str_split rewrite in rewrite() (literal-delimiter
-    // semantics need regex quoting, not a bare rename)
-    "regexp_split_to_array" -> "split",
-    "strlen" -> "octet_length",
-    "list_value" -> "array",
-    // the array family dispatches at RUNTIME in the reference — NULL
-    // for any non-array input (evaluate.js:596-635) — where Spark's
-    // builtins reject at analysis; the graft_array_* expressions match
-    "list_contains" -> "graft_array_contains",
-    "array_contains" -> "graft_array_contains",
-    "list_distinct" -> "array_distinct",
-    "list_sort" -> "graft_array_sort",
-    "array_sort" -> "graft_array_sort",
-    "list_append" -> "graft_array_append",
-    "array_append" -> "graft_array_append",
-    "list_concat" -> "graft_array_concat",
-    "list_transform" -> "transform",
-    "list_filter" -> "filter",
-    "list" -> "collect_list",
-    // LEN/SIZE/CARDINALITY/LIST_LENGTH: array length with RUNTIME type
-    // dispatch — NULL for any non-array (evaluate.js:574-595), where
-    // Spark's size rejects non-arrays at analysis. graft_size matches.
-    "list_length" -> "graft_size",
-    "len" -> "graft_size",
-    "size" -> "graft_size",
-    "cardinality" -> "graft_size",
-    "unnest" -> "explode",
-    "countif" -> "count_if",
-    "charindex" -> "position",
-    "to_timestamp" -> "timestamp_seconds",
-    "strftime" -> "graft_strftime",
-    // json_query/json_value/json_extract_string rewrite with PATH
-    // normalization in rewriteImpl (plain renames left unanchored
-    // paths silently NULL — registry-sweep finding)
-    "array_to_string" -> "array_join",
-    "list_min" -> "array_min",
-    "list_max" -> "array_max",
-    // reference STRPOS(string, search) = str.indexOf(search)+1
-    // (reference: src/expression/strings.js:172) — Spark has no strpos;
-    // instr has the SAME argument order. (position is handled as a
-    // 2-arg rewrite below: Spark's position(substr, str) is REVERSED.)
-    "strpos" -> "instr",
-    // reference ARRAY_CONCAT(a, b) (src/expression/evaluate.js:616)
-    // is NULL for any non-array side — never string concatenation
-    "array_concat" -> "graft_array_concat",
-    "ord" -> "ascii",
-    // epoch(x) → seconds since epoch as double (nothing downstream
-    // treats epoch( specially, so the rename can ride the final pass)
-    "epoch" -> "graft_epoch")
-
-  /** Rewrite one squirreling-dialect statement into Spark SQL. */
+  /** The text half of the translation: one squirreling-dialect
+    * statement as text Spark's parser reads. Function calls are left as
+    * written; the host entry points translate them on the parsed plan. */
   def rewrite(sqlText: String): String = rewriteImpl(sqlText, notInExists = true)
 
   private def rewriteImpl(sqlText: String, notInExists: Boolean): String = {
@@ -150,40 +89,6 @@ object GraftSql {
     // zero-divisor guards next, on the user's own text (later rewrites
     // may duplicate subexpressions — guard divisions before that)
     s = rewriteZeroDivisors(s)
-    // MOD(a, b) with b = 0: NaN in the reference (null-serialized);
-    // try_mod is Spark's exact lenient form
-    s = rewriteCall(s, "mod", args =>
-      if (args.length == 2) s"try_mod(${args(0)}, ${args(1)})"
-      else s"try_mod(${args.mkString(", ")})")
-
-    // LATERAL VIEW JSON_EACH / scalar-position json_each: the map
-    // explode spelled directly (LATERAL VIEW explode(...) t AS k, v
-    // is native Spark)
-    // JSON_EACH handles objects (key = field name) AND arrays (key =
-    // index; reference test/execute/execute.json.test.js:636). The
-    // object parse wins when non-null; otherwise the array parse
-    // builds an index→element map. One Spark column forces STRING keys
-    // for arrays where the reference's are numeric — the differential
-    // jsonBridge treats '0' ≡ 0, and hosts read keys positionally.
-    s = rewriteCall(s, "json_each", args => {
-      // a LITERAL scalar argument ('42', 'true') is statically visible
-      // and the reference throws at execution (JSON_EACH(value):
-      // argument must be a JSON object or array) — match that; data
-      // columns stay lenient like the rest of the JSON family
-      val scalarErr =
-        if (args.length == 1) jsonEachScalarErr(args.head) else None
-      if (scalarErr.isDefined)
-        "explode(map_from_entries(array(struct(CAST(raise_error(" +
-          s"'${scalarErr.get}') AS STRING), 'x'))))"
-      else {
-        // typed (struct/array) input renders to JSON text first — the
-        // reference's JSON family takes strings OR typed values directly
-        val x = s"graft_json_input(${args.mkString(", ")})"
-        s"explode(coalesce(from_json($x, 'map<string,string>'), " +
-          s"map_from_entries(transform(from_json($x, 'array<string>'), " +
-          s"(e, i) -> struct(cast(i AS string), e)))))"
-      }
-    })
 
     // ->> / -> json access chains (j -> 'a' ->> 0 ...) collapse into ONE
     // get_json_object with a combined path — both more efficient (one
@@ -230,7 +135,8 @@ object GraftSql {
       edits.result()
     }
 
-    // struct_pack(k := v, ...) → named_struct('k', v, ...)
+    // struct_pack(k := v, ...) → named_struct('k', v, ...): text, as
+    // Spark's parser cannot read `k := v`
     s = rewriteCall(s, "struct_pack", args => {
       val kv = args.map { a =>
         val parts = a.split(":=", 2)
@@ -239,46 +145,11 @@ object GraftSql {
       s"named_struct(${kv.mkString(", ")})"
     })
 
-    // struct_extract(st, 'k') → (st).k  (literal keys — the dialect form)
-    s = rewriteCall(s, "struct_extract", args =>
-      if (args.length == 2 && args(1).startsWith("'") && args(1).endsWith("'"))
-        s"(${args(0)}).${args(1).stripPrefix("'").stripSuffix("'")}"
-      else s"struct_extract_unsupported(${args.mkString(", ")})")
-
-    // Null-KEEPING array aggregation: the reference's ARRAY_AGG / LIST /
-    // JSON_ARRAYAGG keep null inputs in place (JS array push —
-    // execute.aggregate tests "should include nulls"); Spark's array_agg
-    // drops them. Values ride inside a struct (never null) and unwrap
-    // after; a trailing FILTER clause folds into the inner aggregate
-    // (to_json/transform reject a FILTER suffix).
-    // DISTINCT distributes over the struct wrap (distinct structs =
-    // distinct values, nulls kept).
-    def nullKeepAgg(arg: String, filt: Option[String]): String = {
-      val dist = raw"(?is)^\s*DISTINCT\b(.*)$$".r
-      val (kw, x) = arg match {
-        case dist(e) => ("DISTINCT ", e.trim)
-        case e => ("", e)
-      }
-      s"transform(array_agg(${kw}struct(($x) AS __v))${filt.map(" FILTER " + _).getOrElse("")}, s -> s.__v)"
-    }
-    for ((f, sparkName) <- Seq("array_agg" -> "array_agg", "list" -> "collect_list"))
-      s = rewriteAggFilter(s, f, (args, filt) =>
-        if (args.length == 1) nullKeepAgg(args.head, filt)
-        else s"$sparkName(${args.mkString(", ")})${filt.map(" FILTER " + _).getOrElse("")}")
-    // after the array_agg pass, which would otherwise wrap the
-    // array_agg this one emits
-    for (f <- Seq("json_group_array", "json_arrayagg"))
-      s = rewriteAggFilter(s, f, (args, filt) =>
-        s"to_json(${nullKeepAgg(args.mkString(", "), filt)})")
-    s = rewriteCall(s, "json_group_object", args =>
-      if (args.length == 2)
-        s"to_json(map_from_arrays(collect_list(${args(0)}), collect_list(${args(1)})))"
-      else s"json_group_object_unsupported(${args.mkString(", ")})")
-
     // TYPEOF → DuckDB-style names over Spark typeof (the doubled
     // upper(typeof(..)) is free — typeof is foldable, so Catalyst
-    // constant-folds it at analysis time). Runs before the cast, JSON
-    // and octet passes, whose type guards emit Spark typeof unrenamed.
+    // constant-folds it at analysis time). Text, before the cast and
+    // interval passes: they emit Spark typeof, which a later pass could
+    // not tell apart (qualified system.builtin.typeof does not resolve).
     s = rewriteCall(s, "typeof", args => {
       val t = s"upper(typeof(${args.mkString(", ")}))"
       s"(CASE $t WHEN 'STRING' THEN 'VARCHAR' WHEN 'INT' THEN 'INTEGER' ELSE $t END)"
@@ -292,7 +163,8 @@ object GraftSql {
     // reproduces all three behaviors: exact when the input already fits
     // (the bigint shortcut), truncation-through-double for numeric
     // strings (including the reference's inherent >2^53 precision loss),
-    // null for garbage. Non-numeric targets keep ANSI semantics.
+    // null for garbage. Non-numeric targets keep ANSI semantics. Text:
+    // Spark's parser rejects CAST(x AS VARCHAR) and CAST(x AS TEXT).
     def lenientNum(e: String, tgt: String): String = {
       // JS Number('') = 0 — a blank string casts to ZERO, not null
       val blankZero = s"CASE WHEN trim(($e)) = '' THEN try_cast(0 AS $tgt) END"
@@ -331,238 +203,6 @@ object GraftSql {
         }
       } else s"cast(${args.mkString(", ")})")
 
-    // CONCAT / STRING_AGG stringify their arguments with JS String(v)
-    // (strings.js CONCAT, evaluate.js:371 STRING_AGG): doubles render
-    // "2" not "2.0", and STRING_AGG accepts numeric input Spark's
-    // string-typed listagg would reject. Wrapping in graft_js_str fixes
-    // both (no-op on strings, null-propagating). Runs BEFORE renames so
-    // array_concat/list_concat → concat stays untouched array concat.
-    s = rewriteCall(s, "concat", args =>
-      s"concat(${args.map(a => s"graft_js_str($a)").mkString(", ")})")
-    s = rewriteCall(s, "string_agg", args =>
-      if (args.length == 2) {
-        val dist = raw"(?is)^DISTINCT\s+(.*)$$".r
-        args(0) match {
-          case dist(e) => s"string_agg(DISTINCT graft_js_str($e), ${args(1)})"
-          case e => s"string_agg(graft_js_str($e), ${args(1)})"
-        }
-      } else s"string_agg(${args.mkString(", ")})")
-
-    // JSON inspection family (reference: src/expression/evaluate.js:502-700).
-    // JSON_VALID parse-checks a string with WHOLE-INPUT strictness:
-    // Spark's try_parse_json accepts '"a":{...}' (parses the leading
-    // scalar, ignores trailing garbage) where JSON.parse rejects — so
-    // this one goes through the strict helper, not the variant parser
-    // JSON_VALID is FALSE for any non-string input (numbers, objects —
-    // execute.json "should return false for non-string input"), so it
-    // does NOT take the graft_json_input coercion the rest of the
-    // family uses — graft_json_valid_any dispatches on the runtime type
-    s = rewriteCall(s, "json_valid", args =>
-      s"graft_json_valid_any(${args.mkString(", ")})")
-    // JSON_TYPE: typeof of the PARSED value; invalid JSON errors in both
-    // engines (hence parse_json, not try_parse_json — the reference
-    // throws ArgValueError there)
-    s = rewriteCall(s, "json_type", args => {
-      val a = s"graft_json_input(${args.head})"
-      val sv = s"schema_of_variant(parse_json($a))"
-      s"(CASE WHEN ($a) IS NULL THEN NULL " +
-        s"WHEN $sv LIKE 'OBJECT%' THEN 'object' " +
-        s"WHEN $sv LIKE 'ARRAY%' THEN 'array' " +
-        s"WHEN $sv = 'STRING' THEN 'string' " +
-        s"WHEN $sv = 'BOOLEAN' THEN 'boolean' " +
-        s"WHEN $sv = 'VOID' THEN 'null' ELSE 'number' END)"
-    })
-    // JSON_KEYS: object keys in document order; null on non-objects
-    s = rewriteCall(s, "json_keys", args =>
-      s"json_object_keys(graft_json_input(${args.mkString(", ")}))")
-    s = rewriteCall(s, "json_array_length", args =>
-      s"json_array_length(graft_json_input(${args.mkString(", ")}))")
-    // JSON_OBJECT(k1, v1, ...): keep null-valued fields ({"k":null}),
-    // as the reference's JSON.stringify does. Literal keys (incl.
-    // numeric — JS object keys stringify) go through named_struct;
-    // DYNAMIC keys (column references) need map(), since named_struct
-    // requires foldable names.
-    s = rewriteCall(s, "json_object", args => {
-      val lit = args.grouped(2).forall(p => p.headOption.exists(k =>
-        k.trim.matches("'[^']*'") || k.trim.matches("[0-9.]+")))
-      if (lit) {
-        val quoted = args.zipWithIndex.map { case (a, i) =>
-          if (i % 2 == 0 && a.trim.matches("[0-9.]+")) s"'${a.trim}'" else a }
-        s"to_json(named_struct(${quoted.mkString(", ")}), map('ignoreNullFields', 'false'))"
-      } else
-        s"to_json(map(${args.grouped(2).map(p =>
-          s"graft_js_str(${p.head}), ${p.last}").mkString(", ")}), " +
-          "map('ignoreNullFields', 'false'))"
-    })
-    // JSON_EXTRACT(j, path): get_json_object requires the $ anchor the
-    // reference treats as optional — normalize literal paths
-    // unanchored-path normalization, shared by the whole JSON access
-    // family: the reference accepts 'a' / 'a.b' / '[0]' paths, Spark's
-    // get_json_object needs the '$.' anchor (an unanchored path is
-    // silently NULL — the registry sweep caught JSON_VALUE/JSON_QUERY
-    // passing paths through unanchored via their old plain renames)
-    def normJsonPath(p: String): String =
-      if (p.startsWith("'") && p.endsWith("'") && !p.startsWith("'$")) {
-        val body = p.substring(1, p.length - 1)
-        val anchored = if (body.startsWith("[")) s"$$$body" else s"$$.$body"
-        s"'$anchored'"
-      } else p
-    // first-argument TYPE strictness (round-13 replay-corner closure):
-    // a statically numeric/boolean input raises at execution like the
-    // reference's "must be JSON string or object" row-1 throw; see
-    // jsonStrictInput — the guard folds away for every allowed type
-    for (f <- Seq("json_extract", "json_value", "json_query", "json_extract_string"))
-      s = rewriteCall(s, f, args =>
-        if (args.length == 2)
-          s"get_json_object(${jsonStrictInput(f, args(0))}, ${normJsonPath(args(1))})"
-        else s"${f}_unsupported(${args.mkString(", ")})")
-
-    // OCTET_LENGTH is string-STRICT in the reference (strings.js:49-56:
-    // number/date/object inputs throw) — type-dispatch guard, folds
-    // away for string inputs (round-13 replay-corner closure). strlen
-    // renames to octet_length only at the very end, so it gets the same
-    // guard under its own name here.
-    s = rewriteCall(s, "octet_length", args =>
-      if (args.length == 1) s"octet_length(${octetStrict(args.head)})"
-      else s"octet_length(${args.mkString(", ")})")
-    s = rewriteCall(s, "strlen", args =>
-      if (args.length == 1) s"strlen(${octetStrict(args.head)})"
-      else s"strlen(${args.mkString(", ")})")
-
-    // regexp_split_to_table(x, p) → explode(split(x, p))
-    s = rewriteCall(s, "regexp_split_to_table", args =>
-      s"explode(split(${args.mkString(", ")}))")
-
-    // Comma-form POSITION(string, search): the reference returns
-    // str.indexOf(search)+1 (src/expression/strings.js:172-176) — Spark's
-    // position(substr, str) takes the arguments REVERSED, so map to
-    // instr, whose order matches. The SQL-standard POSITION(x IN y) form
-    // has no top-level comma (one "arg") and passes through to Spark,
-    // whose IN-form semantics already agree.
-    s = rewriteCall(s, "position", args =>
-      if (args.length == 2) s"instr(${args(0)}, ${args(1)})"
-      else s"position(${args.mkString(", ")})")
-
-    // ARRAY_LENGTH(arr[, dim]): Spark has no array_length; graft_size
-    // covers the 1-dimensional form, graft_size_dim the reference's
-    // dimensional walk (dim ≥ 1 integer, each level rectangular —
-    // evaluate.js:577-592; NULL otherwise)
-    s = rewriteCall(s, "array_length", args =>
-      if (args.length == 1 || (args.length == 2 && args(1).trim == "1"))
-        s"graft_size(${args(0)})"
-      else if (args.length == 2)
-        s"graft_size_dim(${args(0)}, ${args(1)})"
-      else s"array_length_bad_arity(${args.mkString(", ")})")
-
-    // LENGTH: characters for a string, element count for an ARRAY —
-    // runtime dispatch (strings.js:38-45); Spark's length rejects
-    // arrays at analysis. OCTET_LENGTH stays strict (string-only).
-    s = rewriteCall(s, "length", args =>
-      if (args.length == 1) s"graft_length(${args.head})"
-      else s"length(${args.mkString(", ")})")
-
-    // ARRAY_POSITION / LIST_POSITION return NULL when absent in the
-    // reference (src/expression/evaluate.js:597-601, indexOf+1 with -1
-    // → null) and NULL for non-array input — graft_array_position is
-    // both in one runtime-dispatch expression
-    for (f <- Seq("array_position", "list_position"))
-      s = rewriteCall(s, f, args =>
-        s"graft_array_position(${args.mkString(", ")})")
-
-    // ROUND is FLOAT-SCALED in the reference: Math.round(x·10^d)/10^d
-    // (src/expression/math.js:56-60) — half rounds toward +∞
-    // (round(-588.45, 1) = -588.4) and the scaled double's
-    // representation decides edge cases (round(2.675, 2) = 2.67, not
-    // Spark's decimal-string 2.68). Found by the deep differential fuzz
-    // audit (GRAFT_FUZZ_N=2000). ECMA Math.round is NOT floor(y + 0.5):
-    // the addition can pick up IEEE rounding error exactly at the half
-    // boundary (Math.round(0.49999999999999994) = 0, floor-form 1), so
-    // the half-up step compares the exact fraction y - floor(y)
-    // instead. |y| ≥ 2^52 is already integral (and floor→LONG would
-    // overflow ANSI beyond 2^63) — those pass through untouched, as do
-    // NaN (NOT(abs < 2^52) catches it) and ±Infinity. Result is DOUBLE
-    // in all branches, the JS number type. A NULL decimals arg is
-    // Number(null) = 0 in the reference (multiplier 1), hence coalesce.
-    def jsRound(y: String): String =
-      s"(CASE WHEN NOT (abs($y) < 4.503599627370496E15D) THEN CAST($y AS DOUBLE) " +
-        s"WHEN CAST($y AS DOUBLE) - CAST(floor($y) AS DOUBLE) >= 0.5D " +
-        s"THEN CAST(floor($y) AS DOUBLE) + 1.0D " +
-        s"ELSE CAST(floor($y) AS DOUBLE) END)"
-    s = rewriteCall(s, "round", args =>
-      if (args.length == 2) {
-        val mult = s"power(10, coalesce(${args(1)}, 0))"
-        s"(${jsRound(s"((${args(0)}) * $mult)")} / $mult)"
-      } else if (args.length == 1) jsRound(s"(${args(0)})")
-      else s"round(${args.mkString(", ")})")
-
-    // PERCENTILE_CONT(fraction, expr): reference argument order
-    // (src/validation/functions.js PERCENTILE_CONT) with exact linear
-    // interpolation — Spark's exact-interpolating spelling is
-    // percentile(expr, fraction). APPROX_QUANTILE(expr, fraction) is
-    // computed EXACTLY by the reference (same code path,
-    // src/expression/evaluate.js:314-350), so it maps to percentile too.
-    s = rewriteCall(s, "percentile_cont", args =>
-      if (args.length == 2) s"percentile(${args(1)}, ${args(0)})"
-      else s"percentile_cont(${args.mkString(", ")})")
-    s = rewriteCall(s, "approx_quantile", args =>
-      if (args.length == 2) s"percentile(${args(0)}, ${args(1)})"
-      else s"approx_quantile(${args.mkString(", ")})")
-
-    // SUM/AVG fold JS `Number(value)` and keep only FINITE results
-    // (src/execute/accumulator.js:60-67): a string column accumulates
-    // its numeric-looking cells ('10' → 10, '' → 0) and skips the rest
-    // ('abc' → NaN), never an ANSI cast error. graft_js_num applies
-    // that coercion for string/boolean children and is identity on
-    // numeric ones, where StripIdentityJsNum removes it at optimization
-    // time — typed columns keep native codegen'd aggregation.
-    for (f <- Seq("sum", "avg"))
-      s = rewriteCall(s, f, args =>
-        // SUM(*)/AVG(*) must stay invalid on both engines — wrapping
-        // would let Spark's star expansion accept what the reference's
-        // validator rejects
-        if (args.length == 1 && args.head.trim != "*") {
-          val a = args.head.trim
-          // the set quantifier stays OUTSIDE the wrap, in every spelling:
-          // DISTINCT x, DISTINCT(x), DISTINCT<tab>x, ALL x
-          val quant = raw"(?is)^(DISTINCT|ALL)\b\s*(.*)$$".r
-          val (pre, core) = a match {
-            case quant(q, rest) => (q + " ", rest)
-            case _ => ("", a)
-          }
-          s"$f(${pre}graft_js_num($core))"
-        } else s"$f(${args.mkString(", ")})")
-
-    // list_slice(l, a, b) [1-based inclusive ends] → slice(l, a, b - a + 1)
-    s = rewriteCall(s, "list_slice", args =>
-      if (args.length == 3)
-        s"slice(${args(0)}, ${args(1)}, (${args(2)}) - (${args(1)}) + 1)"
-      else s"list_slice_unsupported(${args.mkString(", ")})")
-
-    // DAYOFWEEK / WEEKDAY: reference maps both to date_part('dow') —
-    // Sunday=0 (syntax.md item 13); Spark's dayofweek is Sunday=1
-    for (f <- Seq("dayofweek", "weekday"))
-      s = rewriteCall(s, f, args => s"(dayofweek(${args.mkString(", ")}) - 1)")
-
-    // DATE_PART('dow', x) / EXTRACT(DOW FROM x) themselves: Spark's DOW
-    // field is Sunday=1..Saturday=7, the reference's (and DuckDB's) is
-    // Sunday=0 (src/expression/date.js:96 getUTCDay) — found by the
-    // deep differential fuzz, the same off-by-one the function forms
-    // above already fixed
-    s = rewriteCall(s, "date_part", args =>
-      if (args.length == 2 && args(0).trim.toLowerCase(java.util.Locale.ROOT).matches("'dow'"))
-        s"(dayofweek(${args(1)}) - 1)"
-      else s"date_part(${args.mkString(", ")})")
-    // `EXTRACT ( DOW FROM` collapses to a marker call head, so the call
-    // walker finds the remaining argument's close paren
-    s = tokenEdit(s) { v =>
-      val t = v.toks
-      t.indices.collect {
-        case k if v.at(k, "EXTRACT", "(", "DOW", "FROM") =>
-          (t(k).start, t(k + 3).end, "__exdow__(")
-      }
-    }
-    s = rewriteCall(s, "__exdow__", args => s"(dayofweek(${args.mkString(", ")}) - 1)")
-
     // LIKE is CASE-INSENSITIVE in the reference dialect — its evaluator
     // compiles the pattern with the `i` regex flag (reference:
     // src/expression/binary.js:57-65) — so dialect LIKE maps to Spark
@@ -580,24 +220,6 @@ object GraftSql {
           (v.toks(k).start, v.toks(k + 1).end, s"RLIKE '${globToRegex(pat)}'")
       }
     }
-
-    // EXTRACT(EPOCH FROM x) / EXTRACT(SECOND FROM x): Spark has no
-    // EPOCH field, and its SECOND carries the fraction as DECIMAL where
-    // the reference floors to INTEGER seconds (date.js getUTCSeconds) —
-    // `EXTRACT ( <field> FROM` collapses to a marker call over the
-    // remaining argument; epoch(x) itself renames at the end
-    s = tokenEdit(s) { v =>
-      val t = v.toks
-      t.indices.collect {
-        case k if v.at(k, "EXTRACT", "(") && v.at(k + 3, "FROM") &&
-            (t(k + 2).is("EPOCH") || t(k + 2).is("SECOND") || t(k + 2).is("SECONDS")) =>
-          val marker = if (t(k + 2).is("EPOCH")) "__exepoch__(" else "__exsec__("
-          (t(k).start, t(k + 3).end, marker)
-      }
-    }
-    s = rewriteCall(s, "__exepoch__", args => s"graft_epoch(${args.mkString(", ")})")
-    s = rewriteCall(s, "__exsec__", args =>
-      s"floor(extract(second from ${args.mkString(", ")}))")
 
     // CURRENT_TIME: Spark 4 has no TIME type — the reference renders
     // HH:MM:SS.sss text (date.js), which date_format reproduces.
@@ -672,11 +294,6 @@ object GraftSql {
       }
     }
 
-    // regexp_replace(..., 'g'): Spark replaces globally by default
-    s = rewriteCall(s, "regexp_replace", args =>
-      s"regexp_replace(${(if (args.nonEmpty &&
-        args.last.equalsIgnoreCase("'g'")) args.init else args).mkString(", ")})")
-
     // DuckDB SELECT * EXCLUDE (...) → Spark SELECT * EXCEPT (...)
     s = tokenEdit(s) { v =>
       val t = v.toks
@@ -687,223 +304,10 @@ object GraftSql {
       }
     }
 
-    // Statically-visible invalid arguments throw at EXECUTION like the
-    // reference (regexp.js:29-47,115-130 position/occurrence guards;
-    // strings.js:122,137 LEFT/RIGHT length): a LITERAL that violates
-    // the guard rewrites to raise_error, so both engines reject the
-    // query at run time (and both accept it over an empty table —
-    // raise_error is per-row, like the reference's row-0 throw).
-    // Non-literal args stay on the lenient path: per-row validation of
-    // DATA columns is exactly what a 100 TB scan must not do.
-    locally {
-      def intLit(a: String): Option[Long] = {
-        val t = a.trim
-        if (t.matches("[+-]?\\d+")) Some(t.toLong) else None
-      }
-      def bad(f: String, what: String, got: String): String =
-        s"raise_error('$f: $what, got ${got.trim.replace("'", "")}')"
-      for (f <- Seq("left", "right"))
-        s = rewriteCall(s, f, args =>
-          if (args.length == 2 && intLit(args(1)).exists(_ < 0))
-            bad(f.toUpperCase(java.util.Locale.ROOT), "length must be a non-negative integer", args(1))
-          else s"$f(${args.mkString(", ")})")
-      for (f <- Seq("regexp_extract", "regexp_substr"))
-        s = rewriteCall(s, f, args =>
-          if (args.length >= 3 && intLit(args(2)).exists(_ < 1))
-            bad(f.toUpperCase(java.util.Locale.ROOT), "position must be a positive integer", args(2))
-          else if (args.length == 4 && intLit(args(3)).exists(_ < 1))
-            bad(f.toUpperCase(java.util.Locale.ROOT), "occurrence must be a positive integer", args(3))
-          else s"$f(${args.mkString(", ")})")
-      s = rewriteCall(s, "regexp_replace", args =>
-        if (args.length >= 4 && intLit(args(3)).exists(_ < 1))
-          bad("REGEXP_REPLACE", "position must be a positive integer", args(3))
-        else if (args.length == 5 && intLit(args(4)).exists(_ < 0))
-          bad("REGEXP_REPLACE", "occurrence must be a non-negative integer", args(4))
-        else s"regexp_replace(${args.mkString(", ")})")
-      // SUBSTRING start/length guards (strings.js:118-127: start must be
-      // a positive 1-based integer, length non-negative) — round-13
-      // replay-corner closure, same literal-only contract as the rest
-      for (f <- Seq("substring", "substr"))
-        s = rewriteCall(s, f, args =>
-          if (args.length >= 2 && intLit(args(1)).exists(_ < 1))
-            bad(f.toUpperCase(java.util.Locale.ROOT), "start position must be a positive integer", args(1))
-          else if (args.length == 3 && intLit(args(2)).exists(_ < 0))
-            bad(f.toUpperCase(java.util.Locale.ROOT), "length must be a non-negative integer", args(2))
-          else s"$f(${args.mkString(", ")})")
-    }
-
-
-    // REGEXP_EXTRACT / REGEXP_SUBSTR are the SAME function in the
-    // reference (src/expression/regexp.js:18): whole match, NULL when
-    // nothing matches, optional 3rd arg = 1-based search POSITION and
-    // 4th = occurrence. Spark's regexp_extract instead reads the 3rd
-    // arg as a capture-GROUP index and returns '' on no match — so:
-    // 2-arg maps to Spark regexp_substr (whole match, NULL on miss);
-    // positional/occurrence forms go through regexp_extract_all over
-    // the position-suffix with try_element_at (NULL, never an ANSI
-    // out-of-bounds error). Found via reference-source reading during
-    // the regexp fuzz battery.
-    for (f <- Seq("regexp_extract", "regexp_substr"))
-      s = rewriteCall(s, f, args =>
-        if (args.length == 2) s"regexp_substr(${args(0)}, ${args(1)})"
-        else if (args.length == 3)
-          s"try_element_at(regexp_extract_all(substring(${args(0)}, CAST(${args(2)} AS INT)), ${args(1)}, 0), 1)"
-        else if (args.length == 4)
-          s"try_element_at(regexp_extract_all(substring(${args(0)}, CAST(${args(2)} AS INT)), ${args(1)}, 0), CAST(${args(3)} AS INT))"
-        else s"regexp_extract(${args.mkString(", ")})")
-
-    // REGEXP_REPLACE: both engines replace ALL by default and share the
-    // prefix-preserving 4-arg position form; the reference's 5-arg form
-    // replaces only the OCCURRENCE-th match (regexp.js:126-166) — no
-    // Spark built-in, so a helper UDF carries it.
-    s = rewriteCall(s, "regexp_replace", args =>
-      if (args.length == 5)
-        s"graft_regexp_replace_occ(${args(0)}, ${args(1)}, ${args(2)}, " +
-          s"CAST(${args(3)} AS INT), CAST(${args(4)} AS INT))"
-      else s"regexp_replace(${args.mkString(", ")})")
-
-    // regexp_matches(x, p) → x RLIKE p — paren-aware (the old regex
-    // form mangled nested calls like regexp_matches(try_element_at(...))
-    // — found by the regexp fuzz battery)
-    s = rewriteCall(s, "regexp_matches", args =>
-      if (args.length == 2) s"((${args(0)}) RLIKE ${args(1)})"
-      else s"regexp_matches(${args.mkString(", ")})")
-
-    // STRING_SPLIT's delimiter is a LITERAL in the reference (and in
-    // DuckDB) — indexOf, not a pattern (src/expression/strings.js:165);
-    // Spark's split() takes a REGEX, so 'x.y' would split on every char
-    // and ' )' would throw a pattern error. Literal delimiters escape
-    // textually; computed ones go through \Q...\E quoting.
-    // An EMPTY delimiter returns the WHOLE string as one element
-    // (strings.js:168 `delim === '' ? [str] : str.split(delim)`) where
-    // Spark's split('') explodes per character.
-    for (f <- Seq("string_split", "str_split"))
-      s = rewriteCall(s, f, args =>
-        if (args.length == 2) {
-          val d = args(1).trim
-          if (d == "''") s"array(graft_js_str(${args(0)}))"
-          else if (d.startsWith("'") && d.endsWith("'") && d.length >= 2) {
-            // Pattern.quote emits \Q...\E; the SQL literal needs its
-            // backslashes doubled (Spark's parser consumes one level)
-            val quoted = java.util.regex.Pattern.quote(
-                d.substring(1, d.length - 1))
-              .replace("\\", "\\\\").replace("'", "''")
-            s"split(${args(0)}, '$quoted')"
-          } else s"(CASE WHEN (${args(1)}) = '' THEN array(graft_js_str(${args(0)})) " +
-            s"ELSE split(${args(0)}, concat('\\\\Q', ${args(1)}, '\\\\E')) END)"
-        } else s"split(${args.mkString(", ")})")
-
-    // SPLIT_PART with an empty literal delimiter: one part — index 1
-    // (or -1 from the end) answers the whole string, others '' (the
-    // reference's parts[idx] ?? '', strings.js:146-162)
-    s = rewriteCall(s, "split_part", args =>
-      if (args.length == 3 && args(1).trim == "''")
-        s"(CASE WHEN CAST(${args(2)} AS INT) IN (1, -1) " +
-          s"THEN graft_js_str(${args(0)}) ELSE '' END)"
-      else s"split_part(${args.mkString(", ")})")
-
-    // TRIM is JS String.prototype.trim (strings.js:103): Unicode
-    // whitespace including \t \n NBSP FEFF — Spark's trim strips only
-    // ' '. The BOTH/LEADING/TRAILING ... FROM form passes through
-    // (Spark semantics, no reference analog).
-    s = rewriteCall(s, "trim", args =>
-      if (args.length == 1 && raw"(?i)\bFROM\b".r.findFirstIn(args.head).isEmpty)
-        s"graft_js_trim(graft_js_str(${args.head}))"
-      else s"trim(${args.mkString(", ")})")
-
-    // GREATEST/LEAST accept a single argument in the reference
-    // (evaluate.js:434 — reduces over whatever it gets); Spark requires
-    // two. ATAN(y, x) is two-argument arctangent (math.js) — Spark's
-    // atan is unary, atan2 is the two-arg spelling.
-    for (f <- Seq("greatest", "least"))
-      s = rewriteCall(s, f, args =>
-        if (args.length == 1) s"(${args.head})"
-        else s"$f(${args.mkString(", ")})")
-    s = rewriteCall(s, "atan", args =>
-      if (args.length == 2) s"atan2(${args.mkString(", ")})"
-      else s"atan(${args.mkString(", ")})")
-
-    // Every string function coerces its text arguments with JS
-    // String(v) (strings.js:66 `const str = String(val)`, :112
-    // REPLACE's search/replace args, :158-176 SPLIT_PART/STRING_SPLIT/
-    // INSTR): UPPER(2.0*3) is '6' and INSTR(1.0/2, '.') probes '0.5' —
-    // where Spark's implicit cast renders '6.0'/'1.0' and diverges on
-    // every whole-valued double. Wrap the string-ish args in
-    // graft_js_str (a no-op on strings, null-propagating). LENGTH and
-    // OCTET_LENGTH are STRICT in the reference (they error on
-    // non-strings, strings.js:38-56) — deliberately not wrapped.
-    // Placed AFTER the rewrites that generate these names (position →
-    // instr, string_split → split); strpos is wrapped here pre-rename
-    // (renames run last).
-    locally {
-      val wraps: Seq[(String, Seq[String] => Seq[Int])] = Seq(
-        "upper" -> (a => if (a.length == 1) Seq(0) else Nil),
-        "lower" -> (a => if (a.length == 1) Seq(0) else Nil),
-        // trim is handled by its own rewrite above (JS whitespace set)
-        "substring" -> (a =>
-          if (a.length >= 2) Seq(0)
-          else Nil), // FROM..FOR form has no top-level comma — pass through
-        "substr" -> (a => if (a.length >= 2) Seq(0) else Nil),
-        "replace" -> (a => if (a.length == 3) Seq(0, 1, 2) else Nil),
-        "left" -> (a => if (a.length == 2) Seq(0) else Nil),
-        "right" -> (a => if (a.length == 2) Seq(0) else Nil),
-        "split_part" -> (a => if (a.length == 3) Seq(0, 1) else Nil),
-        "split" -> (a => if (a.length == 2) Seq(0) else Nil),
-        "instr" -> (a => if (a.length == 2) Seq(0, 1) else Nil),
-        "strpos" -> (a => if (a.length == 2) Seq(0, 1) else Nil))
-      for ((f, pick) <- wraps)
-        s = rewriteCall(s, f, args => {
-          val idx = pick(args).toSet
-          val out = args.zipWithIndex.map { case (a, i) =>
-            if (idx(i)) s"graft_js_str($a)" else a }
-          s"$f(${out.mkString(", ")})"
-        })
-    }
-
     // `a || b` and ILIKE operands coerce the same way (binary.js:27-30
     // `String(a) + String(b)`, :57 LIKE's `String(a)`/`String(b)`):
     // 'x' || 2.0 is 'x2' and 2.0 LIKE '2' is TRUE in the reference.
     s = rewriteJsConcatOps(s)
-
-    // UNNEST(NULL) / EXPLODE(NULL) produce ZERO rows in the reference
-    // (nothing to expand); Spark's explode(NULL) is an untyped analysis
-    // error — an empty array has the same zero-row semantics
-    for (f <- Seq("unnest", "explode"))
-      s = rewriteCall(s, f, args =>
-        if (args.length == 1 && args.head.trim.equalsIgnoreCase("null"))
-          "explode(array())"
-        else s"explode(${args.mkString(", ")})")
-
-    // LEAD/LAG offsets run through JS Number(v) in the reference: a
-    // QUOTED numeric offset works like the bare number ('' is 0), a
-    // non-numeric one is NaN — which indexes outside the partition, so
-    // EVERY row reads the default (null when absent; node-probed).
-    // Spark requires an integer literal: integral text unquotes,
-    // NaN-text becomes a 1e8 offset (outside any real window partition;
-    // kept far from INT_MAX so rowIndex+offset cannot overflow).
-    // Fractional offsets crash the reference and fail Spark's analysis
-    // alike — left alone, agreement on rejection. Seed-131337
-    // mutation-fuzz find.
-    for (f <- Seq("lead", "lag")) {
-      val quotedLit = raw"^'([^']*)'$$".r
-      s = rewriteCall(s, f, args => {
-        val fixed =
-          if (args.length < 2) args
-          else args(1).trim match {
-            case quotedLit(body) =>
-              val b = body.trim
-              val off =
-                if (b.isEmpty) Some("0")
-                else if (b.matches(raw"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?")) {
-                  val v = b.toDouble
-                  if (v == v.toLong.toDouble) Some(v.toLong.toString) else None
-                } else Some("100000000")
-              off.map(o => args.updated(1, o)).getOrElse(args)
-            case _ => args
-          }
-        s"$f(${fixed.mkString(", ")})"
-      })
-    }
 
     // Ranking/offset window functions REQUIRE an ORDER BY in Spark; the
     // reference defaults to the partition's INPUT order (execute.window
@@ -949,24 +353,8 @@ object GraftSql {
     // the old global \bDESC\b regex also fired on DESC used as an
     // IDENTIFIER (`SELECT desc …` — the reference reads bare keywords
     // as columns), corrupting the statement (seed-135555 mutation find)
-    s = rewriteBareDesc(s)
-
-    // function renames, ONE token pass: a Word followed by `(` whose
-    // name is in the map renames in place (no rename target is itself
-    // a key, so sequential per-name rescans buy nothing)
-    tokenEdit(s) { v =>
-      val t = v.toks
-      t.indices.collect {
-        case k if t(k).kind == SqlTok.Word && k + 1 < t.length &&
-            t(k + 1).kind == SqlTok.LPar &&
-            renameMap.contains(t(k).up) =>
-          (t(k).start, t(k).end, renameMap(t(k).up))
-      }
-    }
+    rewriteBareDesc(s)
   }
-
-  private val renameMap: Map[String, String] =
-    renames.map { case (k, v) => k.toUpperCase(java.util.Locale.ROOT) -> v }.toMap
 
   /** Constructs Spark parses but silently misreads, where the reference
     * raises a parse error (reference: test/parse/parse.errors.test.js).
@@ -1062,15 +450,15 @@ object GraftSql {
       .iterator.flatMap(mismatch).nextOption()
   }
 
-  /** A query as [[prepare]] leaves it: the plan as parsed, and the
-    * analyzed DataFrame built from that same plan. */
+  /** A query as [[prepare]] leaves it: the parsed plan with its calls
+    * translated, and the analyzed DataFrame built from that same plan. */
   private final case class Prepared(parsed: LogicalPlan, df: DataFrame)
 
   /** The one path from dialect text to an analyzed plan, shared by every
     * host entry point. In order: strip comments and run the token lint;
-    * rewrite once; parse once, in the session's conf; run the duplicate-
-    * CTE check and the set-op guard on that parse; analyze that same
-    * plan once. `Left` is the misparse gate's reason for refusing the
+    * run the text passes once; parse once, in the session's conf, and
+    * translate the parsed plan's calls; run the duplicate-CTE check and
+    * the set-op guard on that plan; analyze that same plan once. `Left` is the misparse gate's reason for refusing the
     * text. When the analysis (or parse) of a text carrying the NOT IN →
     * NOT EXISTS form (`__nin`) fails, the text is rewritten once more
     * with NOT IN left as written, and that plan is analyzed instead.
@@ -1080,13 +468,14 @@ object GraftSql {
     val text = stripComments(sqlText).stripTrailing()
     tokenLint(text).toLeft(()).flatMap { _ =>
       def analyze(parsed: LogicalPlan) = Prepared(parsed, GraftPlanBridge.ofRows(spark, parsed))
+      def parseCalls(rewritten: String) = GraftPlanBridge.parse(spark, rewritten, PlanCalls(_))
       val rewritten = rewriteImpl(text, notInExists = true)
       try {
-        val parsed = GraftPlanBridge.parse(spark, rewritten)
+        val parsed = parseCalls(rewritten)
         duplicateCte(parsed).orElse(setOpTypeGuard(spark, parsed)).toLeft(analyze(parsed))
       } catch {
         case _: AnalysisException if rewritten.contains("__nin") =>
-          Right(analyze(GraftPlanBridge.parse(spark, rewriteImpl(text, notInExists = false))))
+          Right(analyze(parseCalls(rewriteImpl(text, notInExists = false))))
       }
     }
   }
@@ -1142,9 +531,9 @@ object GraftSql {
       // ParseException extends AnalysisException, so one case covers
       // both syntax and semantic errors
       case e: AnalysisException => Left(e.getMessage)
-      // the pre-parse dialect rewrites are regex surgery over untrusted
-      // SQL text — any failure there is a validation failure, never a
-      // crash of the host-facing surface
+      // the pre-parse text passes are surgery over untrusted SQL text
+      // — any failure there is a validation failure, never a crash of
+      // the host-facing surface
       case scala.util.control.NonFatal(e) =>
         Left(s"invalid query: ${e.getMessage}")
     }
@@ -1221,11 +610,11 @@ object GraftSql {
     // derive from the RAW expression when it parses — the name contract
     // mirrors the reference's surface text (alias.js), and semantic
     // rewrites (lenient casts → coalesce chains) must not leak into it;
-    // dialect-only syntax falls back to the rewritten form
+    // dialect-only syntax falls back to the translated form
     val parsed =
       try CatalystSqlParser.parseExpression(exprText)
       catch { case scala.util.control.NonFatal(_) =>
-        CatalystSqlParser.parseExpression(rewrite(exprText)) }
+        PlanCalls.expression(CatalystSqlParser.parseExpression(rewrite(exprText))) }
     deriveName(parsed)
   }
 

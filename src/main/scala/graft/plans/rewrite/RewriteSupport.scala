@@ -1,18 +1,17 @@
 package graft.plans
 package rewrite
 
-/** Shared substrate of the GraftSql rewrite pipeline: the call-site
-  * walker ([[rewriteCall]]/[[rewriteAggFilter]] — each pass rewrites
-  * every site once, arguments first, never its own output), token-edit
-  * splicing, the strict-type raise helpers, the higher-order-function
-  * context guard, and the small keyword/regex tables more than one pass
-  * consumes.
+/** Shared substrate of the GraftSql text passes: the call-site walker
+  * ([[rewriteCall]] — each pass rewrites every site once, arguments
+  * first, never its own output), token-edit splicing, the JSON_EACH
+  * scalar check, the higher-order-function context guard, and the small
+  * keyword/regex tables more than one pass consumes.
   * Every pass module imports this; ALL quote/paren/comment
   * classification stays in [[graft.plans.SqlTok]].
   */
 private[plans] object RewriteSupport {
 
-  import SqlTok.{matchParen, splitTopLevel}
+  import SqlTok.splitTopLevel
 
   // The legal non-boundary followers of a `)` — each has its own
   // handling wherever a pass must decide whether a bare word after a
@@ -26,45 +25,6 @@ private[plans] object RewriteSupport {
   // in one segment. Consumers: rewriteJsConcatOps (segment logic),
   // rewriteAliasExpansion (implicit-alias capture).
   private[plans] val postParenKeywords = Set("ILIKE", "END", "OVER")
-
-
-  // TYPE-strict arguments (strings.js:38-56 LENGTH/OCTET_LENGTH,
-  // evaluate.js JSON_VALUE family): the reference throws AT EXECUTION
-  // when the input's runtime CLASS is wrong — number/boolean where JSON
-  // text or a string is required. The class is the column's STATIC type
-  // here, so the guard is typeof()-keyed and typeof is foldable: for
-  // allowed types it constant-folds away entirely (zero runtime cost),
-  // for banned ones it folds to a bare per-row raise_error — errors
-  // exactly when a row flows, like the reference's row-1 throw, and
-  // both engines still accept the query over an empty table. This is
-  // TYPE dispatch, not per-row data validation: a dirty CELL in a
-  // string column stays lenient. (LENGTH itself gets the same
-  // strictness inside LengthAny.)
-  private[plans] def numericTypeof(x: String): String =
-    s"(typeof($x) IN ('tinyint','smallint','int','bigint','float'," +
-      s"'double','boolean') OR typeof($x) LIKE 'decimal%')"
-
-
-  // the null check nests INSIDE the raise branch: the reference
-  // null-checks the VALUE before its type throw (strings.js val==null,
-  // evaluate.js jsonArg==null — a numeric column of NULLs returns
-  // NULLs, not an error), and keeping the outer CASE typeof-only
-  // preserves its foldability — allowed types still fold to zero cost
-  private[plans] def strictRaise(x: String, msg: String): String =
-    s"(CASE WHEN ($x) IS NULL THEN NULL " +
-      s"ELSE CAST(raise_error('$msg') AS STRING) END)"
-
-
-  private[plans] def jsonStrictInput(fname: String, x: String): String =
-    s"(CASE WHEN ${numericTypeof(x)} THEN ${strictRaise(x,
-      s"${fname.toUpperCase(java.util.Locale.ROOT)}(expression, path): first argument must be JSON string or object")} " +
-      s"ELSE graft_json_input($x) END)"
-
-
-  private[plans] def octetStrict(x: String): String =
-    s"(CASE WHEN typeof($x) NOT IN ('string', 'void') THEN ${strictRaise(x,
-      "OCTET_LENGTH(string): expected string. Use CAST to convert to a string first.")} " +
-      s"ELSE $x END)"
 
 
   private[plans] val jsonScalarLit =
@@ -108,32 +68,14 @@ private[plans] object RewriteSupport {
 
   /** Rewrite every `fname(args)` call site via `f(args)`, token-driven
     * (nested calls, commas inside arguments, string literals and
-    * comments are classified by the shared lexer). Each pass rewrites
-    * every site once, arguments first, never its own output: a builder
-    * may emit `fname(` itself. An unbalanced call paren ends the pass —
-    * that site and all text after it stay as written.
+    * comments are classified by the shared lexer): one tokenization,
+    * sites spliced in text order, each site's argument span walked
+    * (innermost first) before its builder runs. Each pass rewrites every
+    * site once, never its own output: a builder may emit `fname(` itself.
+    * An unbalanced call paren ends the pass — that site and all text
+    * after it stay as written.
     */
-  private[plans] def rewriteCall(sql: String, fname: String, f: Seq[String] => String): String =
-    walkCalls(sql, fname, withFilter = false)((args, _) => f(args))
-
-
-  /** Like rewriteCall, but also captures a trailing `FILTER (WHERE ...)`
-    * clause (its own call sites rewritten first) so the builder can fold
-    * it INSIDE the rewritten aggregate — needed when the aggregate ends
-    * up nested in a non-aggregate wrapper (to_json/transform), which
-    * reject a FILTER suffix.
-    */
-  private[plans] def rewriteAggFilter(sql: String, fname: String,
-                               f: (Seq[String], Option[String]) => String): String =
-    walkCalls(sql, fname, withFilter = true)(f)
-
-
-  /** The one call-site walker: tokenize once, then splice sites in text
-    * order, each site's argument and FILTER spans walked (innermost
-    * first) before its builder runs.
-    */
-  private def walkCalls(sql: String, fname: String, withFilter: Boolean)(
-      f: (Seq[String], Option[String]) => String): String = {
+  private[plans] def rewriteCall(sql: String, fname: String, f: Seq[String] => String): String = {
     val up = fname.toUpperCase(java.util.Locale.ROOT)
     val v = new SqlTok.View(sql)
     val t = v.toks
@@ -149,13 +91,9 @@ private[plans] object RewriteSupport {
           if (close < 0) stopped = true
           else {
             val args = splitTopLevel(walk(t(k + 1).end, t(close).start, k + 2, close))
-            val fc = if (withFilter && close + 2 < hi && t(close + 1).is("FILTER") &&
-                t(close + 2).kind == SqlTok.LPar) v.brk(close + 2) else -1
-            val filt = Option.when(fc >= 0)(walk(t(close + 2).start, t(fc).end, close + 2, fc + 1))
-            val end = if (fc >= 0) fc else close
-            out.append(sql, pos, t(k).start).append(f(args, filt))
-            pos = t(end).end
-            k = end
+            out.append(sql, pos, t(k).start).append(f(args))
+            pos = t(close).end
+            k = close
           }
         }
         k += 1

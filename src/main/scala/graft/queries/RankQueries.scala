@@ -404,7 +404,7 @@ object RankQueries {
           "o_custkey % 60 AS src", "(o_custkey + o_orderkey) % 60 AS dst")
         // ONE persisted canonical frame feeds the triangle chain AND the
         // node/edge stats — re-canonicalizing would scan orders twice
-        val canon = Graph.canonicalEdges(e)
+        val canon = Caches.track(Graph.canonicalEdges(e))
         val tri = Graph.trianglesCanonical(canon)
           .agg(count(lit(1)).cast("bigint").as("n_triangles"))
         val stats = canon

@@ -3,7 +3,9 @@ package graft.tools
 import graft.plans.GraftSql
 
 /** Dev utility: print `GraftSql.rewrite` output for each stdin line —
-  * used while pinning rewrite-text regressions (no SparkSession).
+  * used while pinning text-pass regressions (no SparkSession). This is
+  * only the text half of the translation: function calls print as
+  * written, since they are translated on the parsed plan (PlanCalls).
   */
 object RewriteDump {
   def main(args: Array[String]): Unit = {

@@ -634,10 +634,9 @@ class FuzzSpec extends FuzzHarness {
     val refOut = om.readTree(java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$workDir/ivl_chain_out.json")))
     // graft side: the DIALECT TEXT itself (literal base ± chain) runs
-    // through the full rewrite — this is what exercises kind threading.
+    // through the full translation — this is what exercises kind threading.
     // Batched ~25 per statement: the rewrite's per-statement scan
     // guards cap at 100 interval ops.
-    GraftSql.ensureHelpers(spark)
     val sqlOf: ((String, Seq[(String, String, String)])) => String = { case (raw, steps) =>
       steps.map { case (vv, u, op) => s" $op INTERVAL $vv $u" }
         .mkString(s"'$raw'", "", "")
@@ -645,7 +644,7 @@ class FuzzSpec extends FuzzHarness {
     val got = cases.grouped(25).flatMap { grp =>
       val exprs = grp.zipWithIndex
         .map { case (c, i) => s"unix_millis(${sqlOf(c)}) AS c$i" }
-      val row = spark.sql(GraftSql.rewrite(s"SELECT ${exprs.mkString(", ")}")).first()
+      val row = GraftSql.sql(spark, s"SELECT ${exprs.mkString(", ")}").first()
       (0 until grp.size).map(i => if (row.isNullAt(i)) None else Some(row.getLong(i)))
     }.toIndexedSeq
     val bad = cases.zipWithIndex.flatMap { case ((raw, steps), i) =>

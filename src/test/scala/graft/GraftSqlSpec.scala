@@ -67,12 +67,12 @@ class GraftSqlSpec extends SparkSpec {
     // the lambda arrow survives; || operands pick up the JS-string
     // coercion wrap like everywhere else (no-op on strings)
     assert(GraftSql.rewrite("SELECT list_transform(xs, x -> 'p' || x) FROM t")
-      == "SELECT transform(xs, x -> graft_js_str('p') || graft_js_str(x)) FROM t")
+      == "SELECT list_transform(xs, x -> graft_js_str('p') || graft_js_str(x)) FROM t")
     assert(GraftSql.rewrite("SELECT transform(xs, x -> 0) FROM t")
       == "SELECT transform(xs, x -> 0) FROM t")
     // ...while a JSON arrow passed to a NON-HOF call still rewrites
     assert(GraftSql.rewrite("SELECT lower(j -> 'a') FROM t")
-      == "SELECT lower(graft_js_str(get_json_object(graft_json_input(j), '$.a'))) FROM t")
+      == "SELECT lower(get_json_object(graft_json_input(j), '$.a')) FROM t")
     // and executes: lambda bodies starting with a literal work end to end
     Seq((1L, "a b")).toDF("id", "s").createOrReplaceTempView("hof_t")
     val r = GraftSql.sql(spark,
@@ -84,16 +84,19 @@ class GraftSqlSpec extends SparkSpec {
   test("struct_pack / struct_extract rewrite and run (incl. nested)") {
     assert(GraftSql.rewrite("SELECT struct_pack(k := 1, v := 'a') AS st")
       == "SELECT named_struct('k', 1, 'v', 'a') AS st")
+    // struct_extract is translated on the parsed plan, not in the text
     assert(GraftSql.rewrite("SELECT struct_extract(struct_extract(x, 'a'), 'b')")
-      == "SELECT ((x).a).b")
+      == "SELECT struct_extract(struct_extract(x, 'a'), 'b')")
     Seq((1L, 2.5)).toDF("k", "p").createOrReplaceTempView("sp_t")
     val r = GraftSql.sql(spark,
       """SELECT struct_pack(k := k, price := p) AS st,
         |  struct_pack(k := k, price := p).price AS via_dot,
-        |  struct_extract(struct_pack(k := k, price := p), 'k') AS via_ext
+        |  struct_extract(struct_pack(k := k, price := p), 'k') AS via_ext,
+        |  struct_extract(struct_extract(struct_pack(o := struct_pack(k := k)), 'o'), 'k') AS via_nested
         |FROM sp_t""".stripMargin).collect().head
     assert(r.getAs[Double]("via_dot") == 2.5)
     assert(r.getAs[Long]("via_ext") == 1L)
+    assert(r.getAs[Long]("via_nested") == 1L)
     // the q_struct_access oracle's own dialect SQL must run through the
     // front-end (VERDICT gap: its struct_pack was previously unrunnable)
     graft.sources.Tables.registerAll(spark, "/root/testdata/sf0.001")
@@ -383,8 +386,9 @@ class GraftSqlSpec extends SparkSpec {
 
   test("list_slice / array_to_string / list_min / ord translate and run") {
     // list_slice's inclusive 1-based end becomes slice's length argument
+    // (translated on the parsed plan: the text keeps the dialect call)
     assert(GraftSql.rewrite("SELECT list_slice(xs, 2, 5) FROM t")
-      == "SELECT slice(xs, 2, (5) - (2) + 1) FROM t")
+      == "SELECT list_slice(xs, 2, 5) FROM t")
     Seq((1L, "a b c d e")).toDF("id", "s").createOrReplaceTempView("slice_t")
     val r = GraftSql.sql(spark,
       """SELECT array_to_string(list_slice(string_split(s, ' '), 2, 4), '-') AS mid,

@@ -336,7 +336,7 @@ class ParseReplaySpec extends SparkSpec {
         spark.read.json(spark.createDataset(Seq(fields)))
           .createOrReplaceTempView(table)
       }
-      val plan = spark.sql(GraftSql.rewrite(e.query.get)).queryExecution.optimizedPlan
+      val plan = GraftSql.sql(spark, e.query.get).queryExecution.optimizedPlan
       // pruning evidence: the leaf columns the optimized plan CONSUMES —
       // every node's references into the leaf's output, plus leaf
       // columns flowing to the result unreferenced. An unpruned

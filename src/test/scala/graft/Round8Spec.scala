@@ -231,7 +231,7 @@ class Round8Spec extends SparkSpec {
     import graft.operators.{Caches, Dedup, Graph, TextOps}
     Caches.unpersistAll() // other suites may have left tracked caches
     assert(Caches.trackedCount == 0)
-    Graph.canonicalEdges(Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")).count()
+    Graph.triangles(Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")).count()
     assert(Caches.trackedCount == 1)
     val docs = Seq(
       (1L, "a b c d e f g h i j"), (2L, "a b c d e f g h i j"),

@@ -1,11 +1,13 @@
 package graft.plans
 
-import graft.plans.rewrite.RewriteSupport.{rewriteAggFilter, rewriteCall}
+import graft.plans.rewrite.RewriteSupport.rewriteCall
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The call-site walker every GraftSql call-rewrite pass runs on: each
-  * pass rewrites every `fname(` site once, arguments first, and never
-  * rescans a builder's output.
+/** The call-site walker the call-shaped GraftSql text passes (those
+  * Spark's parser cannot read, and TYPEOF) run on: each pass rewrites
+  * every `fname(` site once, arguments first, and never rescans a
+  * builder's output. Calls Spark parses are translated on the plan
+  * (PlanCallSpec).
   */
 class RewriteCallSpec extends AnyFunSuite {
 
@@ -24,12 +26,7 @@ class RewriteCallSpec extends AnyFunSuite {
     assert(seen.result() == Seq(Seq("3"), Seq("2", "h(3)"), Seq("1", "h(2|h(3))"), Seq("4")))
   }
 
-  test("a FILTER suffix is captured and its call sites are rewritten") {
-    def agg(a: Seq[String], f: Option[String]) = s"w(${a.head}${f.fold("")(" / " + _)})"
-    assert(rewriteAggFilter(
-      "SELECT agg(x) FILTER (WHERE agg(z) > 1), agg(y) FROM t", "agg", agg)
-      == "SELECT w(x / (WHERE w(z) > 1)), w(y) FROM t")
-    // a plain call pass leaves the suffix in place, sites rewritten
+  test("a FILTER suffix stays in place and its call sites are rewritten") {
     assert(rewriteCall("SELECT agg(x) FILTER (WHERE agg(z) > 1) FROM t", "agg",
       a => s"w(${a.head})") == "SELECT w(x) FILTER (WHERE w(z) > 1) FROM t")
   }
