@@ -47,6 +47,10 @@ object GraftSession {
       // q_dedup_clusters 404→30, q_components 399→25, q_mutual_info
       // 366→18 — identical results, identical oracle hashes.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // Spark's default of 100 generated classes is split into 4 LRU
+      // segments of 25, which a few repeated dialect texts already
+      // overflow, so identical classes are compiled again on every run
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

@@ -12,11 +12,14 @@ import graft.functions.spatial.SpatialExpressions._
   *     kernels and dialect coercions, into Catalyst's FunctionRegistry;
   *   - optimizer rules: [[StripIdentityJsStr]] and [[StripIdentityJsNum]]
   *     drop the dialect's coercion wrappers where they are identity;
-  *   - planner strategy: [[SingleTaskSort]] plans a global sort whose
-  *     child fits `spark.sql.autoBroadcastJoinThreshold` as one sort task
-  *     over a single-partition exchange, so no range-sampling job runs;
-  *     the query-stage preparation rule [[DropRedundantGather]] removes
-  *     that exchange where the child is already one partition.
+  *   - planner strategies, in this order: [[CollectSort]] plans the
+  *     root `ORDER BY` of a query as [[CollectSortExec]], which a
+  *     `collect` runs as the child's own job plus a sort on the driver;
+  *     [[SingleTaskSort]] plans every other global sort whose child fits
+  *     `spark.sql.autoBroadcastJoinThreshold` as one sort task over a
+  *     single-partition exchange, so no range-sampling job runs; the
+  *     query-stage preparation rule [[DropRedundantGather]] removes that
+  *     exchange where the child is already one partition.
   *
   * Install with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
   * or `.withExtensions(new GraftExtensions)`.
@@ -117,6 +120,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           args(0), args(1))))
     ext.injectOptimizerRule(_ => StripIdentityJsStr)
     ext.injectOptimizerRule(_ => StripIdentityJsNum)
+    ext.injectPlannerStrategy(_ => CollectSort)
     ext.injectPlannerStrategy(_ => SingleTaskSort)
     ext.injectQueryStagePrepRule(_ => DropRedundantGather)
   }

@@ -27,6 +27,8 @@ import org.apache.spark.sql.internal.SQLConf
   * Where the child already ends in one partition (an unpartitioned
   * window, a global limit, `coalesce(1)`), [[DropRedundantGather]]
   * removes the gather again, so that such a sort keeps Spark's plan.
+  * The root sort of a query is [[CollectSort]]'s, which plans ahead of
+  * this strategy; its `doExecute` makes the same choice with [[fits]].
   */
 object SingleTaskSort extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -36,7 +38,7 @@ object SingleTaskSort extends SparkStrategy {
     case _ => Nil
   }
 
-  private def fits(child: LogicalPlan): Boolean = {
+  private[plans] def fits(child: LogicalPlan): Boolean = {
     val budget = SQLConf.get.autoBroadcastJoinThreshold
     budget > 0 && child.stats.sizeInBytes <= budget
   }

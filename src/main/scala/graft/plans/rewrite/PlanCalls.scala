@@ -565,7 +565,8 @@ private[plans] object PlanCalls {
   }
 
   private def jsNum(f: UnresolvedFunction): Expression = f.arguments match {
-    case Seq(_: UnresolvedStar) => f
+    // left as written, Spark would expand the star into a one-column input
+    case Seq(_: UnresolvedStar) => rename(s"${f.nameParts.last.toLowerCase}_unsupported")(f)
     case Seq(x) => f.copy(arguments = Seq(fn("graft_js_num", x)))
     case _ => f
   }

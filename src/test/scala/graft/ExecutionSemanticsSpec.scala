@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
@@ -338,5 +339,20 @@ class ExecutionSemanticsSpec extends SparkSpec {
       }.count()
     }
     assert(e.getMessage != null)
+  }
+
+  test("a second round of repeated multi-stage queries compiles no generated class") {
+    // each literal pair makes its own generated classes, so one round
+    // needs more than Spark's default of 100 cache entries
+    def round(): Unit = (0 until 60).foreach { k =>
+      spark.range(0, 200, 1, 1)
+        .selectExpr(s"id % ${k + 3} AS g", s"id * ${k + 7} AS v")
+        .groupBy("g").agg(sum("v").as("total"), max("v").as("top"))
+        .orderBy(col("total").desc).collect()
+    }
+    round()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    round()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
   }
 }

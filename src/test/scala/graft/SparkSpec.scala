@@ -1,5 +1,7 @@
 package graft
 
+import graft.tools.TaskMetrics
+import org.apache.spark.GraftListenerDrain
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +11,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // session shared across suites
+
+  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold` at `bytes`. */
+  def withThreshold[A](bytes: Long)(body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes.toString)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** Spark jobs started while `body` runs. */
+  def jobsOf(body: => Unit): Long = {
+    val metrics = new TaskMetrics
+    val sc = spark.sparkContext
+    GraftListenerDrain.drain(sc)
+    sc.addSparkListener(metrics)
+    try {
+      body
+      GraftListenerDrain.drain(sc)
+      metrics.jobsNow()
+    } finally sc.removeSparkListener(metrics)
+  }
 }
 
 /** Managed-table hygiene for specs — delegates to the main-code reset

@@ -1,8 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.tools.TaskMetrics
-import org.apache.spark.GraftListenerDrain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -15,32 +13,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 class ComponentsSpec extends SparkSpec {
   import spark.implicits._
 
-  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
-
-  private def withThreshold[A](bytes: Long)(body: => A): A = {
-    val prev = spark.conf.getOption(threshold)
-    spark.conf.set(threshold, bytes.toString)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(threshold, v)
-      case None => spark.conf.unset(threshold)
-    }
-  }
-
   private def onRounds[A](body: => A): A = withThreshold(-1)(body)
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsOf(body: => Unit): Long = {
-    val metrics = new TaskMetrics
-    val sc = spark.sparkContext
-    GraftListenerDrain.drain(sc)
-    sc.addSparkListener(metrics)
-    try {
-      body
-      GraftListenerDrain.drain(sc)
-      metrics.jobsNow()
-    } finally sc.removeSparkListener(metrics)
-  }
 
   private def isLocal(df: DataFrame): Boolean =
     df.queryExecution.analyzed.isInstanceOf[LocalRelation]

@@ -99,6 +99,10 @@ class PlanCallSpec extends SparkSpec {
     assert(GraftSql.validate(spark, "SELECT SUM(*) FROM pc_star").isLeft)
     assert(GraftSql.validate(spark, "SELECT AVG(*) FROM pc_star").isLeft)
     assert(GraftSql.validate(spark, "SELECT SUM(x) FROM pc_star").isRight)
+    spark.range(3).selectExpr("id AS x").createOrReplaceTempView("pc_star1")
+    assert(GraftSql.validate(spark, "SELECT SUM(*) FROM pc_star1").isLeft)
+    assert(GraftSql.validate(spark, "SELECT avg(*) FROM pc_star1").isLeft)
+    assert(GraftSql.validate(spark, "SELECT SUM(x) FROM pc_star1").isRight)
   }
 
   test("EXTRACT(DOW | EPOCH | SECOND FROM ts) keep their values") {

@@ -3,36 +3,30 @@ package graft.plans
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.tools.TaskMetrics
 import org.apache.spark.GraftListenerDrain
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning,
   SinglePartition}
-import org.apache.spark.sql.execution.{SortExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan,
+  TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** [[SingleTaskSort]]: a global sort whose child fits
   * `spark.sql.autoBroadcastJoinThreshold` runs as one sort task over a
   * single-partition exchange, so no range-sampling job runs; everything
   * else keeps Spark's planning.
+  *
+  * Every plan here is one a `noop` write ran, and every row check reads
+  * `.rdd`: both plan the sort below the root of the query, where
+  * [[SingleTaskSort]] decides. A `collect` of a root sort is
+  * [[CollectSort]]'s (see CollectSortSpec).
   */
 class SortPlanningSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
-
-  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
-
-  private def withThreshold[A](bytes: Long)(body: => A): A = {
-    val prev = spark.conf.getOption(threshold)
-    spark.conf.set(threshold, bytes.toString)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(threshold, v)
-      case None => spark.conf.unset(threshold)
-    }
-  }
 
   /** 4000 rows over four parquet files: `k` a seeded permutation of
     * 0..3999 (unique), `g` one of ten groups, `v` a seeded long.
@@ -56,42 +50,37 @@ class SortPlanningSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def exchanges(plan: SparkPlan): Seq[Partitioning] =
     collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
 
-  private def initialPlan(df: DataFrame): SparkPlan =
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.initialPlan
-      case p => p
-    }
+  private def write(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-  /** The plan after `df` ran: the final adaptive plan under AQE. */
+  /** The plan a `noop` write of `df` ran: the final adaptive plan under
+    * AQE.
+    */
   private def finalPlan(df: DataFrame): SparkPlan = {
-    df.collect()
-    df.queryExecution.executedPlan
+    var plan: Option[SparkPlan] = None
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plan = Some(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      write(df)
+      GraftListenerDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plan.get
   }
 
   private def isSingle(p: Partitioning): Boolean = p == SinglePartition
   private def isRange(p: Partitioning): Boolean = p.isInstanceOf[RangePartitioning]
 
-  /** Spark jobs started while `body` runs. */
-  private def jobsOf(body: => Unit): Long = {
-    val metrics = new TaskMetrics
-    val sc = spark.sparkContext
-    GraftListenerDrain.drain(sc)
-    sc.addSparkListener(metrics)
-    try {
-      body
-      GraftListenerDrain.drain(sc)
-      metrics.jobsNow()
-    } finally sc.removeSparkListener(metrics)
-  }
-
   test("a sort under the budget gathers one partition and runs one job fewer") {
     val single = finalPlan(table.orderBy("k"))
     assert(exchanges(single).map(isSingle) == Seq(true), single)
-    val singleJobs = jobsOf(table.orderBy("k").collect())
+    val singleJobs = jobsOf(write(table.orderBy("k")))
     val rangeJobs = withThreshold(-1) {
       val range = finalPlan(table.orderBy("k"))
       assert(exchanges(range).map(isRange) == Seq(true), range)
-      jobsOf(table.orderBy("k").collect())
+      jobsOf(write(table.orderBy("k")))
     }
     assert(rangeJobs - singleJobs == 1,
       s"range-partitioned $rangeJobs jobs, single-task $singleJobs")
@@ -111,11 +100,11 @@ class SortPlanningSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         .orderBy("g")
       assert(agg.queryExecution.optimizedPlan.children.head.stats.sizeInBytes > bytes / 8,
         "the aggregate's estimate must be over the budget for this test")
-      val first = initialPlan(agg)
-      assert(exchanges(first).exists(isRange), first)
       val last = finalPlan(agg)
+      val first = last.collectFirst { case a: AdaptiveSparkPlanExec => a.initialPlan }.get
+      assert(exchanges(first).exists(isRange), first)
       assert(exchanges(last).exists(isSingle) && !exchanges(last).exists(isRange), last)
-      assert(agg.collect().map(_.getInt(0)).toSeq == (0 until 10))
+      assert(agg.rdd.collect().map(_.getInt(0)).toSeq == (0 until 10))
     }
   }
 
@@ -124,7 +113,7 @@ class SortPlanningSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val top = spark.sql("SELECT k, v FROM sort_planning_t ORDER BY k LIMIT 5")
     val topPlan = finalPlan(top)
     assert(collect(topPlan) { case t: TakeOrderedAndProjectExec => t }.nonEmpty, topPlan)
-    assert(top.collect().map(_.getInt(0)).toSeq == (0 until 5))
+    assert(top.rdd.collect().map(_.getInt(0)).toSeq == (0 until 5))
 
     val within = table.sortWithinPartitions("k")
     val withinPlan = finalPlan(within)
@@ -149,7 +138,7 @@ class SortPlanningSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("both plan shapes give the same ordered rows") {
     def rows(): (Seq[Partitioning], Seq[Row]) = {
       val sorted = table.orderBy(col("k").desc)
-      (exchanges(finalPlan(sorted)), sorted.collect().toSeq)
+      (exchanges(finalPlan(sorted)), sorted.rdd.collect().toSeq)
     }
     val (singlePlan, single) = rows()
     val (rangePlan, range) = withThreshold(-1)(rows())
