@@ -9,16 +9,18 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *
   *  - text passes ([[rewrite]]) for what Spark's parser cannot read or
   *    would misread: FROM-first statements, set-op arm tails, bracket
-  *    array literals and subscripts, POSITIONAL JOIN, DISTINCT ON, comma
-  *    table functions, select-alias expansion, NOT IN, zero divisors,
-  *    JSON arrows, `struct_pack(k := v)`, TYPEOF, CAST (VARCHAR/TEXT
-  *    targets do not parse), LIKE → ILIKE, GLOB, CURRENT_TIME, TIMESTAMP
-  *    literals, INTERVAL arithmetic, unit-form date_diff, the `~`/`!~`
-  *    operators, `* EXCLUDE`, `||`/ILIKE operand coercion, window ORDER
-  *    BY injection and bare-DESC null ordering;
+  *    array literals, POSITIONAL JOIN, DISTINCT ON, comma table
+  *    functions, select-alias expansion, NOT IN, JSON arrows,
+  *    `struct_pack(k := v)`, TYPEOF, CAST (VARCHAR/TEXT targets do not
+  *    parse), GLOB, CURRENT_TIME, TIMESTAMP literals, INTERVAL arithmetic
+  *    (fractional values do not parse), unit-form date_diff, the
+  *    `~`/`!~` operators, `* EXCLUDE` and bare-DESC null ordering (the
+  *    parsed plan cannot tell a bare DESC from `DESC NULLS LAST`);
   *  - every other function call (renames, JS value coercions, literal
   *    argument guards, the DISTINCT/FILTER-aware aggregates, EXTRACT
-  *    fields) in one transform on the parsed plan,
+  *    fields) and the `||`/LIKE operand coercion, LIKE → ILIKE, zero
+  *    divisors, numeric subscripts and the input order of ranking
+  *    windows in one transform on the parsed plan,
   *    [[graft.plans.rewrite.PlanCalls]], which [[prepare]] runs before
   *    its checks and the analysis.
   */
@@ -36,7 +38,8 @@ object GraftSql {
   // A pass stays text only where Spark's parser cannot read its input or
   // would misread it, or where a later text pass emits the name it
   // matches (TYPEOF); each call-shaped one says why at the pass. Every
-  // call Spark parses is translated after parsing, by PlanCalls.
+  // call and operator Spark parses is translated after parsing, by
+  // PlanCalls.
   import _root_.graft.plans.rewrite.RewriteSupport._
   import _root_.graft.plans.rewrite.SkeletonPasses._
   import _root_.graft.plans.rewrite.JsCoercionPasses._
@@ -44,8 +47,9 @@ object GraftSql {
   import _root_.graft.plans.rewrite.PlanCalls
 
   /** The text half of the translation: one squirreling-dialect
-    * statement as text Spark's parser reads. Function calls are left as
-    * written; the host entry points translate them on the parsed plan. */
+    * statement as text Spark's parser reads. Function calls and the
+    * operators PlanCalls owns are left as written; the host entry points
+    * translate them on the parsed plan. */
   def rewrite(sqlText: String): String = rewriteImpl(sqlText, notInExists = true)
 
   private def rewriteImpl(sqlText: String, notInExists: Boolean): String = {
@@ -66,10 +70,9 @@ object GraftSql {
     s = rewriteSetOpArmTails(s)
 
     // bracket array literals first — they can appear inside any later
-    // construct ([1,2,3] → array(1,2,3); subscripts like items[1] keep)
+    // construct ([1,2,3] → array(1,2,3); subscripts like items[1] keep,
+    // and PlanCalls translates them on the parsed plan)
     s = rewriteArrayLiterals(s)
-    // then numeric subscripts → get() (0-based, null out of range)
-    s = rewriteSubscripts(s)
 
     // POSITIONAL JOIN next (it restructures the FROM — and without the
     // rewrite Spark silently reads POSITIONAL as a table alias)
@@ -85,10 +88,6 @@ object GraftSql {
     s = rewriteAliasExpansion(s)
 
     if (notInExists) s = rewriteNotInSubquery(s)
-
-    // zero-divisor guards next, on the user's own text (later rewrites
-    // may duplicate subexpressions — guard divisions before that)
-    s = rewriteZeroDivisors(s)
 
     // ->> / -> json access chains (j -> 'a' ->> 0 ...) collapse into ONE
     // get_json_object with a combined path — both more efficient (one
@@ -203,15 +202,6 @@ object GraftSql {
         }
       } else s"cast(${args.mkString(", ")})")
 
-    // LIKE is CASE-INSENSITIVE in the reference dialect — its evaluator
-    // compiles the pattern with the `i` regex flag (reference:
-    // src/expression/binary.js:57-65) — so dialect LIKE maps to Spark
-    // ILIKE (NOT LIKE → NOT ILIKE via the same token). Found by the
-    // seeded differential fuzz campaign (FuzzSpec), not the curated list.
-    s = tokenEdit(s)(_.toks.collect {
-      case t if t.is("LIKE") => (t.start, t.end, "ILIKE")
-    })
-
     // x GLOB 'pat' → x RLIKE '^…$' (literal patterns — the dialect form)
     s = tokenEdit(s) { v =>
       v.toks.indices.collect {
@@ -243,6 +233,8 @@ object GraftSql {
       }
     }
 
+    // the interval passes stay text: Spark's parser rejects the
+    // fractional values (INTERVAL '2.5' MONTH) the JS Date emulation needs.
     // date/timestamp arithmetic with INTERVAL coerces its LEFT operand
     // leniently (the reference parses date STRINGS and epoch-millis
     // NUMBERS with new Date(...)): wrap the primary before +/- INTERVAL
@@ -304,46 +296,6 @@ object GraftSql {
       }
     }
 
-    // `a || b` and ILIKE operands coerce the same way (binary.js:27-30
-    // `String(a) + String(b)`, :57 LIKE's `String(a)`/`String(b)`):
-    // 'x' || 2.0 is 'x2' and 2.0 LIKE '2' is TRUE in the reference.
-    s = rewriteJsConcatOps(s)
-
-    // Ranking/offset window functions REQUIRE an ORDER BY in Spark; the
-    // reference defaults to the partition's INPUT order (execute.window
-    // tests: ROW_NUMBER() OVER () numbers rows as scanned). Inject a
-    // monotonic order — input order made explicit. Aggregate windows
-    // are NOT touched (an injected ORDER BY would shrink their default
-    // frame to running-total semantics).
-    locally {
-      val needOrder = Set("ROW_NUMBER", "RANK", "DENSE_RANK", "NTILE",
-        "LAG", "LEAD", "PERCENT_RANK", "CUME_DIST")
-      s = tokenEdit(s) { v =>
-        val t = v.toks
-        val edits = Seq.newBuilder[(Int, Int, String)]
-        var k = 0
-        while (k + 1 < t.length) {
-          if (t(k).kind == SqlTok.Word && needOrder(t(k).up) &&
-              t(k + 1).kind == SqlTok.LPar && v.brk(k + 1) >= 0) {
-            val ac = v.brk(k + 1) // args close
-            if (ac + 2 < t.length && t(ac + 1).is("OVER") &&
-                t(ac + 2).kind == SqlTok.LPar && v.brk(ac + 2) >= 0) {
-              val sc = v.brk(ac + 2) // spec close
-              val hasOrder = (ac + 3 until sc).exists(i =>
-                t(i).is("ORDER") && i + 1 < sc && t(i + 1).is("BY"))
-              if (!hasOrder) {
-                val ins = (if (sc == ac + 3) "" else " ") +
-                  "ORDER BY monotonically_increasing_id()"
-                edits += ((t(sc).start, t(sc).start, ins))
-              }
-            }
-          }
-          k += 1
-        }
-        edits.result()
-      }
-    }
-
     // Reference null ordering: nulls sort FIRST regardless of direction
     // unless NULLS LAST is explicit (execute/utils.js:19-23 — the null
     // branch returns BEFORE the DESC flip). Spark's bare-DESC default is
@@ -352,7 +304,9 @@ object GraftSql {
     // ...token-scoped to ORDER BY tails (incl. window-spec ORDER BY):
     // the old global \bDESC\b regex also fired on DESC used as an
     // IDENTIFIER (`SELECT desc …` — the reference reads bare keywords
-    // as columns), corrupting the statement (seed-135555 mutation find)
+    // as columns), corrupting the statement (seed-135555 mutation find).
+    // Text, because the parser fills in NULLS LAST for a bare DESC, so
+    // the plan cannot tell it from an explicit DESC NULLS LAST.
     rewriteBareDesc(s)
   }
 

@@ -325,8 +325,8 @@ private[graft] object SqlTok {
       // call-paren / subscript-bracket suffixes, whitespace allowed
       // (`f (x)` is a call, `a [1]` a subscript — token-based like the
       // reference). A string literal head takes none — '...'[0] is not
-      // element access in the dialect, matching rewriteSubscripts'
-      // base set — and an operator/clause keyword never opens a call.
+      // element access in the dialect, matching the subscripts PlanCalls
+      // translates — and an operator/clause keyword never opens a call.
       var last = head
       var more = t.kind != Str
       while (more && last + 1 < toks.length) {

@@ -12,26 +12,6 @@ private[plans] object IntervalPasses {
   import SqlTok.{matchParen, splitTopLevel}
   import RewriteSupport._
 
-  /** EVERY `expr ± INTERVAL v <unit>` runs through graft_js_interval —
-    * the exact toDate → applyIntervalToDate → format chain (reference:
-    * src/expression/date.js:13-41,133-143), whose semantics diverge
-    * from Spark's interval arithmetic in four ways:
-    *  - MONTH/YEAR: JS ROLLS month-end over (Mar 31 + 1 MONTH = May 1;
-    *    Spark's add_months clamps to Apr 30);
-    *  - fractional v: ToIntegerOrInfinity truncates the SUMMED
-    *    component toward zero ('-1.5' MONTH on March lands January);
-    *  - output format: the result keeps its time only for 'T'-string
-    *    and typed (Date-object analog) inputs — a date-only string
-    *    truncates back to its UTC date: '1995-01-04' - INTERVAL
-    *    1 MINUTE = '1995-01-03', not 23:59 (found by the interval
-    *    fuzz shape);
-    *  - NUMBERS are not dates (toDate:136 accepts only date-shaped
-    *    strings and Date objects) — epoch millis yield NULL.
-    * Runs BEFORE rewriteIntervalOperands (which then only sees interval
-    * forms this literal-value pattern cannot claim); typed-vs-string
-    * dispatch rides on typeof(expr). Chained ops re-wrap the previous
-    * call's timestamp output (space form → Date-object semantics).
-    */
   // token-level interval-literal readers shared by the three interval
   // passes: value = '…numeric…' | [adjacent -]number (the reference
   // accepts any text Number() converts — src/parse/primary.js:388-393);
@@ -70,12 +50,34 @@ private[plans] object IntervalPasses {
   }
 
 
+  /** EVERY `expr ± INTERVAL v <unit>` runs through graft_js_interval —
+    * the exact toDate → applyIntervalToDate → format chain (reference:
+    * src/expression/date.js:13-41,133-143), whose semantics diverge
+    * from Spark's interval arithmetic in four ways:
+    *  - MONTH/YEAR: JS ROLLS month-end over (Mar 31 + 1 MONTH = May 1;
+    *    Spark's add_months clamps to Apr 30);
+    *  - fractional v: ToIntegerOrInfinity truncates the SUMMED
+    *    component toward zero ('-1.5' MONTH on March lands January);
+    *  - output format: the result keeps its time only for 'T'-string
+    *    and typed (Date-object analog) inputs — a date-only string
+    *    truncates back to its UTC date: '1995-01-04' - INTERVAL
+    *    1 MINUTE = '1995-01-03', not 23:59 (found by the interval
+    *    fuzz shape);
+    *  - NUMBERS are not dates (toDate:136 accepts only date-shaped
+    *    strings and Date objects) — epoch millis yield NULL.
+    * Runs BEFORE rewriteIntervalOperands (which then only sees interval
+    * forms this literal-value pattern cannot claim); typed-vs-string
+    * dispatch rides on typeof(expr). Chained ops re-wrap the previous
+    * call's timestamp output (space form → Date-object semantics).
+    */
   private[plans] def rewriteJsIntervalArith(sqlIn: String): String = {
-    // per-row JS value-class of the operand (see the expression's kind param)
+    // per-row JS value-class of the operand (see the expression's kind param);
+    // the two tests are case-sensitive, so they are calls, not LIKE,
+    // which the parsed plan turns into ILIKE
     def kindExpr(p: String): String =
       s"(CASE WHEN typeof($p) = 'string' THEN " +
-        s"(CASE WHEN try_cast(($p) AS STRING) LIKE '%T%' THEN 'ts_str' ELSE 'date_str' END) " +
-        s"WHEN typeof($p) = 'date' OR typeof($p) LIKE 'timestamp%' THEN 'typed' " +
+        s"(CASE WHEN contains(try_cast(($p) AS STRING), 'T') THEN 'ts_str' ELSE 'date_str' END) " +
+        s"WHEN typeof($p) = 'date' OR startswith(typeof($p), 'timestamp') THEN 'typed' " +
         s"ELSE 'none' END)"
     var s = sqlIn
     // pre-pass: COMMUTE the left-interval form `INTERVAL v U + expr`
@@ -309,14 +311,6 @@ private[plans] object IntervalPasses {
   }
 
 
-  /** Coerce the LEFT operand of `expr ± INTERVAL ...` to a timestamp:
-    * the reference runs date arithmetic over date STRINGS and
-    * epoch-millis NUMBERS (new Date(...) in its evaluator) where Spark
-    * rejects `string + interval` at analysis. Already-typed
-    * timestamp/date operands pass through try_cast unchanged. Interval
-    * UNIT keywords and bare numbers are skipped so chained arithmetic
-    * (`ts + INTERVAL 1 DAY - INTERVAL 2 HOUR`) wraps only the head.
-    */
   /** Coerce any date operand to TIMESTAMP the reference's way: all
     * paths go through STRING so every static operand type analyzes
     * (DATE→BIGINT isn't castable even with try_cast): numeric text →
@@ -333,6 +327,14 @@ private[plans] object IntervalPasses {
   }
 
 
+  /** Coerce the LEFT operand of `expr ± INTERVAL ...` to a timestamp:
+    * the reference runs date arithmetic over date STRINGS and
+    * epoch-millis NUMBERS (new Date(...) in its evaluator) where Spark
+    * rejects `string + interval` at analysis. Already-typed
+    * timestamp/date operands pass through try_cast unchanged. Interval
+    * UNIT keywords and bare numbers are skipped so chained arithmetic
+    * (`ts + INTERVAL 1 DAY - INTERVAL 2 HOUR`) wraps only the head.
+    */
   private[plans] def rewriteIntervalOperands(sqlIn: String): String = {
     var s = sqlIn
     var from = 0

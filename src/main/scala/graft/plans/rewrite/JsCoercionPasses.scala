@@ -1,21 +1,12 @@
 package graft.plans
 package rewrite
 
-/** JS VALUE-SEMANTICS rewrites on expressions: bracket array
-  * literals vs subscripts (0-based, null out of range), zero-divisor
-  * nullif guards (JS Infinity/NaN serialize as null), and the
-  * `||`/ILIKE operand stringification (JS String(v) coercion).
+/** JS value syntax Spark's parser cannot read: bracket array literals.
+  * Subscripts, zero divisors and the `||`/LIKE operand coercion are
+  * translated on the parsed plan ([[PlanCalls]]).
   */
 private[plans] object JsCoercionPasses {
 
-  import SqlTok.{matchParen, splitTopLevel}
-  import RewriteSupport._
-
-  /** The rewrite the execution-path entry points use: the NOT-IN
-    * variant when it analyzes, the plain SQL-semantics text when the
-    * subquery turns out to be correlated (outer references cannot live
-    * inside the derived table the rewrite introduces).
-    */
   /** `[1, 2, 3]` bracket ARRAY literals (reference parse.js array
     * expressions; execute.unnest/arrays tests) → Spark `array(1, 2, 3)`.
     * A `[` directly after an identifier, `)`, `]`, or a quote is a
@@ -65,244 +56,5 @@ private[plans] object JsCoercionPasses {
       sb.append(sqlIn.substring(prev))
       sb.toString
     }
-  }
-
-
-  /** Numeric subscripts (`items[5]`, `array(1,2)[0]`) are JS element
-    * access in the reference: 0-based, NULL when out of range or
-    * negative — Spark's `[]` (GetArrayItem) errors out of range under
-    * ANSI, `get()` matches. String subscripts (map/struct keys) pass
-    * through untouched.
-    */
-  private[plans] def rewriteSubscripts(sqlIn: String): String = {
-    var s = sqlIn
-    var guard = 0
-    var from = 0
-    while (guard < 200) {
-      guard += 1
-      if (!s.contains("[")) return s
-      val v = new SqlTok.View(s)
-      val toks = v.toks
-      var k = 0
-      var site = -1
-      while (site < 0 && k < toks.length) {
-        val t = toks(k)
-        // a bracket after an ident/number/close-paren/close-bracket/
-        // double-quoted ident (NOT a string literal) is a subscript —
-        // whitespace allowed (`a [1]` == `a[1]`, the reference parser
-        // is token-based; probed), but an operator/clause KEYWORD
-        // before `[` leaves an array literal (`IN [1,2]`, `THEN [x]`)
-        if (t.kind == SqlTok.LBrk && t.start >= from && v.brk(k) >= 0 && k > 0 &&
-            ((toks(k - 1).kind == SqlTok.Word &&
-               !SqlTok.neverCallable(toks(k - 1).up)) ||
-              toks(k - 1).kind == SqlTok.Num ||
-              toks(k - 1).kind == SqlTok.RPar || toks(k - 1).kind == SqlTok.RBrk ||
-              toks(k - 1).kind == SqlTok.DQuot)) site = k
-        else k += 1
-      }
-      if (site < 0) return s
-      val open = toks(site)
-      val close = toks(v.brk(site))
-      val content = s.substring(open.end, close.start)
-      if (content.trim.startsWith("'")) from = close.end
-      else {
-        val (_, bStart, _) = v.primaryBefore(site)
-        val base = s.substring(bStart, open.start)
-        val rep = s"graft_get($base, ($content))"
-        s = s.substring(0, bStart) + rep + s.substring(close.end)
-        from = bStart + rep.length
-      }
-    }
-    s
-  }
-
-
-  /** Zero divisors never error in the reference (JS: 5/0 = Infinity,
-    * 5%0 = NaN — both serialize as null); Spark 4's ANSI mode throws
-    * DIVIDE_BY_ZERO / REMAINDER_BY_ZERO even for doubles. Guard every
-    * division/modulo DENOMINATOR with nullif(d, 0): a zero divisor
-    * yields null — the closest Spark value to the reference's
-    * non-finite results, and what its own JSON surface shows. Forward
-    * scan: after `/` or `%`, consume one signed primary (number,
-    * dotted identifier with optional call/index suffixes, or
-    * parenthesized expression) and wrap it. String literals and block
-    * comments (slash-star) are untouched.
-    */
-  private[plans] def rewriteZeroDivisors(sqlIn: String): String = {
-    val v = new SqlTok.View(sqlIn)
-    val t = v.toks
-    val edits = Seq.newBuilder[(Int, String)]
-    var k = 0
-    while (k + 1 < t.length) {
-      if (t(k).kind == SqlTok.Op && (t(k).up == "/" || t(k).up == "%")) {
-        // denominator: optional sign, then one non-string primary (a
-        // CASE head is an expression keyword, not a wrappable primary)
-        var p = k + 1
-        if (t(p).isOp("-") || t(p).isOp("+")) p += 1
-        if (p < t.length && t(p).kind != SqlTok.Str && !t(p).is("CASE")) {
-          val end = v.forwardFrom(p)
-          if (end > 0) {
-            edits += ((t(k + 1).start, "nullif("))
-            edits += ((end, ", 0)"))
-          }
-        }
-      }
-      k += 1
-    }
-    SqlTok.applyInserts(sqlIn, edits.result())
-  }
-
-
-  /** Wrap the operands of `||` and ILIKE in graft_js_str — the
-    * reference coerces both with JS String(v) (binary.js:27-30
-    * `String(a) + String(b)` for `||`, :57-58 for LIKE), so
-    * `'x' || 2.0` is `'x2'` and `2.0 LIKE '2'` is TRUE, where Spark's
-    * implicit cast renders `'2.0'`. Both grammars give `||` the same
-    * precedence (looser than +‑/·/%, tighter than comparisons —
-    * reference parse/expression.js:218 parseConcat over parseAdditive),
-    * so operands are the maximal "additive segments" adjacent to the
-    * operator. Single forward pass: track the current segment per paren
-    * depth, treat comparison operators / commas / clause keywords as
-    * segment boundaries, keep CASE..END opaque via a saved-segment
-    * stack (so `CASE..END || x` wraps the whole CASE), and carry
-    * right-operand wraps as "pending" inserts that close at the next
-    * boundary. Inserts are collected as (position, text) edits over the
-    * ORIGINAL text and applied at the end — no rescans of our own
-    * output. The wrap is a no-op on strings, so over-wrapping (an
-    * operand that is already a concat result) is harmless.
-    */
-  private[plans] def rewriteJsConcatOps(sqlIn: String): String = {
-    val n = sqlIn.length
-    val toks = SqlTok.tokenize(sqlIn)
-    val brk = SqlTok.bracketMatch(toks)
-    val edits = scala.collection.mutable.ListBuffer.empty[(Int, String)]
-    // OVER is deliberately NOT a boundary: `row_number() OVER (ORDER BY
-    // x) || 'r'` must wrap the WHOLE window expression (Spark allows a
-    // window expr nested inside a scalar call, and the reference
-    // stringifies the window RESULT). The spec's own keywords
-    // (PARTITION/ORDER/ROWS/...) live inside the OVER parens, i.e. in a
-    // pushed frame, so they still reset only inner segments.
-    val boundary = Set(
-      "SELECT", "FROM", "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET",
-      "JOIN", "ON", "USING", "AND", "OR", "IN", "IS", "BETWEEN", "AS", "WHEN",
-      "THEN", "ELSE", "DISTINCT", "ALL", "BY", "ASC", "DESC", "NULLS", "FIRST",
-      "LAST", "UNION", "EXCEPT", "INTERSECT", "WITH", "VALUES",
-      "PARTITION", "ROWS", "RANGE", "PRECEDING", "FOLLOWING", "UNBOUNDED",
-      "CURRENT", "ROW", "CROSS", "INNER", "OUTER", "FULL", "SEMI", "ANTI",
-      "LATERAL", "NATURAL", "EXISTS", "ANY", "SOME", "FILTER", "ESCAPE",
-      "RLIKE", "REGEXP", "GLOB", "QUALIFY", "WINDOW", "NOT")
-    final class Frame {
-      var segStart: Int = -1 // start of the current additive segment
-      var lastNonWs: Int = -1 // last non-whitespace char inside it
-      var caseNest: Int = 0
-      var caseSaves: List[Int] = Nil // segStart saved at each CASE entry
-      var pendings: List[(Int, Int)] = Nil // (openPos, caseNest at open)
-      var awaitingOpen: Boolean = false // a trigger wants the next segment
-    }
-    var stack: List[Frame] = List(new Frame)
-    def fr: Frame = stack.head
-
-    def startToken(pos: Int): Unit = {
-      if (fr.segStart < 0) fr.segStart = pos
-      if (fr.awaitingOpen) { fr.pendings ::= (pos, fr.caseNest); fr.awaitingOpen = false }
-    }
-    def closePendings(minNest: Int): Unit = {
-      val (close, keep) = fr.pendings.partition(_._2 >= minNest)
-      close.foreach { case (open, _) =>
-        if (fr.lastNonWs >= open) {
-          edits += ((open, "graft_js_str(")); edits += ((fr.lastNonWs + 1, ")"))
-        }
-      }
-      fr.pendings = keep
-      fr.awaitingOpen = false
-    }
-    def boundaryReset(): Unit = {
-      closePendings(fr.caseNest)
-      fr.segStart = -1; fr.lastNonWs = -1
-    }
-    def trigger(): Unit = {
-      closePendings(fr.caseNest)
-      if (fr.segStart >= 0 && fr.lastNonWs >= fr.segStart) {
-        edits += ((fr.segStart, "graft_js_str(")); edits += ((fr.lastNonWs + 1, ")"))
-      }
-      fr.segStart = -1; fr.lastNonWs = -1
-      fr.awaitingOpen = true
-    }
-
-    var k = 0
-    while (k < toks.length) {
-      val t = toks(k)
-      t.kind match {
-        case SqlTok.Str | SqlTok.DQuot | SqlTok.Num =>
-          startToken(t.start); fr.lastNonWs = t.end - 1
-        case SqlTok.LPar =>
-          startToken(t.start)
-          stack ::= new Frame
-        case SqlTok.RPar =>
-          closePendings(0)
-          if (stack.tail.nonEmpty) stack = stack.tail
-          fr.lastNonWs = t.start
-        case SqlTok.Comma | SqlTok.Semi =>
-          boundaryReset()
-        case SqlTok.LBrk =>
-          // a bracket group (subscript or array literal) rides along as
-          // one opaque blob of the current segment
-          startToken(t.start)
-          val close = brk(k)
-          if (close >= 0) { fr.lastNonWs = toks(close).start; k = close }
-          else { fr.lastNonWs = n - 1; k = toks.length }
-        case SqlTok.RBrk => // unbalanced stray — plain segment material
-          startToken(t.start); fr.lastNonWs = t.start
-        case SqlTok.Op if t.up == "||" =>
-          trigger()
-        case SqlTok.Op if t.up.exists(c => c == '=' || c == '<' || c == '>' || c == '!') =>
-          // comparison operators bind looser than || in both grammars
-          boundaryReset()
-        case SqlTok.Op =>
-          // + - * / % . :: etc: additive material stays in-segment
-          startToken(t.start); fr.lastNonWs = t.end - 1
-        case SqlTok.Word =>
-          val afterParen = k > 0 && toks(k - 1).kind == SqlTok.RPar
-          t.up match {
-            case "OVER" =>
-              // `rank() OVER (...)` — OVER keeps the window expression
-              // in ONE segment (its postParenKeywords membership keeps
-              // the alias branch below from claiming it)
-              startToken(t.start); fr.lastNonWs = t.end - 1
-            case w if afterParen && !boundary(w) && !postParenKeywords(w) =>
-              // a bare non-boundary identifier straight after a ')' can
-              // only be an IMPLICIT alias (`trim(s) q2`, `... OVER (...)
-              // c0` — the AS dropped): close the operand wrap at the
-              // paren, then the alias starts a fresh segment (seed-88014
-              // mutation find; generalized from window specs to all
-              // parens after the advisor's expectOverParen-leak report).
-              boundaryReset()
-              startToken(t.start); fr.lastNonWs = t.end - 1
-            case "ILIKE" => trigger()
-            case "CASE" =>
-              startToken(t.start)
-              fr.caseSaves ::= fr.segStart
-              fr.caseNest += 1
-            case "END" =>
-              closePendings(fr.caseNest)
-              fr.caseNest = math.max(0, fr.caseNest - 1)
-              fr.caseSaves match {
-                case h :: rest => fr.segStart = h; fr.caseSaves = rest
-                case Nil => if (fr.segStart < 0) fr.segStart = t.start
-              }
-              fr.lastNonWs = t.end - 1
-            case "NOT" =>
-              // NOT directly before ILIKE belongs to the predicate — keep
-              // the segment (and its end) so the operand wrap excludes NOT
-              if (!(k + 1 < toks.length && toks(k + 1).is("ILIKE"))) boundaryReset()
-            case w if boundary(w) => boundaryReset()
-            case _ =>
-              startToken(t.start); fr.lastNonWs = t.end - 1
-          }
-      }
-      k += 1
-    }
-    while (stack.nonEmpty) { closePendings(0); stack = stack.tail }
-    SqlTok.applyInserts(sqlIn, edits.toList)
   }
 }

@@ -9,14 +9,15 @@ import org.apache.spark.sql.catalyst.trees.CurrentOrigin
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DecimalType, DoubleType, IntegerType, LongType, NullType, NumericType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The dialect's function calls, translated on the PARSED plan: one
-  * bottom-up transform over every `UnresolvedFunction` (and the
-  * generator / table-function spellings of the same calls), keyed by
-  * the lower-cased single-part name. Arguments are translated before
-  * their call and a builder's output is never translated again, so a
-  * builder emits its Spark target directly. The parser has already
-  * split arguments and read DISTINCT, FILTER (…), `*` and literals, so
-  * builders read them off the node.
+/** The dialect's function calls and operators, translated on the PARSED
+  * plan: one bottom-up transform over every `UnresolvedFunction` (and
+  * the generator / table-function spellings of the same calls), keyed
+  * by the lower-cased single-part name, and over the nodes `||`, LIKE,
+  * `/`, `%`, `x[i]` and `f() OVER (…)` parse to. Arguments are
+  * translated before their call or operator and a builder's output is
+  * never translated again, so a builder emits its Spark target
+  * directly. The parser has already split arguments and read DISTINCT,
+  * FILTER (…), `*` and literals, so builders read them off the node.
   *
   * Builders that fold their own modifiers are marked as such; any
   * other builder whose output no longer carries the call's DISTINCT /
@@ -61,7 +62,75 @@ private[plans] object PlanCalls {
         case f: UnresolvedFunction => UnresolvedGenerator(FunctionIdentifier(f.nameParts.head), f.arguments)
         case _ => g
       }
+    // `a || b` is String(a) + String(b) (binary.js:27-30): 'x' || 2.0 is 'x2'
+    case c: Concat => Concat(c.children.map(js))
+    // the dialect's `||` binds looser than + and -, which Spark parses at
+    // its level: `a || b + c` arrives as (a || b) + c. A `||` whose text
+    // starts where the sum's does had no parentheses, and gives its last
+    // operand to the sum.
+    case s @ LooseConcat(init, last) => Concat(init :+ js(s.withNewChildren(Seq(last, s.children(1)))))
+    // LIKE is case-insensitive and coerces both operands with String(v)
+    // (binary.js:57-65): 2.0 LIKE '2' is TRUE
+    case l: Like => ILike(js(l.left), js(l.right), l.escapeChar)
+    case l: ILike => ILike(js(l.left), js(l.right), l.escapeChar)
+    case m: MultiLikeBase => likeQuantified(m)
+    // zero divisors never error (JS 5/0 = Infinity, 5%0 = NaN, both
+    // serialized as null); Spark's ANSI mode throws even for doubles
+    case d: Divide => d.copy(right = nonZero(d.right))
+    case r: Remainder => r.copy(right = nonZero(r.right))
+    // `x[i]` is JS element access: 0-based, NULL out of range or on a
+    // non-array, where GetArrayItem errors; string keys stay map/struct
+    // access, and a string literal takes no subscript in the dialect
+    case UnresolvedExtractValue(base, key) if Str.unapply(key).isEmpty && Str.unapply(base).isEmpty =>
+      fn("graft_get", base, key)
+    // ranking/offset windows without ORDER BY number rows in input order
+    // in the reference, and Spark requires one: the input order made
+    // explicit (aggregate windows keep their whole-partition frame)
+    case w @ WindowExpression(f: UnresolvedFunction, s: WindowSpecDefinition)
+        if s.orderSpec.isEmpty && inputOrdered(f.nameParts.last.toLowerCase(java.util.Locale.ROOT)) =>
+      w.copy(windowSpec = s.copy(orderSpec = Seq(SortOrder(fn("monotonically_increasing_id"), Ascending))))
   }
+
+  /** A sum or difference over a translated `||` on its left that starts
+    * where it starts, as (the `||`'s other operands, its last operand). */
+  private object LooseConcat {
+    def unapply(s: Expression): Option[(Seq[Expression], Expression)] = s match {
+      case _: Add | _: Subtract => s.children.head match {
+        case c @ Concat(init :+ JsWrapped(last)) if c.origin.startIndex == s.origin.startIndex =>
+          Some((init, last))
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+  private object JsWrapped {
+    def unapply(e: Expression): Option[Expression] = e match {
+      case f: UnresolvedFunction if f.nameParts == Seq("graft_js_str") => f.arguments.headOption
+      case _ => None
+    }
+  }
+
+  // LIKE/ILIKE ANY|ALL over literal patterns parse to one node; the
+  // dialect form is graft_js_str(x) ILIKE ANY (…), which Spark reads as
+  // the lower-cased operand against lower-cased patterns
+  private def likeQuantified(m: MultiLikeBase): Expression = {
+    def x(c: Expression) = Lower(js(c match { case Lower(parsedIlike) => parsedIlike; case c => c }))
+    def lower(ps: Seq[UTF8String]) = ps.map(p => if (p == null) p else p.toLowerCase)
+    m match {
+      case LikeAny(c, ps) => LikeAny(x(c), lower(ps))
+      case NotLikeAny(c, ps) => NotLikeAny(x(c), lower(ps))
+      case LikeAll(c, ps) => LikeAll(x(c), lower(ps))
+      case NotLikeAll(c, ps) => NotLikeAll(x(c), lower(ps))
+    }
+  }
+
+  // a string literal divisor meets a DOUBLE zero, as the division reads
+  // it: against an integer zero '2.5' would have to cast to BIGINT
+  private def nonZero(d: Expression): Expression =
+    fn("nullif", d, d match { case Str(_) => lit(0.0); case _ => lit(0) })
+
+  private val inputOrdered = Set("row_number", "rank", "dense_rank", "ntile",
+    "lag", "lead", "percent_rank", "cume_dist")
 
   private def translate(f: UnresolvedFunction): Expression = {
     val key = f.nameParts.head.toLowerCase(java.util.Locale.ROOT)

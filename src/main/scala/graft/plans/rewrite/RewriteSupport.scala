@@ -13,18 +13,15 @@ private[plans] object RewriteSupport {
 
   import SqlTok.splitTopLevel
 
-  // The legal non-boundary followers of a `)` — each has its own
-  // handling wherever a pass must decide whether a bare word after a
-  // close-paren is an IMPLICIT ALIAS or part of the expression. Named
-  // as ONE set (vs the round-11/12 shape of ad-hoc exclusions ordered
-  // under per-pass guards) so a future dialect keyword lands here
-  // instead of silently reading as an alias: `(x) ILIKE '%0%'` must
-  // wrap its parenthesized operand (seed-88015 fuzz find), `CASE …
-  // THEN (x) END` must pop its case-frame / not register a phantom
-  // `end` alias, and `rank() OVER (…)` must keep the window expression
-  // in one segment. Consumers: rewriteJsConcatOps (segment logic),
-  // rewriteAliasExpansion (implicit-alias capture).
-  private[plans] val postParenKeywords = Set("ILIKE", "END", "OVER")
+  // The keywords that may follow a `)` at the end of a select item
+  // without being an IMPLICIT ALIAS: `CASE … THEN (x) END` must not
+  // register a phantom `end` alias. Named as ONE set (vs the round-11/12
+  // shape of ad-hoc exclusions ordered under per-pass guards) so a future
+  // dialect keyword lands here instead of silently reading as an alias.
+  // ILIKE and OVER also follow a `)`, but each takes an operand after
+  // it, so neither can end an item. Consumer: rewriteAliasExpansion
+  // (implicit-alias capture).
+  private[plans] val postParenKeywords = Set("END")
 
 
   private[plans] val jsonScalarLit =

@@ -458,8 +458,7 @@ private[plans] object SkeletonPasses {
     // IMPLICIT aliases (the AS dropped) resolve identically in the
     // reference — `(expr) name` / `col name` are the two textually
     // unambiguous shapes (a bare identifier straight after a complete
-    // primary can only be an alias; same reading as the concat rewrite's
-    // postParen rule). Seed-132777 mutation find: `(k - MOD(k, 5)) k
+    // primary can only be an alias). Seed-132777 mutation find: `(k - MOD(k, 5)) k
     // GROUP BY k` groups by the ALIAS in the reference, the shadowed
     // column in Spark — wrong row count without the expansion.
     val implicitParenRe = raw"(?is)^(.*\))\s+([A-Za-z_]\w*)\s*$$".r
@@ -478,8 +477,8 @@ private[plans] object SkeletonPasses {
     // implicit alias: `CASE WHEN a THEN (b) END` must not register a
     // phantom alias `end` (which would drop the END keyword from the
     // captured expression and suppress a real alias of that name via
-    // the dup rule) — same exclusion set as the concat pass's
-    // postParenKeywords, the one named home for post-paren keywords
+    // the dup rule) — postParenKeywords, the one named home for
+    // post-paren keywords
     val notAliasTail = postParenKeywords.map(_.toLowerCase(java.util.Locale.ROOT))
     val aliasSeq: Seq[(String, (String, Int))] = rawItems.zipWithIndex.flatMap {
       case (it, i) => it match {
@@ -769,7 +768,8 @@ private[plans] object SkeletonPasses {
       "LEFT", "RIGHT", "FULL", "POSITIONAL")
     def side(tbl: String, alias: String): String = {
       val al = if (alias != null) alias else tbl.split('.').last
-      s"(SELECT *, row_number() OVER (ORDER BY monotonically_increasing_id()) AS __gpos FROM $tbl) AS $al"
+      // OVER (): PlanCalls numbers a ranking window without ORDER BY in input order
+      s"(SELECT *, row_number() OVER () AS __gpos FROM $tbl) AS $al"
     }
     val v = new SqlTok.View(sqlIn)
     val t = v.toks

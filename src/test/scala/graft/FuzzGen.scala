@@ -639,7 +639,7 @@ object FuzzGen {
             s"FROM $fromName WHERE ${pred(t)}", injective = true)
       } else r.nextInt(3) match {
         case 0 =>
-          // divisor arm: exercises the nullif() zero-divisor wrap
+          // divisor arm: exercises the plan-side zero-divisor guard
           // INSIDE a lifted arm; the denominator is kept nonzero
           // (key%m + 1) because Infinity sorts LAST as a JS number
           // where its null serialization sorts FIRST — an ordering
@@ -791,8 +791,8 @@ object FuzzGen {
   def scalarExpr(r: Random): String = r.nextInt(11) match {
     case 0 | 1 | 2 => mathExpr(r)
     case 10 => // bracket array literals + 0-based subscripts (round-13
-      // widening: this surface rides rewriteArrayLiterals +
-      // rewriteSubscripts — reference: out-of-range/negative → null,
+      // widening: this surface rides rewriteArrayLiterals + the
+      // subscript translation in PlanCalls — reference: out-of-range/negative → null,
       // nesting converts fully; all shapes node-probed)
       val lit = s"[${Seq.fill(2 + r.nextInt(3))(r.nextInt(20)).mkString(", ")}]"
       r.nextInt(6) match {

@@ -64,10 +64,13 @@ class GraftSqlSpec extends SparkSpec {
   }
 
   test("json arrows inside HOF lambdas are left alone (no false rewrite)") {
-    // the lambda arrow survives; || operands pick up the JS-string
-    // coercion wrap like everywhere else (no-op on strings)
-    assert(GraftSql.rewrite("SELECT list_transform(xs, x -> 'p' || x) FROM t")
-      == "SELECT list_transform(xs, x -> graft_js_str('p') || graft_js_str(x)) FROM t")
+    // the lambda arrow survives the text passes; || operands pick up
+    // the JS-string coercion wrap like everywhere else (no-op on
+    // strings) on the parsed plan
+    val (got, want) = graft.plans.PlanCallSpec.translatedAndExpected(
+      "SELECT list_transform(xs, x -> 'p' || x) FROM t",
+      "SELECT transform(xs, x -> graft_js_str('p') || graft_js_str(x)) FROM t")
+    assert(got == want)
     assert(GraftSql.rewrite("SELECT transform(xs, x -> 0) FROM t")
       == "SELECT transform(xs, x -> 0) FROM t")
     // ...while a JSON arrow passed to a NON-HOF call still rewrites
@@ -637,6 +640,18 @@ class GraftSqlSpec extends SparkSpec {
     val f = GraftSql.sql(spark,
       "SELECT STRFTIME(TO_TIMESTAMP(0), '%H') AS h").collect().head
     assert(f.getAs[String]("h") == "00")
+  }
+
+  test("zero divisors written as a CASE or a string literal return NULL") {
+    // the guard sits on the parsed Divide/Remainder, whatever the divisor
+    // is spelled as; a text scan of the divisor skipped these shapes and
+    // Spark threw DIVIDE_BY_ZERO / REMAINDER_BY_ZERO
+    Seq((1.0, 0)).toDF("x", "y").createOrReplaceTempView("zdiv_t")
+    val r = GraftSql.sql(spark,
+      """SELECT x / CASE WHEN y = 0 THEN 0 ELSE y END AS a, x / '0' AS b,
+         x % '0' AS c, x / y AS d, x / '2.5' AS e FROM zdiv_t""").collect().head
+    assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2) && r.isNullAt(3), s"got: $r")
+    assert(r.getAs[Double]("e") == 0.4)
   }
 
   test("fuzz-found REFERENCE bug: ORDER BY expr must not overwrite a select item") {

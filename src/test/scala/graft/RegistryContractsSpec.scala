@@ -24,6 +24,10 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   *
   * 4. One front door: every GraftSql host entry point rewrites, parses
   *    and analyzes a query once, on `prepare`'s path.
+  *
+  * 5. One home for the operator translations: `||`/LIKE coercion, zero
+  *    divisors, subscripts and window input order are PlanCalls cases,
+  *    never text a pass emits.
   */
 class RegistryContractsSpec extends SparkSpec {
 
@@ -145,5 +149,28 @@ class RegistryContractsSpec extends SparkSpec {
     assert(callers("""GraftPlanBridge\.ofRows\(""") == Seq("prepare", "sqlStrictNulls"))
     // the set-op guard's per-arm analyses
     assert(callers("""executePlan\(""") == Seq("setOpTypeGuard"))
+  }
+
+  test("no text pass emits the operator translations PlanCalls owns") {
+    // source scan: a text pass that spliced one of these wraps back in
+    // would translate an operator twice, or a second way
+    import scala.jdk.CollectionConverters._
+    val rewrite = java.nio.file.Paths.get("src/main/scala/graft/plans/rewrite")
+    val passes = {
+      val list = java.nio.file.Files.list(rewrite)
+      try list.iterator().asScala.filter(_.getFileName.toString.endsWith(".scala")).toList
+      finally list.close()
+    }.filter(_.getFileName.toString != "PlanCalls.scala") :+
+      java.nio.file.Paths.get("src/main/scala/graft/plans/GraftSql.scala")
+    assert(passes.size > 2, s"no sources under ${rewrite.toAbsolutePath}")
+    val offenders = for {
+      f <- passes
+      src = java.nio.file.Files.readString(f)
+      w <- Seq("graft_js_str(", "nullif(", "graft_get(", "monotonically_increasing_id")
+      if src.contains(w)
+    } yield s"${f.getFileName}: $w"
+    assert(offenders.isEmpty,
+      s"translate the operator on the parsed plan, in PlanCalls. Offenders:\n  " +
+        offenders.mkString("\n  "))
   }
 }

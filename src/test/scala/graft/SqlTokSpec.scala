@@ -1,22 +1,28 @@
 package graft
 
-import graft.plans.{GraftSql, SqlTok}
+import graft.plans.{GraftSql, PlanCallSpec, SqlTok}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared lexer ([[graft.plans.SqlTok]]) that every GraftSql
   * text-rewrite pass consumes, plus the three historical guard
-  * regressions re-pinned at the TOKEN-CONSUMER level: each of these
-  * was a wrong-rows bug produced by the old per-rewrite char/regex
-  * guard stacks (window-spec alias, commit 9652458; generalized
-  * alias-after-paren, seed-88014; ILIKE-after-paren, seed-88015 /
-  * commit 665e7d5). The pins assert the REWRITTEN TEXT, so a tokenizer
-  * or segment-classification change that re-breaks them fails without
-  * needing a SparkSession.
+  * regressions: each of these was a wrong-rows bug produced by the old
+  * per-rewrite char/regex guard stacks (window-spec alias, commit
+  * 9652458; generalized alias-after-paren, seed-88014;
+  * ILIKE-after-paren, seed-88015 / commit 665e7d5). The `||` and LIKE
+  * operands are now wrapped on the parsed plan, so the pins assert the
+  * TRANSLATED PLAN (text passes, parse, PlanCalls) against the parse of
+  * the expected text, still without needing a SparkSession.
   */
 class SqlTokSpec extends AnyFunSuite {
   import SqlTok._
 
   private def kinds(s: String) = tokenize(s).map(_.kind)
+
+  /** Assert `sql` translates to the plan `expected` parses to. */
+  private def translatesTo(sql: String, expected: String): Unit = {
+    val (got, want) = PlanCallSpec.translatedAndExpected(sql, expected)
+    assert(got == want)
+  }
 
   test("tokens carry exact source offsets over quotes, comments and idents") {
     val s = "SELECT a||'x--y' -- tail comment\n , b2 /* c */ FROM \"w t\""
@@ -76,40 +82,45 @@ class SqlTokSpec extends AnyFunSuite {
     assert(v.s.substring(toks(plus + 1).start, end) == "n2")
   }
 
-  // ---- the three historical guard regressions, pinned on rewrite text ----
+  // ---- the three historical guard regressions, pinned on the translated plan ----
 
   test("regression pin (9652458): implicit alias after a window spec stays OUTSIDE the || wrap") {
-    assert(GraftSql.rewrite("SELECT 'r' || row_number() OVER (ORDER BY x) c0 FROM t") ==
+    translatesTo("SELECT 'r' || row_number() OVER (ORDER BY x) c0 FROM t",
       "SELECT graft_js_str('r') || graft_js_str(row_number() OVER (ORDER BY x)) c0 FROM t")
   }
 
   test("regression pin (seed-88014): implicit alias after ANY close paren ends the wrap") {
-    assert(GraftSql.rewrite("SELECT 'p' || trim(s) q2 FROM t") ==
-      "SELECT graft_js_str('p') || graft_js_str(trim(s)) q2 FROM t")
+    // trim is a PlanCalls builder: JS String.prototype.trim over String(s)
+    translatesTo("SELECT 'p' || trim(s) q2 FROM t",
+      "SELECT graft_js_str('p') || graft_js_str(graft_js_trim(graft_js_str(s))) q2 FROM t")
   }
 
   test("regression pin (665e7d5 / seed-88015): ILIKE and END after a close paren are operators, not aliases") {
     // (expr) ILIKE must wrap its parenthesized operand — the alias
     // misread dropped the graft_js_str wrap, so Spark's '251.0'
     // rendering matched '%0%' where JS '251' does not
-    assert(GraftSql.rewrite("SELECT (bal / 1) LIKE '%0%' FROM t") ==
+    translatesTo("SELECT (bal / 1) LIKE '%0%' FROM t",
       "SELECT graft_js_str((bal / nullif(1, 0))) ILIKE graft_js_str('%0%') FROM t")
-    // END after a paren pops its CASE frame instead of reading as an alias
-    assert(GraftSql.rewrite("SELECT CASE WHEN a THEN (b) END || c FROM t") ==
+    // END after a paren closes its CASE instead of reading as an alias
+    translatesTo("SELECT CASE WHEN a THEN (b) END || c FROM t",
       "SELECT graft_js_str(CASE WHEN a THEN (b) END) || graft_js_str(c) FROM t")
-    // and the alias branch exclusion composes with a || trigger upstream
-    assert(GraftSql.rewrite("SELECT 'x' || (a + 1) ILIKE '%2%' FROM t") ==
-      "SELECT graft_js_str('x') || graft_js_str(graft_js_str((a + 1))) ILIKE graft_js_str('%2%') FROM t")
+    // and ILIKE after a paren composes with a || upstream: the whole
+    // concatenation is the ILIKE operand
+    translatesTo("SELECT 'x' || (a + 1) ILIKE '%2%' FROM t",
+      "SELECT graft_js_str(graft_js_str('x') || graft_js_str((a + 1))) ILIKE graft_js_str('%2%') FROM t")
   }
 
   test("postParenKeywords is the ONE named exclusion set (no ordered ad-hoc guards)") {
     // the fix-shape the advisor flagged: exclusions patched under an
     // ordered guard invite recurrence. The set spelling means a new
     // legal follower is one entry, and this pin documents the contract:
-    // every member must keep its own semantic case when following ')'
+    // every member must keep its own semantic case when following ')'.
+    // Its one consumer is the implicit-alias capture at the END of a
+    // select item, where only END can follow a ')' (ILIKE and OVER take
+    // an operand after them)
     val src = java.nio.file.Files.readString(
       java.nio.file.Paths.get("src/main/scala/graft/plans/rewrite/RewriteSupport.scala"))
-    assert(src.contains("postParenKeywords = Set(\"ILIKE\", \"END\", \"OVER\")"))
+    assert(src.contains("postParenKeywords = Set(\"END\")"))
     val pipeline = java.nio.file.Files.readString(
       java.nio.file.Paths.get("src/main/scala/graft/plans/GraftSql.scala"))
     for (s <- Seq(src, pipeline))
@@ -123,7 +134,7 @@ class SqlTokSpec extends AnyFunSuite {
   // whitespace; the first SqlTok cut required adjacency. ------------------
 
   test("advisor r15: whitespace-separated call parens are calls (divisor + NOT IN)") {
-    assert(GraftSql.rewrite("SELECT a / abs (b) AS r FROM t") ==
+    translatesTo("SELECT a / abs (b) AS r FROM t",
       "SELECT a / nullif(abs (b), 0) AS r FROM t")
     // the NULL-semantics NOT-EXISTS rewrite must not silently drop when
     // the lhs call has a spaced paren
@@ -133,9 +144,9 @@ class SqlTokSpec extends AnyFunSuite {
   }
 
   test("advisor r15: spaced subscripts and dot chains; keywords never take suffixes") {
-    assert(GraftSql.rewrite("SELECT a [1] AS r FROM t") ==
+    translatesTo("SELECT a [1] AS r FROM t",
       "SELECT graft_get(a , (1)) AS r FROM t")
-    assert(GraftSql.rewrite("SELECT f(x) [0] AS r FROM t") ==
+    translatesTo("SELECT f(x) [0] AS r FROM t",
       "SELECT graft_get(f(x) , (0)) AS r FROM t")
     // dot member access chains across whitespace
     val v = new View("x FROM t WHERE t2 . c3 + INTERVAL 1 DAY")

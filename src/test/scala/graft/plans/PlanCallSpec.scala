@@ -3,13 +3,15 @@ package graft.plans
 import graft.SparkSpec
 import graft.plans.rewrite.PlanCalls
 import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, ILike, Like}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The contract of the plan-side call translation ([[PlanCalls]]): one
-  * bottom-up pass over the parsed plan, innermost call first, never
-  * translating a builder's output, keeping the parser's DISTINCT / ALL /
-  * FILTER readings, and reaching every place a call can sit.
+/** The contract of the plan-side call and operator translation
+  * ([[PlanCalls]]): one bottom-up pass over the parsed plan, innermost
+  * call first, never translating a builder's output, keeping the
+  * parser's DISTINCT / ALL / FILTER readings, and reaching every place a
+  * call or operator can sit.
   */
 class PlanCallSpec extends SparkSpec {
 
@@ -119,4 +121,77 @@ class PlanCallSpec extends SparkSpec {
     assert(r.getAs[Any]("dp").toString == "0")
     assert(r.getAs[Any]("m").toString == "1")
   }
+
+  test("operators: || and LIKE coerce, divisors are guarded, subscripts and window order") {
+    // `||` binds looser than + and - in the dialect; parentheses keep theirs
+    assert(translated("a || b + c - d") == expr("graft_js_str(a) || graft_js_str(b + c - d)"))
+    assert(translated("a + b || c || d + e") ==
+      expr("graft_js_str(graft_js_str(a + b) || graft_js_str(c)) || graft_js_str(d + e)"))
+    assert(translated("(a || b) + c") == expr("(graft_js_str(a) || graft_js_str(b)) + c"))
+    assert(translated("x NOT LIKE 'A%' ESCAPE '!'") ==
+      expr("graft_js_str(x) NOT ILIKE graft_js_str('A%') ESCAPE '!'"))
+    assert(translated("x ILIKE y") == expr("graft_js_str(x) ILIKE graft_js_str(y)"))
+    // LIKE ANY / ALL over literals keep their one-node form
+    for (q <- Seq("ANY", "ALL"); not <- Seq("", "NOT "); op <- Seq("LIKE", "ILIKE"))
+      assert(translated(s"x $not$op $q ('A%', 'b')") ==
+        expr(s"graft_js_str(x) ${not}ILIKE $q ('A%', 'b')"), s"$not$op $q")
+    assert(translated("x / (y - 1) + x % -y") == expr("x / nullif((y - 1), 0) + x % nullif(-y, 0)"))
+    assert(translated("a[i + 1][0]['k']") == expr("graft_get(graft_get(a, i + 1), 0)['k']"))
+    assert(translated("m['k']") == expr("m['k']"))
+    assert(translated("row_number() OVER (PARTITION BY a)") ==
+      expr("row_number() OVER (PARTITION BY a ORDER BY monotonically_increasing_id())"))
+    // the name after the call's own translation: lag is a builder
+    assert(translated("lag(x, '2') OVER ()") == expr("lag(x, 2) OVER (ORDER BY monotonically_increasing_id())"))
+    assert(translated("rank() OVER (ORDER BY y)") == expr("rank() OVER (ORDER BY y)"))
+    assert(translated("count(x) OVER ()") == expr("count(x) OVER ()"))
+  }
+
+  test("a builder's operators are never translated again") {
+    // round emits Divide(jsRound(x * mult), mult): the user's division is
+    // guarded, round's own is not
+    assert(translated("round(x, 2)").collect { case d: Divide => d }.size == 1)
+    assert(!calls(translated("round(x, 2)")).contains("nullif"))
+    val r = translated("round(x / y, 2)")
+    assert(r.asInstanceOf[Divide].right == expr("power(10, coalesce(2, 0))"))
+    assert(calls(r).contains("nullif"))
+    // JSON_TYPE's OBJECT%/ARRAY% tests stay case-sensitive LIKE
+    val jt = translated("json_type(j) LIKE 'obj%'")
+    assert(jt.collect { case l: Like => l }.size == 2)
+    assert(jt.collect { case l: ILike => l }.size == 1)
+  }
+
+  test("operators are translated in CTEs, subqueries, lambda bodies, WINDOW definitions and LATERAL VIEW generators") {
+    def one(q: String): Any = GraftSql.sql(spark, q).collect().head.get(0)
+    assert(one("WITH c AS (SELECT 'x' || 2.0 AS s) SELECT s FROM c") == "x2")
+    assert(one("SELECT (SELECT 5 / 0) AS v") == null)
+    assert(GraftSql.sql(spark,
+      "SELECT 1 AS one WHERE EXISTS (SELECT 1 WHERE 'A' LIKE 'a')").count() == 1)
+    assert(GraftSql.sql(spark, "SELECT transform(array(0, 2), d -> 4 % d) AS w")
+      .collect().head.getSeq[Any](0) == Seq(null, 0))
+    assert(GraftSql.sql(spark, "SELECT transform(array(array(1, 2)), a -> a[5]) AS w")
+      .collect().head.getSeq[Any](0) == Seq(null))
+    assert(GraftSql.sql(spark,
+      "SELECT sum(x) OVER w AS s FROM (SELECT 1 AS x) WINDOW w AS (PARTITION BY x % 0)")
+      .collect().head.get(0).toString.toDouble == 1.0)
+    assert(GraftSql.sql(spark,
+      "SELECT v FROM (SELECT 1 AS id) LATERAL VIEW explode(array(6 / 0, 6 / 3)) t AS v")
+      .collect().map(_.get(0)).toSeq == Seq(null, 2.0))
+    assert(GraftSql.sql(spark,
+      "SELECT r FROM (SELECT row_number() OVER () AS r FROM range(3)) ORDER BY r")
+      .collect().map(_.getInt(0)).toSeq == Seq(1, 2, 3))
+  }
+}
+
+object PlanCallSpec {
+  /** `sqlText` as the host entry points translate it, without a session:
+    * the text passes, Spark's parser, then PlanCalls. */
+  def translatedPlan(sqlText: String): LogicalPlan =
+    PlanCalls(CatalystSqlParser.parsePlan(GraftSql.rewrite(sqlText)))
+
+  /** A plan's text with its expression ids masked, so two parses compare. */
+  def shown(p: LogicalPlan): String = p.toString.replaceAll("#\\d+", "#")
+
+  /** [[translatedPlan]] of `sqlText` and the plain parse of `expected`. */
+  def translatedAndExpected(sqlText: String, expected: String): (String, String) =
+    (shown(translatedPlan(sqlText)), shown(CatalystSqlParser.parsePlan(expected)))
 }

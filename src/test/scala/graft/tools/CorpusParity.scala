@@ -13,7 +13,7 @@ import scala.util.Random
   * schema and an order-insensitive digest of the rows. Two builds agree
   * on the dialect when `diff` finds no line between their outputs.
   *
-  * The corpus (14,595 texts on the committed tree):
+  * The corpus (14,598 texts on the committed tree):
   *  - every Scala string literal with a SELECT, FROM or WITH word (any
   *    case) in the `.scala` files directly under `src/test/scala/graft`
   *    and `src/main/scala/graft/queries`;
