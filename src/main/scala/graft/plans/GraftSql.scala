@@ -10,19 +10,22 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *  - text passes ([[rewrite]]) for what Spark's parser cannot read or
   *    would misread: FROM-first statements, set-op arm tails, bracket
   *    array literals, POSITIONAL JOIN, DISTINCT ON, comma table
-  *    functions, select-alias expansion, NOT IN, JSON arrows,
-  *    `struct_pack(k := v)`, TYPEOF, CAST (VARCHAR/TEXT targets do not
-  *    parse), GLOB, CURRENT_TIME, TIMESTAMP literals, INTERVAL arithmetic
-  *    (fractional values do not parse), unit-form date_diff, the
-  *    `~`/`!~` operators, `* EXCLUDE` and bare-DESC null ordering (the
-  *    parsed plan cannot tell a bare DESC from `DESC NULLS LAST`);
-  *  - every other function call (renames, JS value coercions, literal
-  *    argument guards, the DISTINCT/FILTER-aware aggregates, EXTRACT
-  *    fields) and the `||`/LIKE operand coercion, LIKE → ILIKE, zero
-  *    divisors, numeric subscripts and the input order of ranking
-  *    windows in one transform on the parsed plan,
-  *    [[graft.plans.rewrite.PlanCalls]], which [[prepare]] runs before
-  *    its checks and the analysis.
+  *    functions, JSON arrows, `struct_pack(k := v)`, TYPEOF, CAST
+  *    (VARCHAR/TEXT targets do not parse), GLOB, CURRENT_TIME, TIMESTAMP
+  *    literals, INTERVAL arithmetic (fractional values do not parse),
+  *    unit-form date_diff, the `~`/`!~` operators, `* EXCLUDE` and
+  *    bare-DESC null ordering (the parsed plan cannot tell a bare DESC
+  *    from `DESC NULLS LAST`);
+  *  - on the parsed plan, which [[prepare]] translates before its checks
+  *    and the analysis: select aliases substituted in order into every
+  *    SELECT block ([[graft.plans.rewrite.SelectAliases]]), NOT IN with
+  *    the reference's null semantics
+  *    ([[graft.plans.rewrite.NotInExists]]), then every other function
+  *    call (renames, JS value coercions, literal argument guards, the
+  *    DISTINCT/FILTER-aware aggregates, EXTRACT fields) and the
+  *    `||`/LIKE operand coercion, LIKE → ILIKE, zero divisors, numeric
+  *    subscripts and the input order of ranking windows in one
+  *    transform, [[graft.plans.rewrite.PlanCalls]].
   */
 object GraftSql {
 
@@ -34,25 +37,24 @@ object GraftSql {
 
   // the text passes live in per-pass modules on the shared SqlTok
   // substrate (plans/rewrite/); this object keeps their ordered pipeline
-  // (rewriteImpl is THE one statement of pass order) and the host API.
+  // (rewrite is THE one statement of pass order) and the host API.
   // A pass stays text only where Spark's parser cannot read its input or
   // would misread it, or where a later text pass emits the name it
-  // matches (TYPEOF); each call-shaped one says why at the pass. Every
-  // call and operator Spark parses is translated after parsing, by
-  // PlanCalls.
+  // matches (TYPEOF); each call-shaped one says why at the pass. Select
+  // aliases, NOT IN, and every call and operator Spark parses are
+  // translated after parsing.
   import _root_.graft.plans.rewrite.RewriteSupport._
   import _root_.graft.plans.rewrite.SkeletonPasses._
   import _root_.graft.plans.rewrite.JsCoercionPasses._
   import _root_.graft.plans.rewrite.IntervalPasses._
-  import _root_.graft.plans.rewrite.PlanCalls
+  import _root_.graft.plans.rewrite.{NotInExists, PlanCalls, SelectAliases}
 
   /** The text half of the translation: one squirreling-dialect
-    * statement as text Spark's parser reads. Function calls and the
-    * operators PlanCalls owns are left as written; the host entry points
-    * translate them on the parsed plan. */
-  def rewrite(sqlText: String): String = rewriteImpl(sqlText, notInExists = true)
-
-  private def rewriteImpl(sqlText: String, notInExists: Boolean): String = {
+    * statement as text Spark's parser reads. Select aliases, NOT IN,
+    * function calls and the operators PlanCalls owns are left as
+    * written; the host entry points translate them on the parsed plan.
+    */
+  def rewrite(sqlText: String): String = {
     var s = sqlText
 
     // comments go first — they are whitespace to the engine, and every
@@ -83,11 +85,6 @@ object GraftSql {
 
     // comma-joined table functions next (they restructure the FROM)
     s = rewriteCommaTvf(s)
-
-    // chained GROUP BY aliases / aliases inside ORDER BY aggregates
-    s = rewriteAliasExpansion(s)
-
-    if (notInExists) s = rewriteNotInSubquery(s)
 
     // ->> / -> json access chains (j -> 'a' ->> 0 ...) collapse into ONE
     // get_json_object with a combined path — both more efficient (one
@@ -253,7 +250,9 @@ object GraftSql {
     // unit-form date_diff('day', a, b): reference semantics are calendar
     // diff for YEAR/MONTH and truncated elapsed time for smaller units
     // (reference: src/expression/date.js:110) — not Spark's datediff;
-    // only the string-unit form reroutes (first argument a literal)
+    // only the string-unit form reroutes (first argument a literal).
+    // Text: Spark's parser rejects a quoted unit
+    // (INVALID_PARAMETER_VALUE.DATETIME_UNIT).
     s = tokenEdit(s) { v =>
       val t = v.toks
       t.indices.collect {
@@ -410,26 +409,26 @@ object GraftSql {
 
   /** The one path from dialect text to an analyzed plan, shared by every
     * host entry point. In order: strip comments and run the token lint;
-    * run the text passes once; parse once, in the session's conf, and
-    * translate the parsed plan's calls; run the duplicate-CTE check and
-    * the set-op guard on that plan; analyze that same plan once. `Left` is the misparse gate's reason for refusing the
-    * text. When the analysis (or parse) of a text carrying the NOT IN →
-    * NOT EXISTS form (`__nin`) fails, the text is rewritten once more
-    * with NOT IN left as written, and that plan is analyzed instead.
+    * run the text passes once; parse once, in the session's conf; on the
+    * parsed plan substitute select aliases, translate NOT IN, then the
+    * calls; run the duplicate-CTE check and the set-op guard on that
+    * plan; analyze that same plan once. `Left` is the misparse gate's
+    * reason for refusing the text. When the analysis of a plan carrying
+    * the NOT IN translation fails, the same parsed plan is translated
+    * without it and analyzed instead.
     */
   private def prepare(spark: SparkSession, sqlText: String): Either[String, Prepared] = {
     ensureHelpers(spark)
     val text = stripComments(sqlText).stripTrailing()
     tokenLint(text).toLeft(()).flatMap { _ =>
-      def analyze(parsed: LogicalPlan) = Prepared(parsed, GraftPlanBridge.ofRows(spark, parsed))
-      def parseCalls(rewritten: String) = GraftPlanBridge.parse(spark, rewritten, PlanCalls(_))
-      val rewritten = rewriteImpl(text, notInExists = true)
-      try {
-        val parsed = parseCalls(rewritten)
-        duplicateCte(parsed).orElse(setOpTypeGuard(spark, parsed)).toLeft(analyze(parsed))
-      } catch {
-        case _: AnalysisException if rewritten.contains("__nin") =>
-          Right(analyze(parseCalls(rewriteImpl(text, notInExists = false))))
+      val parsed = SelectAliases(GraftPlanBridge.parse(spark, rewrite(text)))
+      val notIn = NotInExists(parsed)
+      def calls(p: LogicalPlan) = GraftPlanBridge.active(spark)(PlanCalls(p))
+      def analyze(p: LogicalPlan) = Prepared(p, GraftPlanBridge.ofRows(spark, p))
+      val plan = calls(notIn)
+      duplicateCte(plan).orElse(setOpTypeGuard(spark, plan)).toLeft {
+        try analyze(plan)
+        catch { case _: AnalysisException if notIn != parsed => analyze(calls(parsed)) }
       }
     }
   }
@@ -660,7 +659,7 @@ object GraftSql {
         // select-list names laterally before derivedAlias runs
         // (node-probed: `SELECT (k+10) k, k` names the second column
         // `k_+_10`, value k+10; seed-134777 mutation find). First
-        // definition wins, matching the expansion pass's dup rule.
+        // definition wins.
         val earlierAlias = scala.collection.mutable.Map[
           String, org.apache.spark.sql.catalyst.expressions.Expression]()
         def lateralName(a: UnresolvedAttribute): Option[String] =

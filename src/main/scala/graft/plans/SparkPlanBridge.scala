@@ -13,14 +13,13 @@ object GraftPlanBridge {
     spark.asInstanceOf[classic.SparkSession]
 
   /** Parse SQL text as `spark.sql` does: with `spark` active, so the
-    * parser reads that session's conf (`doubleQuotedIdentifiers`, ANSI).
-    * `post` runs on the parsed plan under the same conf, so the nodes it
-    * builds (casts, arithmetic) take the modes the parser's would. */
-  def parse(spark: SparkSession, sqlText: String,
-            post: LogicalPlan => LogicalPlan = identity): LogicalPlan = {
-    val session = classicSession(spark)
-    session.withActive(post(session.sessionState.sqlParser.parsePlan(sqlText)))
-  }
+    * parser reads that session's conf (`doubleQuotedIdentifiers`, ANSI). */
+  def parse(spark: SparkSession, sqlText: String): LogicalPlan =
+    active(spark)(classicSession(spark).sessionState.sqlParser.parsePlan(sqlText))
+
+  /** Run `f` with `spark` active, so the nodes a transform of the parsed
+    * plan builds (casts, arithmetic) take the modes the parser's did. */
+  def active[T](spark: SparkSession)(f: => T): T = classicSession(spark).withActive(f)
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(classicSession(spark), plan)

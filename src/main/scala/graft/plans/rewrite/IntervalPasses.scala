@@ -50,6 +50,20 @@ private[plans] object IntervalPasses {
   }
 
 
+  /** The left operand of the `±` at token `site`, as
+    * `View.primaryBefore` reads it, with a typed literal's DATE/TIMESTAMP
+    * keyword absorbed: the whole literal is the operand (wrapping only
+    * its quoted half would leave `DATE (…)`, which Spark reads as a
+    * cast to DATE, or `DATE graft_js_interval(…)`, a parse error). */
+  private def operandBefore(v: SqlTok.View, site: Int): (Int, Int, Int) = {
+    val (pIdx, pStart, pEnd) = v.primaryBefore(site)
+    if (pEnd > pStart && v.s.charAt(pStart) == '\'' && pIdx > 0 &&
+        (v.toks(pIdx - 1).is("DATE") || v.toks(pIdx - 1).is("TIMESTAMP")))
+      (pIdx - 1, v.toks(pIdx - 1).start, pEnd)
+    else (pIdx, pStart, pEnd)
+  }
+
+
   /** EVERY `expr ± INTERVAL v <unit>` runs through graft_js_interval —
     * the exact toDate → applyIntervalToDate → format chain (reference:
     * src/expression/date.js:13-41,133-143), whose semantics diverge
@@ -137,7 +151,9 @@ private[plans] object IntervalPasses {
     // chained ops (`d + INTERVAL 1 DAY - INTERVAL 2 HOUR`): the outer
     // call's operand is the inner call — thread the ORIGINAL operand's
     // kind through so each step reformats like the reference
-    // (a date-only string stays date-only at every step)
+    // (a date-only string stays date-only at every step). PlanCalls
+    // threads it the same way through a select alias; here it also keeps
+    // a step's kind from repeating the whole inner call's text
     var lastCall: Option[(String, String)] = None
     while (guard < 1000) {
       guard += 1
@@ -163,16 +179,7 @@ private[plans] object IntervalPasses {
       if (site < 0) return s
       val opTok = toks(site)
       val siteEnd = toks(site + 2 + consumed).end
-      val (pIdx, pStart0, pEnd) = v.primaryBefore(site)
-      // a quoted primary may be the tail of a typed literal —
-      // absorb the DATE/TIMESTAMP keyword so the whole literal
-      // rides into the call (else `DATE graft_js_interval(…)`
-      // would be left behind, a parse error)
-      val pStart =
-        if (pEnd > pStart0 && s.charAt(pStart0) == '\'' && pIdx > 0 &&
-            (toks(pIdx - 1).is("DATE") || toks(pIdx - 1).is("TIMESTAMP")))
-          toks(pIdx - 1).start
-        else pStart0
+      val (pIdx, pStart, pEnd) = operandBefore(v, site)
       val p = s.substring(pStart, pEnd)
       // same chain guards as rewriteIntervalOperands: a primary
       // that is itself a unit keyword / bare number / the quoted
@@ -353,7 +360,7 @@ private[plans] object IntervalPasses {
       }
       if (site < 0) return s
       val intervalEnd = toks(site + 1).end
-      val (pIdx, pStart, pEnd) = v.primaryBefore(site)
+      val (pIdx, pStart, pEnd) = operandBefore(v, site)
       val p = s.substring(pStart, pEnd)
       val quotedAfterInterval = p.startsWith("'") && pIdx > 0 &&
         toks(pIdx - 1).is("INTERVAL")

@@ -31,13 +31,19 @@ private[plans] object PlanCalls {
     * and FROM-clause table functions included. */
   def apply(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
     // CTE bodies and WINDOW definitions are not children/expressions
-    case w: UnresolvedWith =>
-      w.copy(cteRelations = w.cteRelations.map { case (name, body, r) =>
-        (name, apply(body).asInstanceOf[SubqueryAlias], r)
-      })
+    case w: UnresolvedWith => cteBodies(w)(apply)
+    // a ranking/offset function over a named window reads the definition
+    // in place, so an unordered one takes the input order; aggregate
+    // windows keep the name and their whole-partition frame
     case w: WithWindowDefinition =>
-      w.copy(windowDefinitions = w.windowDefinitions.map { case (name, spec) =>
+      val defs = w.windowDefinitions.map { case (name, spec) =>
         name -> expression(spec).asInstanceOf[WindowSpecDefinition]
+      }
+      w.copy(windowDefinitions = defs, child = w.child.transformUp { case p =>
+        p.transformExpressionsUp {
+          case UnresolvedWindowExpression(f: UnresolvedFunction, WindowSpecReference(name))
+              if inputOrdered(f) && defs.contains(name) => inputOrder(WindowExpression(f, defs(name)))
+        }
       })
     case t: UnresolvedTableValuedFunction =>
       t.transformExpressionsUp(rule) match {
@@ -50,6 +56,12 @@ private[plans] object PlanCalls {
       }
     case p => p.transformExpressionsUp(rule)
   }
+
+  /** `w` with `f` applied to each CTE body. */
+  private[rewrite] def cteBodies(w: UnresolvedWith)(f: LogicalPlan => LogicalPlan): UnresolvedWith =
+    w.copy(cteRelations = w.cteRelations.map { case (name, body, r) =>
+      (name, f(body).asInstanceOf[SubqueryAlias], r)
+    })
 
   /** The same translation over one expression tree. */
   def expression(e: Expression): Expression = e.transformUp(rule)
@@ -86,9 +98,13 @@ private[plans] object PlanCalls {
     // ranking/offset windows without ORDER BY number rows in input order
     // in the reference, and Spark requires one: the input order made
     // explicit (aggregate windows keep their whole-partition frame)
-    case w @ WindowExpression(f: UnresolvedFunction, s: WindowSpecDefinition)
-        if s.orderSpec.isEmpty && inputOrdered(f.nameParts.last.toLowerCase(java.util.Locale.ROOT)) =>
+    case w @ WindowExpression(f: UnresolvedFunction, _) if inputOrdered(f) => inputOrder(w)
+  }
+
+  private def inputOrder(w: WindowExpression): WindowExpression = w.windowSpec match {
+    case s: WindowSpecDefinition if s.orderSpec.isEmpty =>
       w.copy(windowSpec = s.copy(orderSpec = Seq(SortOrder(fn("monotonically_increasing_id"), Ascending))))
+    case _ => w
   }
 
   /** A sum or difference over a translated `||` on its left that starts
@@ -129,8 +145,10 @@ private[plans] object PlanCalls {
   private def nonZero(d: Expression): Expression =
     fn("nullif", d, d match { case Str(_) => lit(0.0); case _ => lit(0) })
 
-  private val inputOrdered = Set("row_number", "rank", "dense_rank", "ntile",
+  private val inputOrderedNames = Set("row_number", "rank", "dense_rank", "ntile",
     "lag", "lead", "percent_rank", "cume_dist")
+  private def inputOrdered(f: UnresolvedFunction): Boolean =
+    inputOrderedNames(f.nameParts.last.toLowerCase(java.util.Locale.ROOT))
 
   private def translate(f: UnresolvedFunction): Expression = {
     val key = f.nameParts.head.toLowerCase(java.util.Locale.ROOT)
@@ -626,7 +644,20 @@ private[plans] object PlanCalls {
     "list_min" -> rename("array_min"),
     "list_max" -> rename("array_max"),
     "ord" -> rename("ascii"),
-    "epoch" -> rename("graft_epoch"))
+    "epoch" -> rename("graft_epoch"),
+    // not a dialect name: the interval text pass emits it. A step whose
+    // operand is another step's output keeps that step's operand kind, so
+    // a date-only string stays date-only at every step of a chain, as in
+    // the reference; the pass threads the kind through a written chain
+    // itself, and this case does it for a chain through a select alias
+    "graft_js_interval" -> (f => f.arguments match {
+      case Seq(c: Cast, v, unit, op, _) => c.child match {
+        case step: UnresolvedFunction if step.nameParts == f.nameParts && step.arguments.length == 5 =>
+          f.copy(arguments = Seq(c, v, unit, op, step.arguments(4)))
+        case _ => f
+      }
+      case _ => f
+    }))
 
   private def jsonExtract(name: String)(f: UnresolvedFunction): Expression = f.arguments match {
     case Seq(x, p) => fn("get_json_object", jsonStrictInput(name, x), jsonPath(p))

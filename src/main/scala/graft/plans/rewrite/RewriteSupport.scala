@@ -13,17 +13,6 @@ private[plans] object RewriteSupport {
 
   import SqlTok.splitTopLevel
 
-  // The keywords that may follow a `)` at the end of a select item
-  // without being an IMPLICIT ALIAS: `CASE … THEN (x) END` must not
-  // register a phantom `end` alias. Named as ONE set (vs the round-11/12
-  // shape of ad-hoc exclusions ordered under per-pass guards) so a future
-  // dialect keyword lands here instead of silently reading as an alias.
-  // ILIKE and OVER also follow a `)`, but each takes an operand after
-  // it, so neither can end an item. Consumer: rewriteAliasExpansion
-  // (implicit-alias capture).
-  private[plans] val postParenKeywords = Set("END")
-
-
   private[plans] val jsonScalarLit =
     raw"""[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?|true|false|null|"([^"\\]|\\.)*"""".r
 
@@ -172,34 +161,5 @@ private[plans] object RewriteSupport {
       i += 1
     }
     sb.append('$').toString
-  }
-
-
-  /** The [start, end) char span of the TOP-LEVEL select list (first
-    * SELECT at paren-depth 0 up to its FROM), or None for
-    * non-SELECT-headed text.
-    */
-  private[plans] def topSelectSpan(s: String): Option[(Int, Int)] = {
-    val v = new SqlTok.View(s)
-    val sel = v.topIdx(0, v.toks.length)(_.is("SELECT"))
-    if (sel < 0) return None
-    val from = v.topIdx(sel + 1, v.toks.length)(_.is("FROM"))
-    if (from < 0) None else Some((v.toks(sel).end, v.toks(from).start))
-  }
-
-
-  /** Char position of the first of `kws` as a Word token at paren depth
-    * 0 within chars `[from, to0)`. Returns -1 when none.
-    */
-  private[plans] def topKwPos(s: String, from: Int, to0: Int, kws: Seq[String]): Int = {
-    val v = new SqlTok.View(s)
-    val to = math.min(to0, s.length)
-    var i = v.tokAtOrAfter(from)
-    while (i < v.toks.length && v.toks(i).start < to) {
-      if (v.depth(i) == 0 && v.toks(i).kind == SqlTok.Word &&
-          kws.contains(v.toks(i).up)) return v.toks(i).start
-      i += 1
-    }
-    -1
   }
 }

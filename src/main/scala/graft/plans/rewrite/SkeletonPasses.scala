@@ -4,14 +4,13 @@ package rewrite
 /** Statement-SKELETON rewrites: passes that restructure the query
   * shape (FROM-first statements, set-op arm tails, DISTINCT ON,
   * comma-joined table functions, POSITIONAL JOIN) or re-anchor
-  * clause-level semantics (alias expansion, bare-DESC null ordering,
-  * NOT IN (subquery) null semantics). They run FIRST in
-  * [[GraftSql.rewrite]]'s ordered pipeline — every later pass anchors
-  * on the SELECT skeleton these emit.
+  * bare-DESC null ordering. They run FIRST in [[GraftSql.rewrite]]'s
+  * ordered pipeline — every later pass anchors on the SELECT skeleton
+  * these emit.
   */
 private[plans] object SkeletonPasses {
 
-  import SqlTok.{matchParen, splitTopLevel}
+  import SqlTok.splitTopLevel
   import RewriteSupport._
 
   /** DuckDB-style FROM-first queries: the reference's parseSelect reads
@@ -46,18 +45,6 @@ private[plans] object SkeletonPasses {
     }
 
 
-  /** `lhs NOT IN (SELECT ...)` carries the reference's TWO-VALUED null
-    * semantics (execute/join.js:283,310 — null keys are skipped on both
-    * build and probe, so a null in the subquery cannot empty the result
-    * and a null lhs is KEPT). Spark's NOT IN is standard SQL: one null
-    * poisons everything, planned as a null-aware anti join. Rewriting to
-    * NOT EXISTS with null-rejecting equality reproduces the reference's
-    * rows AND plans as a plain (broadcastable) anti join instead of the
-    * NAAJ — faithful and faster. Only simple lhs shapes (qualified
-    * column / single call, not the tail of a larger expression) rewrite;
-    * a correlated subquery fails analysis inside the derived table, so
-    * execution-path callers retry without this rewrite (SQL semantics).
-    */
   /** Mid-chain ORDER BY / LIMIT / OFFSET tails on set-operation ARMS.
     * The reference parses each SELECT's own tail, then LIFTS the tail
     * of every RIGHT operand onto the compound node it just built —
@@ -201,14 +188,13 @@ private[plans] object SkeletonPasses {
         // the projection (the idiomatic Postgres shape: SELECT DISTINCT ON
         // (k) payload ... ORDER BY k, ts DESC) — project each ordering
         // expression into the inner query under a reserved alias, order the
-        // outer query by the aliases, then EXCEPT them away. Select-list
-        // ALIASES and ORDINALS in the ORDER BY are resolved to their
-        // underlying projection expressions first (a window cannot
-        // reference a lateral alias, and ordinals inside OVER() would be
-        // constants).
+        // outer query by the aliases, then EXCEPT them away. ORDINALS in
+        // the ORDER BY are resolved to their underlying projection
+        // expressions first (inside OVER() they would be constants);
+        // select-list ALIASES are substituted on the parsed plan, as in
+        // any later item of a select list.
         val projItems = splitTopLevel(proj)
         val aliasRe = raw"(?is)^(.+?)\s+AS\s+([A-Za-z_]\w*)\s*$$".r
-        val aliasMap = projItems.collect { case aliasRe(e, a) => a.toLowerCase(java.util.Locale.ROOT) -> e.trim }.toMap
         def baseExpr(item: String): String = item match {
           case aliasRe(e, _) => e.trim
           case other => other.trim
@@ -223,7 +209,7 @@ private[plans] object SkeletonPasses {
               case Some(n) if n >= 1 && n <= projItems.length => baseExpr(projItems(n - 1))
               case _ => t
             }
-          } else aliasMap.getOrElse(t.toLowerCase(java.util.Locale.ROOT), t)
+          } else t
         }
         val dirRe = raw"(?is)^(.*?)((?:\s+(?:ASC|DESC))?(?:\s+NULLS\s+(?:FIRST|LAST))?)\s*$$".r
         val ordItems = splitTopLevel(windowOrder).zipWithIndex.map { case (item, i) =>
@@ -436,240 +422,6 @@ private[plans] object SkeletonPasses {
   }
 
 
-  /** The reference substitutes select aliases SEQUENTIALLY into every
-    * later expression — later select items, GROUP BY, HAVING, ORDER BY
-    * — even when the alias name shadows a real input column
-    * (node-probed: `SELECT k + 1 AS k, k * 2 AS d` gives d = (k+1)·2;
-    * `SELECT MOD(k,3) AS k, SUM(k) ... GROUP BY k` sums the ALIAS).
-    * Spark's resolution differs on exactly the shadowing cases: select
-    * items and GROUP BY prefer the input column, and a bare name inside
-    * an ORDER-BY aggregate resolves against the aggregate OUTPUT
-    * (circular for a self-shadow). This rewrite expands alias
-    * references to the underlying expressions, index-aware: a reference
-    * substitutes only aliases defined EARLIER in the select list
-    * (forward references error in the reference and must keep
-    * erroring), and inside alias `a`'s own expression the name `a` is
-    * the base column — the ordering makes the expansion terminate.
-    */
-  private[plans] def rewriteAliasExpansion(sqlIn: String): String = {
-    val span = topSelectSpan(sqlIn).getOrElse(return sqlIn)
-    val rawItems = splitTopLevel(sqlIn.substring(span._1, span._2))
-    val aliasRe = raw"(?is)^(.*\S)\s+AS\s+([A-Za-z_]\w*)\s*$$".r
-    // IMPLICIT aliases (the AS dropped) resolve identically in the
-    // reference — `(expr) name` / `col name` are the two textually
-    // unambiguous shapes (a bare identifier straight after a complete
-    // primary can only be an alias). Seed-132777 mutation find: `(k - MOD(k, 5)) k
-    // GROUP BY k` groups by the ALIAS in the reference, the shadowed
-    // column in Spark — wrong row count without the expansion.
-    val implicitParenRe = raw"(?is)^(.*\))\s+([A-Za-z_]\w*)\s*$$".r
-    // `CASE … END ident` is an implicit alias too (probed live: dup
-    // names resolve to one column, and the alias substitutes laterally)
-    // — without this capture, expand() would read the trailing ident as
-    // a REFERENCE and splice an expression into alias position
-    // (seed-r14 mutation find: `… END c1` after an `AS c1` item)
-    val implicitEndRe = raw"(?is)^(.*\bEND)\s+([A-Za-z_]\w*)\s*$$".r
-    val implicitColRe = raw"(?is)^([A-Za-z_][\w.]*)\s+([A-Za-z_]\w*)\s*$$".r
-    // `DISTINCT x` / `ALL x` are quantified items and `NOT x` is a unary
-    // predicate — the only ident-ident select shapes that are NOT an
-    // implicit alias
-    val notAliasHead = Set("distinct", "all", "not")
-    // a keyword straight after `)` is part of the EXPRESSION, never an
-    // implicit alias: `CASE WHEN a THEN (b) END` must not register a
-    // phantom alias `end` (which would drop the END keyword from the
-    // captured expression and suppress a real alias of that name via
-    // the dup rule) — postParenKeywords, the one named home for
-    // post-paren keywords
-    val notAliasTail = postParenKeywords.map(_.toLowerCase(java.util.Locale.ROOT))
-    val aliasSeq: Seq[(String, (String, Int))] = rawItems.zipWithIndex.flatMap {
-      case (it, i) => it match {
-        case aliasRe(e, a) => Some(a.toLowerCase(java.util.Locale.ROOT) -> (e.trim, i))
-        case implicitParenRe(e, a) if !notAliasTail(a.toLowerCase(java.util.Locale.ROOT)) =>
-          Some(a.toLowerCase(java.util.Locale.ROOT) -> (e.trim, i))
-        case implicitEndRe(e, a) if !notAliasTail(a.toLowerCase(java.util.Locale.ROOT)) =>
-          Some(a.toLowerCase(java.util.Locale.ROOT) -> (e.trim, i))
-        case implicitColRe(e, a) if !notAliasHead(e.toLowerCase(java.util.Locale.ROOT)) &&
-            !notAliasHead(a.toLowerCase(java.util.Locale.ROOT)) =>
-          Some(a.toLowerCase(java.util.Locale.ROOT) -> (e.trim, i))
-        case _ => None
-      }
-    }
-    // a duplicated alias is ambiguous — leave those names untouched
-    // (Spark rejects references to them; the mutation battery counts
-    // that rejection as deliberate strictness)
-    val dup = aliasSeq.groupBy(_._1).collect { case (n, vs) if vs.size > 1 => n }.toSet
-    val aliases: Map[String, (String, Int)] = aliasSeq.filterNot(p => dup(p._1)).toMap
-    if (aliases.isEmpty) return sqlIn
-    // When the FROM clause is one bare table (optionally aliased), its
-    // qualifier lets a BLOCKED self-reference inside an ORDER-BY
-    // aggregate bind to the INPUT column: Spark resolves a bare `price`
-    // there against the aggregate OUTPUT first (circular reference,
-    // analysis error) — `t.price` can only be the input. Joins/derived
-    // tables get no qualifier (ambiguous anyway).
-    val fromQual: Option[String] = {
-      val fromEnd = topKwPos(sqlIn, span._2, sqlIn.length,
-        Seq("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET",
-          "WINDOW", "QUALIFY", "UNION", "INTERSECT", "EXCEPT")) match {
-        case -1 => sqlIn.length
-        case p => p
-      }
-      raw"(?is)\A([A-Za-z_]\w*)(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?\z".r
-        .findFirstMatchIn(sqlIn.substring(span._2, fromEnd).trim)
-        .map(m => Option(m.group(2)).getOrElse(m.group(1)))
-    }
-    // Substitute alias names defined at an index < `allowed`; an alias
-    // ref blocked by ordering (self/forward) stays the base column —
-    // qualified when `qualifyBlocked` (ORDER-BY-aggregate context). A
-    // name followed by `(` is a function call, a name next to `.` is
-    // part of a qualified column — neither is an alias ref. Recursion
-    // terminates because `allowed` strictly decreases.
-    // a nondeterministic alias must not be re-evaluated by textual
-    // duplication (two RAND() calls are two values; the reference
-    // evaluates the cell once) — leave such references to Spark's
-    // native lateral-alias resolution
-    val nondet = raw"(?i)\b(RAND|RANDOM|NOW|UUID|CURRENT_DATE|CURRENT_TIME|CURRENT_TIMESTAMP)\b".r
-    def expand(e: String, allowed: Int, qualifyBlocked: Boolean): String = {
-      val v = new SqlTok.View(e)
-      val t = v.toks
-      val edits = Seq.newBuilder[(Int, Int, String)]
-      var k = 0
-      while (k < t.length) {
-        val isRef = t(k).kind == SqlTok.Word &&
-          !(k > 0 && t(k - 1).isOp(".")) &&
-          !(k + 1 < t.length && (t(k + 1).isOp(".") || t(k + 1).kind == SqlTok.LPar))
-        if (isRef) aliases.get(t(k).up.toLowerCase(java.util.Locale.ROOT)) match {
-          case Some((ex, idx)) if idx < allowed && nondet.findFirstIn(ex).isEmpty =>
-            edits += ((t(k).start, t(k).end, s"(${expand(ex, idx, qualifyBlocked)})"))
-          case Some((_, idx)) if idx >= allowed && qualifyBlocked && fromQual.isDefined =>
-            edits += ((t(k).start, t(k).end,
-              s"${fromQual.get}.${e.substring(t(k).start, t(k).end)}"))
-          case _ => ()
-        }
-        k += 1
-      }
-      SqlTok.applyEdits(e, edits.result())
-    }
-    var s = sqlIn
-    // 1) SELECT items: lateral / shadowing references to EARLIER
-    //    aliases. Items containing a subquery are left alone — the
-    //    regex cannot tell inner scopes apart.
-    val newItems = rawItems.zipWithIndex.map { case (it, i) =>
-      if (raw"(?i)\(\s*SELECT\b".r.findFirstIn(it).isDefined) it
-      else it match {
-        case aliasRe(e, a) =>
-          val ne = expand(e, i, qualifyBlocked = false)
-          if (ne == e) it else s"$ne AS $a"
-        case _ =>
-          val ne = expand(it, i, qualifyBlocked = false)
-          if (ne == it) it else ne
-      }
-    }
-    if (newItems != rawItems)
-      s = s.substring(0, span._1) + " " + newItems.map(_.trim).mkString(", ") +
-        " " + s.substring(span._2)
-    // re-locate the select span after the item rewrite shifted offsets
-    val span2 = topSelectSpan(s).getOrElse(return s)
-    // the TOP query block only — a nested subquery's (or a later UNION
-    // arm's) GROUP BY / HAVING has its own select list, which these
-    // aliases must not leak into
-    val regionEnd = topKwPos(s, span2._2, s.length,
-      Seq("UNION", "INTERSECT", "EXCEPT")) match {
-      case -1 => s.length
-      case p => p
-    }
-    val nItems = rawItems.length
-    // 2) GROUP BY: a bare-identifier term that names an alias always
-    //    expands (for a non-shadowing name the expansion is a semantic
-    //    no-op; for a shadowing one it is the divergence)
-    val gPos = topKwPos(s, span2._2, regionEnd, Seq("GROUP"))
-    if (gPos >= 0) {
-      raw"(?is)\AGROUP\s+BY\s+".r.findPrefixMatchOf(
-        s.substring(gPos, regionEnd)).foreach { bm =>
-        val termsStart = gPos + bm.end
-        val termsEnd = topKwPos(s, termsStart, regionEnd,
-          Seq("HAVING", "ORDER", "LIMIT", "OFFSET", "WINDOW", "QUALIFY")) match {
-          case -1 => regionEnd
-          case p => p
-        }
-        val terms = splitTopLevel(s.substring(termsStart, termsEnd)).map(_.trim)
-        val newTerms = terms.map { t =>
-          aliases.get(t.toLowerCase(java.util.Locale.ROOT)) match {
-            // a nondeterministic alias stays a bare name: textual
-            // duplication would re-evaluate it, and Spark's native
-            // groupByAliases resolution keeps the single evaluation
-            case Some((ex, idx)) if nondet.findFirstIn(ex).isEmpty =>
-              s"(${expand(ex, idx, qualifyBlocked = false)})"
-            case _ => t
-          }
-        }
-        if (newTerms != terms)
-          s = s.substring(0, termsStart) + newTerms.mkString(", ") + " " +
-            s.substring(termsEnd)
-      }
-    }
-    // 3) HAVING: the reference substitutes aliases here too (node-probed:
-    //    `... price - discount AS price GROUP BY price HAVING price > 10`
-    //    filters on the expanded value). Region bounds recomputed — the
-    //    GROUP BY edit above may have shifted every later offset.
-    val regionEnd2 = topKwPos(s, span2._2, s.length,
-      Seq("UNION", "INTERSECT", "EXCEPT")) match {
-      case -1 => s.length
-      case p => p
-    }
-    val hPos = topKwPos(s, span2._2, regionEnd2, Seq("HAVING"))
-    if (hPos >= 0) {
-      val hStart = hPos + "HAVING".length
-      val hEnd = topKwPos(s, hStart, regionEnd2,
-        Seq("ORDER", "LIMIT", "OFFSET", "WINDOW", "QUALIFY")) match {
-        case -1 => regionEnd2
-        case p => p
-      }
-      val body = s.substring(hStart, hEnd)
-      val nb = expand(body, nItems, qualifyBlocked = false)
-      if (nb != body) s = s.substring(0, hStart) + nb + s.substring(hEnd)
-    }
-    // 4) ORDER BY: only aliases INSIDE aggregate calls need expanding —
-    //    for a bare (even nested) alias ref Spark's output-first sort
-    //    resolution already matches the reference's substitution, but
-    //    inside an aggregate the output ref is circular for a shadow
-    locally {
-      val aggNames = Set("SUM", "MIN", "MAX", "AVG", "COUNT")
-      val v = new SqlTok.View(s)
-      val t = v.toks
-      // only TOP-LEVEL (depth 0) ORDER BY clauses — a window-spec or
-      // subquery ORDER BY must not anchor the scan — and each scan
-      // stops at the clause end (the next depth-0 LIMIT/OFFSET or
-      // set-op keyword), never at-large to end-of-statement
-      val clauseStop = Set("LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT")
-      val edits = Seq.newBuilder[(Int, Int, String)]
-      for (ob <- t.indices
-           if v.depth(ob) == 0 && t(ob).is("ORDER") &&
-             ob + 1 < t.length && t(ob + 1).is("BY")) {
-        var k = ob + 2
-        var inClause = true
-        while (inClause && k < t.length) {
-          if (v.depth(k) == 0 && t(k).kind == SqlTok.Word &&
-              clauseStop(t(k).up)) inClause = false
-          else {
-            if (k + 3 < t.length &&
-                t(k).kind == SqlTok.Word && aggNames(t(k).up) &&
-                t(k + 1).kind == SqlTok.LPar && t(k + 2).kind == SqlTok.Word &&
-                t(k + 3).kind == SqlTok.RPar) {
-              aliases.get(t(k + 2).up.toLowerCase(java.util.Locale.ROOT)).foreach {
-                case (ex, idx) =>
-                  edits += ((t(k + 2).start, t(k + 2).end,
-                    s"(${expand(ex, idx, qualifyBlocked = true)})"))
-              }
-            }
-            k += 1
-          }
-        }
-      }
-      s = SqlTok.applyEdits(s, edits.result())
-    }
-    s
-  }
-
-
   /** Reference null ordering: nulls sort FIRST regardless of direction
     * unless NULLS LAST is explicit (execute/utils.js:19-23 — the null
     * branch returns BEFORE the DESC flip). Spark's bare-DESC default is
@@ -704,51 +456,6 @@ private[plans] object SkeletonPasses {
       k += 1
     }
     SqlTok.applyInserts(sqlIn, edits.toList)
-  }
-
-
-  private[plans] def rewriteNotInSubquery(sqlIn: String): String = {
-    var s = sqlIn
-    var from = 0
-    var n = 0
-    var guard = 0
-    while (guard < 100) {
-      guard += 1
-      val v = new SqlTok.View(s)
-      val t = v.toks
-      var k = -1
-      var i = 0
-      while (k < 0 && i + 3 < t.length) {
-        if (t(i).is("NOT") && t(i).start >= from && t(i + 1).is("IN") &&
-            t(i + 2).kind == SqlTok.LPar && v.brk(i + 2) >= 0 &&
-            t(i + 3).is("SELECT")) k = i
-        else i += 1
-      }
-      if (k < 0) return s
-      val close = v.brk(k + 2)
-      val (pIdx, pStart, pEnd) = v.primaryBefore(k)
-      // the lhs must be a simple column/call primary, and not the TAIL
-      // of a larger expression (`x + y NOT IN (...)` would splice
-      // mid-expression) — skip when an operator precedes it
-      val headOk = pEnd > pStart && t(pIdx).kind == SqlTok.Word
-      val exprTail = pIdx > 0 && t(pIdx - 1).kind == SqlTok.Op &&
-        t(pIdx - 1).up.lastOption.exists(c => "+-*/%|&^~".contains(c))
-      if (!headOk || exprTail) from = t(k + 2).end
-      else {
-        val lhs = s.substring(pStart, pEnd)
-        val inner = s.substring(t(k + 2).end, t(close).start).trim
-        // <=> not =: the reference's IN walks sqlEquals (JS ==,
-        // null == null TRUE — execute/utils.js:136-139), so a NULL
-        // probe DOES match a null-bearing list and NOT IN drops the
-        // row; plain = would read the pair as UNKNOWN and keep it
-        val repl = s"NOT EXISTS (SELECT 1 FROM ($inner) " +
-          s"AS __nin$n(__nin_c) WHERE __nin_c <=> $lhs)"
-        s = s.substring(0, pStart) + repl + s.substring(t(close).end)
-        from = pStart + repl.length
-        n += 1
-      }
-    }
-    s
   }
 
 

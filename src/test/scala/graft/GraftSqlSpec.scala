@@ -960,6 +960,13 @@ class GraftSqlSpec extends SparkSpec {
     assert(g("chain_ts") == "2024-03-10T22:00:00Z", g("chain_ts"))
     // left-interval form (evaluate.js:182): commutes, rollover intact
     assert(g("left_form") == "2024-05-01T00:00:00Z", g("left_form"))
+    // a chain through a select alias reads like the written chain, in any
+    // block: every step keeps the date-only kind of the first operand
+    val written = GraftSql.sql(spark,
+      "SELECT d + INTERVAL 1 MONTH - INTERVAL 1 MINUTE AS n FROM ivl_t").collect().head
+    val viaAlias = "SELECT d + INTERVAL 1 MONTH AS m, m - INTERVAL 1 MINUTE AS n FROM ivl_t"
+    for (q <- Seq(viaAlias, s"SELECT n FROM ($viaAlias) s"))
+      assert(GraftSql.sql(spark, q).select("n").collect().head == written, q)
     // a typed-constant head with a MONTH tail must NOT take the native
     // fast path — the whole chain keeps JS semantics (Feb 31 rolls to
     // Mar 2; node-probed against applyIntervalToDate)
@@ -973,6 +980,13 @@ class GraftSqlSpec extends SparkSpec {
     val dlit = GraftSql.sql(spark,
       "SELECT DATE '1995-06-01' - INTERVAL 30 DAY AS r").collect().head
     assert(String.valueOf(dlit.get(0)).startsWith("1995-05-02"), dlit.toString)
+    // ...and is the TIMESTAMP its CAST spelling gives: the operand
+    // coercion wraps the whole literal, never only its quoted half
+    val both = GraftSql.sql(spark, "SELECT DATE '2024-01-01' + INTERVAL 1 DAY AS a, " +
+      "CAST('2024-01-01' AS DATE) + INTERVAL 1 DAY AS b")
+    assert(both.schema("a").dataType == both.schema("b").dataType, both.schema)
+    assert(both.collect().head.toSeq.distinct ==
+      Seq(java.sql.Timestamp.valueOf("2024-01-02 00:00:00")), both.collect().head)
     // Number()-style interval values the reference accepts: '1e2'
     // (100), '.5' (truncates to 0), '+1' — reference parseInterval
     // takes any non-NaN Number(v) (primary.js:388-393)
@@ -1488,5 +1502,43 @@ class GraftSqlSpec extends SparkSpec {
     val cte = GraftSql.sql(spark,
       "WITH a AS (SELECT 1 AS c0) SELECT c0 FROM a UNION SELECT 2 AS c0 ORDER BY c0").collect()
     assert(cte.length == 2)
+  }
+
+  test("select aliases and NOT IN read the same wherever the SELECT sits") {
+    // the reference reads every SELECT's aliases in order and every NOT IN
+    // with JS ==, whatever the position of the block or the lhs shape
+    Seq(1, 2, 3, 10).toDF("k").createOrReplaceTempView("pos_t")
+    Seq(Some(1), Some(2), Some(3)).toDF("x").createOrReplaceTempView("pos_x")
+    Seq(Some(2), None).toDF("v").createOrReplaceTempView("pos_u")
+    val shadow = "SELECT k - 1 AS k, k * 2 AS d FROM pos_t"
+    val top = GraftSql.sql(spark, shadow).collect().map(_.getInt(1)).toSeq.sorted
+    assert(top == Seq(0, 2, 4, 18), top)
+    val notIn = GraftSql.sql(spark, "SELECT x FROM pos_x WHERE x NOT IN (SELECT v FROM pos_u)")
+      .collect().map(_.getInt(0)).toSeq.sorted
+    assert(notIn == Seq(1, 3), notIn)
+    val positions = Seq(
+      "alias in a CTE body" -> (s"WITH c AS ($shadow) SELECT d FROM c", top),
+      "alias in a derived table" -> (s"SELECT d FROM ($shadow) s", top),
+      "alias in a second UNION ALL arm" ->
+        (s"SELECT d FROM (SELECT k, k AS d FROM pos_t WHERE k < 0 UNION ALL $shadow) u", top),
+      "expression NOT IN" -> ("SELECT x FROM pos_x WHERE x + 0 NOT IN (SELECT v FROM pos_u)", notIn),
+      "NOT (x IN …)" -> ("SELECT x FROM pos_x WHERE NOT (x IN (SELECT v FROM pos_u))", notIn))
+    def rows(q: String): Seq[Int] = GraftSql.sql(spark, q).collect().map(_.getInt(0)).toSeq.sorted
+    assert(positions.map { case (where, (q, _)) => where -> rows(q) } ==
+      positions.map { case (where, (_, want)) => where -> want })
+  }
+
+  test("ranking over a named window without ORDER BY numbers rows in input order") {
+    Seq(1, 2, 3, 4).toDF("k").createOrReplaceTempView("nw_t")
+    val named = GraftSql.sql(spark,
+      """SELECT k, row_number() OVER w AS rn, count(*) OVER w AS c FROM nw_t
+        |WINDOW w AS (PARTITION BY k % 2) ORDER BY k""".stripMargin).collect()
+    val inline = GraftSql.sql(spark,
+      """SELECT k, row_number() OVER (PARTITION BY k % 2) AS rn,
+        |  count(*) OVER (PARTITION BY k % 2) AS c FROM nw_t ORDER BY k""".stripMargin).collect()
+    assert(named.toSeq == inline.toSeq)
+    // the aggregate over the same name keeps its whole-partition frame
+    assert(named.map(_.getLong(2)).toSeq == Seq(2L, 2L, 2L, 2L))
+    assert(named.map(_.getInt(1)).sorted.toSeq == Seq(1, 1, 2, 2))
   }
 }

@@ -28,6 +28,9 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   * 5. One home for the operator translations: `||`/LIKE coercion, zero
   *    divisors, subscripts and window input order are PlanCalls cases,
   *    never text a pass emits.
+  *
+  * 6. Select aliases and NOT IN are read on the parsed plan, never by a
+  *    text pass.
   */
 class RegistryContractsSpec extends SparkSpec {
 
@@ -141,36 +144,55 @@ class RegistryContractsSpec extends SparkSpec {
     assert(callers("""\bspark\.sql\(""").isEmpty, "spark.sql parses the text again")
     assert(callers("""parsePlan\(""").isEmpty,
       "parse with GraftPlanBridge.parse, in the session's conf")
-    // prepare's parse (and its NOT IN fallback), the raw-text parse that
-    // sqlDerived names columns from, and tables, which rewrites and parses only
+    // prepare's one parse (its NOT IN fallback translates the same
+    // parsed plan), the raw-text parse that sqlDerived names columns
+    // from, and tables, which rewrites and parses only
     assert(callers("""GraftPlanBridge\.parse\(""") == Seq("prepare", "sqlDerived", "tables"))
-    assert(callers("""(?<!def )\brewriteImpl\(""") == Seq("prepare", "rewrite"))
+    assert(callers("""(?<!def )(?<![.\w])rewrite\(""") == Seq("derivedAlias", "prepare", "tables"))
     // prepare's one analysis, and sqlStrictNulls' transformed plan
     assert(callers("""GraftPlanBridge\.ofRows\(""") == Seq("prepare", "sqlStrictNulls"))
     // the set-op guard's per-arm analyses
     assert(callers("""executePlan\(""") == Seq("setOpTypeGuard"))
   }
 
-  test("no text pass emits the operator translations PlanCalls owns") {
-    // source scan: a text pass that spliced one of these wraps back in
-    // would translate an operator twice, or a second way
+  /** The text passes' sources: every module under `plans/rewrite` that
+    * never sees a LogicalPlan, and the pipeline in GraftSql.scala; each
+    * `(file, word)` where one holds one of `words`. */
+  private def inTextPasses(words: Seq[String]): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val rewrite = java.nio.file.Paths.get("src/main/scala/graft/plans/rewrite")
-    val passes = {
+    val modules = {
       val list = java.nio.file.Files.list(rewrite)
       try list.iterator().asScala.filter(_.getFileName.toString.endsWith(".scala")).toList
       finally list.close()
-    }.filter(_.getFileName.toString != "PlanCalls.scala") :+
-      java.nio.file.Paths.get("src/main/scala/graft/plans/GraftSql.scala")
-    assert(passes.size > 2, s"no sources under ${rewrite.toAbsolutePath}")
-    val offenders = for {
-      f <- passes
-      src = java.nio.file.Files.readString(f)
-      w <- Seq("graft_js_str(", "nullif(", "graft_get(", "monotonically_increasing_id")
+    }.map(f => f -> java.nio.file.Files.readString(f)).filterNot(_._2.contains("LogicalPlan"))
+    assert(modules.size > 2, s"no text passes under ${rewrite.toAbsolutePath}")
+    val pipeline = java.nio.file.Paths.get("src/main/scala/graft/plans/GraftSql.scala")
+    for {
+      (f, src) <- modules :+ (pipeline -> java.nio.file.Files.readString(pipeline))
+      w <- words
       if src.contains(w)
     } yield s"${f.getFileName}: $w"
+  }
+
+  test("no text pass emits the operator translations PlanCalls owns") {
+    // source scan: a text pass that spliced one of these wraps back in
+    // would translate an operator twice, or a second way
+    val offenders = inTextPasses(
+      Seq("graft_js_str(", "nullif(", "graft_get(", "monotonically_increasing_id"))
     assert(offenders.isEmpty,
       s"translate the operator on the parsed plan, in PlanCalls. Offenders:\n  " +
+        offenders.mkString("\n  "))
+  }
+
+  test("no text pass substitutes select aliases or rewrites NOT IN") {
+    // source scan: both are read on the parsed plan (SelectAliases,
+    // NotInExists), where every SELECT block and every NOT IN shape is
+    // visible; a text pass sees only part of a statement
+    val offenders = inTextPasses(
+      Seq("rewriteAliasExpansion", "rewriteNotInSubquery", "__nin", "notInExists"))
+    assert(offenders.isEmpty,
+      s"substitute aliases and translate NOT IN on the parsed plan. Offenders:\n  " +
         offenders.mkString("\n  "))
   }
 }

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * 9652458; generalized alias-after-paren, seed-88014;
   * ILIKE-after-paren, seed-88015 / commit 665e7d5). The `||` and LIKE
   * operands are now wrapped on the parsed plan, so the pins assert the
-  * TRANSLATED PLAN (text passes, parse, PlanCalls) against the parse of
+  * TRANSLATED PLAN (text passes, parse, plan rules) against the parse of
   * the expected text, still without needing a SparkSession.
   */
 class SqlTokSpec extends AnyFunSuite {
@@ -110,23 +110,6 @@ class SqlTokSpec extends AnyFunSuite {
       "SELECT graft_js_str(graft_js_str('x') || graft_js_str((a + 1))) ILIKE graft_js_str('%2%') FROM t")
   }
 
-  test("postParenKeywords is the ONE named exclusion set (no ordered ad-hoc guards)") {
-    // the fix-shape the advisor flagged: exclusions patched under an
-    // ordered guard invite recurrence. The set spelling means a new
-    // legal follower is one entry, and this pin documents the contract:
-    // every member must keep its own semantic case when following ')'.
-    // Its one consumer is the implicit-alias capture at the END of a
-    // select item, where only END can follow a ')' (ILIKE and OVER take
-    // an operand after them)
-    val src = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("src/main/scala/graft/plans/rewrite/RewriteSupport.scala"))
-    assert(src.contains("postParenKeywords = Set(\"END\")"))
-    val pipeline = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("src/main/scala/graft/plans/GraftSql.scala"))
-    for (s <- Seq(src, pipeline))
-      assert(!s.contains("w != \"ILIKE\""), "ad-hoc exclusion crept back under the guard")
-  }
-
   // ---- round-15 advisor findings: the reference parser is TOKEN-based,
   // so whitespace between a primary and its call-paren / subscript /
   // dot-member suffix is insignificant (`f (x)`, `a [1]`, `t . a` — all
@@ -136,11 +119,11 @@ class SqlTokSpec extends AnyFunSuite {
   test("advisor r15: whitespace-separated call parens are calls (divisor + NOT IN)") {
     translatesTo("SELECT a / abs (b) AS r FROM t",
       "SELECT a / nullif(abs (b), 0) AS r FROM t")
-    // the NULL-semantics NOT-EXISTS rewrite must not silently drop when
-    // the lhs call has a spaced paren
-    val nin = GraftSql.rewrite(
-      "SELECT a FROM t WHERE abs (a) NOT IN (SELECT a FROM t WHERE a > 1)")
-    assert(nin.contains("NOT EXISTS") && nin.contains("<=> abs (a)"), nin)
+    // the NULL-semantics NOT-EXISTS translation must not silently drop
+    // when the lhs call has a spaced paren
+    translatesTo("SELECT a FROM t WHERE abs (a) NOT IN (SELECT a FROM t WHERE a > 1)",
+      "SELECT a FROM t WHERE NOT EXISTS (SELECT 1 FROM (SELECT a FROM t WHERE a > 1) " +
+        "AS __nin(__nin_c) WHERE __nin_c <=> abs (a))")
   }
 
   test("advisor r15: spaced subscripts and dot chains; keywords never take suffixes") {
@@ -170,12 +153,12 @@ class SqlTokSpec extends AnyFunSuite {
   test("advisor r15: ORDER BY agg-alias expansion anchors only at top-level ORDER BY") {
     // the window-spec ORDER BY must not anchor the scan: with a FIRST
     // `ORDER BY` inside OVER(...), a later select-list agg(alias) must
-    // NOT be textually expanded from that anchor
-    val q = "SELECT price - 1 AS p, rank() OVER (ORDER BY q) AS rk, " +
-      "sum(p) AS s FROM t GROUP BY p, q"
-    val out = GraftSql.rewrite(q)
-    // exactly the GROUP-BY-phase expansions; no ORDER-BY-phase rewrite
-    // may touch the select list (no doubled expansion of sum(p))
-    assert(!out.contains("sum((("), out)
+    // NOT be expanded again from that anchor
+    // exactly one expansion of sum(p) and of the GROUP BY term; no
+    // ORDER-BY-phase rewrite may touch the select list
+    translatesTo("SELECT price - 1 AS p, rank() OVER (ORDER BY q) AS rk, " +
+      "sum(p) AS s FROM t GROUP BY p, q",
+      "SELECT price - 1 AS p, rank() OVER (ORDER BY q) AS rk, " +
+        "sum(graft_js_num(price - 1)) AS s FROM t GROUP BY price - 1, q")
   }
 }
