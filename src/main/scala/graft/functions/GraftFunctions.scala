@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 
 /** Named UDF registration surface — the analog of the reference engine's
   * pluggable async-UDF registry (reference: src/index.js registerFunction;
@@ -14,11 +14,11 @@ import org.apache.spark.sql.SparkSession
 object GraftFunctions {
 
   def register(spark: SparkSession): Unit = {
-    if (!spark.catalog.functionExists("graft_score"))
+    if (!GraftPlanBridge.hasSessionFunction(spark, "graft_score"))
       spark.udf.register("graft_score",
         (text: String) =>
           if (text == null) null else java.lang.Long.valueOf(text.getBytes("UTF-8").length % 97L))
-    if (!spark.catalog.functionExists("graft_fingerprint"))
+    if (!GraftPlanBridge.hasSessionFunction(spark, "graft_fingerprint"))
       spark.udf.register("graft_fingerprint",
         (text: String) => if (text == null) null else {
           var h = 0L

@@ -496,9 +496,9 @@ object Vectors {
                        k: Int, nprobe: Int = 2, m: Int = 4, dims: Int = 64,
                        scale: Long = 1000000L, offset: Long = 1000000L): DataFrame = {
     require(k >= 1 && nprobe >= 1, "k and nprobe must be positive")
-    val cells = spark.read.parquet(s"$path/cells")
-    val codebook = spark.read.parquet(s"$path/codebook")
-    val codes = spark.read.parquet(s"$path/codes")
+    val cells = graft.sources.Tables.parquet(spark, s"$path/cells")
+    val codebook = graft.sources.Tables.parquet(spark, s"$path/codebook")
+    val codes = graft.sources.Tables.parquet(spark, s"$path/codes")
     val idCol = codes.columns.filterNot(Set("cell", "pq_codes")).head
     val probed = probeCells(queries, qidCol, embCol, cells, nprobe, dims,
       scale, offset, "searchIvfPqIndex")

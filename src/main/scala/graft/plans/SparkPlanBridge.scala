@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into Spark's private[sql] plan entry points, so GraftSql can
@@ -23,4 +24,10 @@ object GraftPlanBridge {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(classicSession(spark), plan)
+
+  /** Whether the session's function registry holds `name`, where
+    * `spark.udf.register` puts it. `spark.catalog.functionExists` answers
+    * the same for such a function but runs an analyzer pass per call. */
+  def hasSessionFunction(spark: SparkSession, name: String): Boolean =
+    classicSession(spark).sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
 }

@@ -146,7 +146,7 @@ object Layout {
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val staging = AtomicSwap.stagingOf(hPath)
     if (partCols.isEmpty)
-      spark.read.parquet(path).repartition(nOut)
+      Tables.parquet(spark, path).repartition(nOut)
         .write.mode(SaveMode.Overwrite).parquet(staging.toString)
     else {
       // One writer task per partition value (plus byte-proportional
@@ -154,7 +154,7 @@ object Layout {
       // anti-small-file clustering partitionedWrite applies.
       val leafDirs = before.map(_.getPath.getParent).distinct.length
       val subSplits = math.max(1, math.ceil(nOut.toDouble / math.max(1, leafDirs)).toInt)
-      partitionedWrite(spark.read.parquet(path), staging.toString, partCols, subSplits)
+      partitionedWrite(Tables.parquet(spark, path), staging.toString, partCols, subSplits)
     }
     AtomicSwap.commit(fs, hPath)
     (before.length, walk(hPath).length)

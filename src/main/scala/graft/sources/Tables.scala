@@ -1,7 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table registry over the driver-generated parquet star schema.
   *
@@ -15,62 +17,59 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-(session, dir, table) memo of the inferred parquet SCHEMA —
-    * exactly the footer read a catalog table registration would amortize
-    * in production. r16 (guide §1.2 per-task work): a 249-query bench
-    * session paid a fresh schema inference for every `Tables(...)` call —
-    * hundreds of driver-side footer reads per sweep. Only the schema is
-    * memoized: each call still builds a FRESH read (fresh file index), so
-    * overwriting a path mid-session re-reads the new files (Round6Spec
-    * rewrites the same temp dir twice), and no data or file listing goes
-    * stale. A SCHEMA-changing rewrite of the same (session, dir, table)
-    * would read with the stale schema — none of the suite or the driver
-    * does that; a new session or dir always re-infers.
+  /** Per-(session, dir, table) memo of the inferred parquet schema.
+    * [[GraftParquetSchema]] reads one footer on the driver per inference;
+    * the memo saves that read for every repeated (dir, table) pair in a
+    * session (a batch operation calls `Tables(...)` one to three times
+    * while it builds). Only the schema is memoized: each call still
+    * builds a fresh read (fresh file index), so overwriting a path
+    * mid-session re-reads the new files (Round6Spec rewrites the same
+    * temp dir twice), and no data or file listing goes stale. A
+    * schema-changing rewrite of the same (session, dir, table) would read
+    * with the stale schema; a new session or dir always re-infers.
     *
-    * r17 (ADVICE r16): the session key is WEAK — the r16 map strongly
-    * retained every stopped session (and its schemas) for the process
-    * lifetime; a collected session's entries now vanish with it. Each
-    * session's map is additionally bounded: past 1024 entries it is
+    * The session key is weak, so a collected session's entries vanish
+    * with it. Each session's map is bounded: past 1024 entries it is
     * cleared outright (a session cycling that many (dir, table) pairs is
     * a test harness, and a clear only costs re-inference).
-    * [[invalidate]] drops a dir's entries for callers that rewrite a
-    * path with a CHANGED schema mid-session.
     */
   private val schemaMemo = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, String),
-      org.apache.spark.sql.types.StructType]]()
+    scala.collection.concurrent.TrieMap[(String, String), StructType]]()
 
   private def memoFor(spark: SparkSession) = schemaMemo.synchronized {
     var m = schemaMemo.get(spark)
     if (m == null) {
-      m = scala.collection.concurrent.TrieMap
-        .empty[(String, String), org.apache.spark.sql.types.StructType]
+      m = scala.collection.concurrent.TrieMap.empty[(String, String), StructType]
       schemaMemo.put(spark, m)
     }
     m
   }
 
-  /** Drop memoized schemas under `dir` (any session, any table) — for
-    * callers that overwrite a path with a different schema mid-session.
-    */
-  def invalidate(dir: String): Unit = schemaMemo.synchronized {
-    schemaMemo.values.forEach { m =>
-      m.keys.filter(_._1 == dir).foreach(m.remove)
-    }
-  }
-
-  /** Read one table from an sf directory. Column pruning + predicate
-    * pushdown reach the parquet scan because callers compose Columns on
-    * the returned DataFrame (Catalyst handles pushdown declaratively).
+  /** Read one table from an sf directory. The schema is Spark's inferred
+    * schema, read from one footer on the driver and memoized per session
+    * (no Spark job). Column pruning + predicate pushdown reach the
+    * parquet scan because callers compose Columns on the returned
+    * DataFrame (Catalyst handles pushdown declaratively).
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val memo = memoFor(spark)
     if (memo.size > 1024) memo.clear()
     val schema = memo.getOrElseUpdate((dir, name),
-      spark.read.parquet(path).schema)
+      GraftParquetSchema.infer(spark, Seq(path)))
     spark.read.schema(schema).parquet(path)
   }
+
+  /** `spark.read.parquet(paths: _*)` for files whose schema is not known
+    * up front, with the schema read from one footer on the driver instead
+    * of by Spark's inference job. Inputs the footer read does not cover
+    * (a partitioned layout, a glob) take Spark's own read unchanged. Not
+    * memoized: the callers read state that changes between calls.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    GraftParquetSchema.fromFooter(spark, paths)
+      .fold(spark.read)(spark.read.schema(_))
+      .parquet(paths: _*)
 
   /** The events table's `ts` encoding differs across testdata generations:
     * older driver files store TIMESTAMP(NANOS) (which Spark's vectorized
@@ -97,9 +96,10 @@ object Tables {
     * same names the DuckDB oracle uses. Deliberately NOT idempotent: the
     * stored view plan freezes its file listing, so re-registering per
     * call is what keeps mid-session overwrites of a data dir visible
-    * (several specs rewrite a temp dir and re-query). The per-call cost
-    * is one catalog put per table — the expensive part (schema
-    * inference) is memoized in [[apply]].
+    * (several specs rewrite a temp dir and re-query). It starts no Spark
+    * job: the first call per session reads one footer per table on the
+    * driver, and later calls hit [[apply]]'s memo, leaving one file
+    * listing and one catalog put per table.
     */
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach { n =>

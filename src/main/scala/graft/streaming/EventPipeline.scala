@@ -156,7 +156,7 @@ object EventPipeline {
         graft.sources.AtomicSwap.recover(fs, hPath)
         val merged =
           if (fs.exists(hPath))
-            spark.read.parquet(statePath).unionByName(batchSk)
+            graft.sources.Tables.parquet(spark, statePath).unionByName(batchSk)
               .groupBy(col(keyCol)).agg(expr("hll_union_agg(sk)").as("sk"))
           else batchSk
         val staging = graft.sources.AtomicSwap.stagingOf(hPath)
@@ -176,7 +176,7 @@ object EventPipeline {
     val hPath = new org.apache.hadoop.fs.Path(statePath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.sources.AtomicSwap.recover(fs, hPath)
-    spark.read.parquet(statePath)
+    graft.sources.Tables.parquet(spark, statePath)
       .selectExpr(keyCol, "hll_sketch_estimate(sk) AS approx_distinct")
   }
 
@@ -233,7 +233,7 @@ object EventPipeline {
         val merged =
           if (fs.exists(hPath))
             graft.operators.Merge.upsert(
-              spark.read.parquet(snapshotPath).select(dedupedBatch.columns.map(col): _*),
+              graft.sources.Tables.parquet(spark, snapshotPath).select(dedupedBatch.columns.map(col): _*),
               dedupedBatch, keys)
           else dedupedBatch
         val staging = graft.sources.AtomicSwap.stagingOf(hPath)
@@ -385,7 +385,7 @@ object EventPipeline {
         .map(_.toString).sorted.toSeq
     } else Seq.empty
     require(dirs.nonEmpty, s"annIndex: no committed batches under $indexPath")
-    spark.read.parquet(dirs: _*)
+    graft.sources.Tables.parquet(spark, dirs: _*)
   }
 
   final case class DocEvent(ts: Timestamp, doc_id: Long, text: String)
@@ -481,7 +481,7 @@ object EventPipeline {
       if (paths.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-      else spark.read.parquet(paths: _*)
+      else graft.sources.Tables.parquet(spark, paths: _*)
 
     // `onStep` is a crash-injection seam for the restart-matrix spec:
     // it fires between the staging write and the commit ("<step>-staged")

@@ -1541,4 +1541,13 @@ class GraftSqlSpec extends SparkSpec {
     assert(named.map(_.getLong(2)).toSeq == Seq(2L, 2L, 2L, 2L))
     assert(named.map(_.getInt(1)).sorted.toSeq == Seq(1, 1, 2, 2))
   }
+
+  test("ensureHelpers runs no analyzer pass once the helpers exist") {
+    GraftSql.ensureHelpers(spark)
+    val before = org.apache.spark.sql.catalyst.rules.RuleExecutor.getCurrentMetrics().numRuns
+    GraftSql.ensureHelpers(spark)
+    assert(org.apache.spark.sql.catalyst.rules.RuleExecutor.getCurrentMetrics().numRuns == before)
+    Seq("graft_epoch", "graft_json_valid", "graft_regexp_replace_occ")
+      .foreach(f => assert(spark.catalog.functionExists(f), f))
+  }
 }
