@@ -12,15 +12,17 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    array literals, POSITIONAL JOIN, DISTINCT ON, comma table
   *    functions, JSON arrows, `struct_pack(k := v)`, TYPEOF, CAST
   *    (VARCHAR/TEXT targets do not parse), GLOB, CURRENT_TIME, TIMESTAMP
-  *    literals, INTERVAL arithmetic (fractional values do not parse),
-  *    unit-form date_diff, the `~`/`!~` operators, `* EXCLUDE` and
-  *    bare-DESC null ordering (the parsed plan cannot tell a bare DESC
-  *    from `DESC NULLS LAST`);
+  *    literals, markers for numeric INTERVAL literals (fractional values
+  *    do not parse), unit-form date_diff, the `~`/`!~` operators,
+  *    `* EXCLUDE` and bare-DESC null ordering (the parsed plan cannot
+  *    tell a bare DESC from `DESC NULLS LAST`);
   *  - on the parsed plan, which [[prepare]] translates before its checks
   *    and the analysis: select aliases substituted in order into every
   *    SELECT block ([[graft.plans.rewrite.SelectAliases]]), NOT IN with
   *    the reference's null semantics
-  *    ([[graft.plans.rewrite.NotInExists]]), then every other function
+  *    ([[graft.plans.rewrite.NotInExists]]), `± INTERVAL` arithmetic
+  *    with the reference's JS Date semantics
+  *    ([[graft.plans.rewrite.IntervalArith]]), then every other function
   *    call (renames, JS value coercions, literal argument guards, the
   *    DISTINCT/FILTER-aware aggregates, EXTRACT fields) and the
   *    `||`/LIKE operand coercion, LIKE → ILIKE, zero divisors, numeric
@@ -41,18 +43,19 @@ object GraftSql {
   // A pass stays text only where Spark's parser cannot read its input or
   // would misread it, or where a later text pass emits the name it
   // matches (TYPEOF); each call-shaped one says why at the pass. Select
-  // aliases, NOT IN, and every call and operator Spark parses are
-  // translated after parsing.
+  // aliases, NOT IN, interval arithmetic, and every call and operator
+  // Spark parses are translated after parsing.
   import _root_.graft.plans.rewrite.RewriteSupport._
   import _root_.graft.plans.rewrite.SkeletonPasses._
   import _root_.graft.plans.rewrite.JsCoercionPasses._
   import _root_.graft.plans.rewrite.IntervalPasses._
-  import _root_.graft.plans.rewrite.{NotInExists, PlanCalls, SelectAliases}
+  import _root_.graft.plans.rewrite.{IntervalArith, NotInExists, PlanCalls, SelectAliases}
 
   /** The text half of the translation: one squirreling-dialect
     * statement as text Spark's parser reads. Select aliases, NOT IN,
-    * function calls and the operators PlanCalls owns are left as
-    * written; the host entry points translate them on the parsed plan.
+    * interval arithmetic (around its literal markers), function calls
+    * and the operators PlanCalls owns are left as written; the host
+    * entry points translate them on the parsed plan.
     */
   def rewrite(sqlText: String): String = {
     var s = sqlText
@@ -143,9 +146,9 @@ object GraftSql {
 
     // TYPEOF → DuckDB-style names over Spark typeof (the doubled
     // upper(typeof(..)) is free — typeof is foldable, so Catalyst
-    // constant-folds it at analysis time). Text, before the cast and
-    // interval passes: they emit Spark typeof, which a later pass could
-    // not tell apart (qualified system.builtin.typeof does not resolve).
+    // constant-folds it at analysis time). Text, before the cast pass:
+    // it emits Spark typeof, which a later pass could not tell apart
+    // (qualified system.builtin.typeof does not resolve).
     s = rewriteCall(s, "typeof", args => {
       val t = s"upper(typeof(${args.mkString(", ")}))"
       s"(CASE $t WHEN 'STRING' THEN 'VARCHAR' WHEN 'INT' THEN 'INTEGER' ELSE $t END)"
@@ -230,22 +233,10 @@ object GraftSql {
       }
     }
 
-    // the interval passes stay text: Spark's parser rejects the
-    // fractional values (INTERVAL '2.5' MONTH) the JS Date emulation needs.
-    // date/timestamp arithmetic with INTERVAL coerces its LEFT operand
-    // leniently (the reference parses date STRINGS and epoch-millis
-    // NUMBERS with new Date(...)): wrap the primary before +/- INTERVAL
-    // everything but integral-DAY interval arithmetic runs through the
-    // exact JS Date-setter emulation (month-end rollover, summed-
-    // component truncation, date-only format preservation); it coerces
-    // its own left primary, so it runs BEFORE the generic operand
-    // coercion, which then only sees the remaining integral-DAY sites
-    s = rewriteJsIntervalArith(s)
-    s = rewriteIntervalOperands(s)
-    // any fractional interval literal left standing alone truncates
-    // toward zero so it at least parses (the reference errors on a
-    // standalone interval at EXECUTION, so no semantics ride on it)
-    s = rewriteFractionalIntervals(s)
+    // numeric INTERVAL literals become markers: Spark's parser rejects
+    // the fractional values (INTERVAL '2.5' MONTH) the reference accepts.
+    // IntervalArith translates the arithmetic around them on the plan.
+    s = markIntervalLiterals(s)
 
     // unit-form date_diff('day', a, b): reference semantics are calendar
     // diff for YEAR/MONTH and truncated elapsed time for smaller units
@@ -315,6 +306,7 @@ object GraftSql {
     *   - `SELECT * FROM users WHERE` → `users AS WHERE` (the user's
     *     dangling clause vanishes);
     *   - `SELECT name AS FROM users` → a column literally named `AS`;
+    *   - `SELECT k FROM t GROUP GROUP BY k` → `t AS GROUP`;
     *   - duplicate CTE names resolve to the LAST definition, silently.
     * Each would return an answer to a question the user didn't ask, so
     * the host-facing surfaces reject them up front.
@@ -333,14 +325,18 @@ object GraftSql {
     // (`SELECT x AS "AS FROM"` is a legal quoted alias); the token
     // stream classifies them, so the checks read Word tokens directly
     val t = new SqlTok.View(text).toks
+    def banned(k: Int) = k < t.length && t(k).kind == SqlTok.Word && aliasBanKw(t(k).up)
+    def setOpArm(k: Int) = (t(k).is("UNION") || t(k).is("INTERSECT") || t(k).is("EXCEPT")) &&
+      (t(k + 1).is("SELECT") || t(k + 1).is("FROM"))
     t.reverseIterator.dropWhile(_.kind == SqlTok.Semi).nextOption()
       .filter(x => x.kind == SqlTok.Word && clauseKw(x.up))
       .map(w => s"query ends in a dangling ${w.up} clause")
       .orElse(t.indices.collectFirst {
-        case k if t(k).is("AS") && k + 1 < t.length &&
-            t(k + 1).kind == SqlTok.Word && aliasBanKw(t(k + 1).up) =>
-          s"alias cannot be the clause keyword ${t(k + 1).up}"
-      })
+        case k if t(k).is("AS") && banned(k + 1) => t(k + 1).up
+        // a clause keyword right before another cannot open its clause,
+        // so Spark reads it as an implicit alias (`FROM t GROUP GROUP BY k`)
+        case k if banned(k) && banned(k + 1) && !setOpArm(k) => t(k).up
+      }.map(w => s"alias cannot be the clause keyword $w"))
   }
 
   /** Duplicate CTE names (case-insensitive) within one WITH list: Spark
@@ -410,12 +406,12 @@ object GraftSql {
   /** The one path from dialect text to an analyzed plan, shared by every
     * host entry point. In order: strip comments and run the token lint;
     * run the text passes once; parse once, in the session's conf; on the
-    * parsed plan substitute select aliases, translate NOT IN, then the
-    * calls; run the duplicate-CTE check and the set-op guard on that
-    * plan; analyze that same plan once. `Left` is the misparse gate's
-    * reason for refusing the text. When the analysis of a plan carrying
-    * the NOT IN translation fails, the same parsed plan is translated
-    * without it and analyzed instead.
+    * parsed plan substitute select aliases, translate NOT IN, the
+    * interval arithmetic, then the calls; run the duplicate-CTE check
+    * and the set-op guard on that plan; analyze that same plan once.
+    * `Left` is the misparse gate's reason for refusing the text. When
+    * the analysis of a plan carrying the NOT IN translation fails, the
+    * same parsed plan is translated without it and analyzed instead.
     */
   private def prepare(spark: SparkSession, sqlText: String): Either[String, Prepared] = {
     ensureHelpers(spark)
@@ -423,7 +419,7 @@ object GraftSql {
     tokenLint(text).toLeft(()).flatMap { _ =>
       val parsed = SelectAliases(GraftPlanBridge.parse(spark, rewrite(text)))
       val notIn = NotInExists(parsed)
-      def calls(p: LogicalPlan) = GraftPlanBridge.active(spark)(PlanCalls(p))
+      def calls(p: LogicalPlan) = GraftPlanBridge.active(spark)(PlanCalls(IntervalArith(p)))
       def analyze(p: LogicalPlan) = Prepared(p, GraftPlanBridge.ofRows(spark, p))
       val plan = calls(notIn)
       duplicateCte(plan).orElse(setOpTypeGuard(spark, plan)).toLeft {
@@ -567,7 +563,7 @@ object GraftSql {
     val parsed =
       try CatalystSqlParser.parseExpression(exprText)
       catch { case scala.util.control.NonFatal(_) =>
-        PlanCalls.expression(CatalystSqlParser.parseExpression(rewrite(exprText))) }
+        PlanCalls.expression(IntervalArith.expression(CatalystSqlParser.parseExpression(rewrite(exprText)))) }
     deriveName(parsed)
   }
 
@@ -724,8 +720,8 @@ object GraftSql {
           java.lang.Double.valueOf(ts.getTime / 1000.0)
         })
     }
-    // graft_js_interval / graft_js_trim / graft_strftime /
-    // graft_datediff are NATIVE codegen'd expressions
+    // the JS interval, trim, strftime and date_diff helpers are
+    // NATIVE codegen'd expressions
     // (functions/time/JsInterval.scala, functions/text/JsTrim.scala,
     // functions/time/TimeFmt.scala, registered via GraftExtensions) —
     // formerly ScalaUDFs here. Each participates in whole-stage codegen

@@ -180,10 +180,8 @@ private[graft] object SqlTok {
     m
   }
 
-  /** A tokenized view of one SQL text with bracket matching and the
-    * primary-expression span walks the interval rewrites share (the
-    * operand of `expr ± INTERVAL …` backward, the operand of
-    * `INTERVAL … + expr` forward).
+  /** A tokenized view of one SQL text with bracket matching and paren
+    * depths.
     */
   final class View(val s: String) {
     val toks: Vector[Tok] = tokenize(s)
@@ -227,15 +225,6 @@ private[graft] object SqlTok {
     def topWord(fromTok: Int, untilTok: Int, kws: Set[String]): Int =
       topIdx(fromTok, untilTok)(t => t.kind == Word && kws(t.up))
 
-    /** Index of the first token starting at or after char `pos`
-      * (toks.length when none).
-      */
-    def tokAtOrAfter(pos: Int): Int = {
-      var i = 0
-      while (i < toks.length && toks(i).start < pos) i += 1
-      i
-    }
-
     /** True when the tokens from `k` match `pats` in order: an
       * uppercase word matches that Word token, "(" ")" "[" "]" ","
       * match those kinds, "'" any string literal, "0" any number.
@@ -255,92 +244,6 @@ private[graft] object SqlTok {
             case w => t.is(w)
           }
       }
-
-    /** `(startTokIdx, charStart, charEnd)` of the primary expression
-      * ENDING just before token index `endIdx`: a parenthesized group
-      * with an adjacent function-name word, a string literal, or an
-      * adjacent identifier/number/dot chain. `charStart == charEnd`
-      * when the preceding token cannot end a primary.
-      */
-    def primaryBefore(endIdx: Int): (Int, Int, Int) = {
-      if (endIdx <= 0) return (0, 0, 0)
-      val k = endIdx - 1
-      val t = toks(k)
-      t.kind match {
-        case RPar =>
-          // the reference parser is token-based, so `f (x)` is the
-          // call `f(x)` — absorb a preceding function-name Word across
-          // whitespace, but never an operator/clause keyword (`x AND
-          // (y)` keeps AND outside the primary)
-          val open = brk(k)
-          if (open < 0) (0, 0, t.end)
-          else if (open > 0 && toks(open - 1).kind == Word &&
-              !neverCallable(toks(open - 1).up))
-            (open - 1, toks(open - 1).start, t.end)
-          else (open, toks(open).start, t.end)
-        case Str => (k, t.start, t.end)
-        case Word | Num =>
-          // dot member access chains across whitespace too (`t . a`
-          // == `t.a` in the reference — probed)
-          var i = k
-          var cont = true
-          while (cont && i > 1) {
-            if (toks(i - 1).isOp(".") &&
-                (toks(i - 2).kind == Word || toks(i - 2).kind == Num)) i -= 2
-            else cont = false
-          }
-          (i, toks(i).start, t.end)
-        case _ => (k, t.end, t.end)
-      }
-    }
-
-    /** Char END of the primary expression STARTING at token index
-      * `fromIdx`: a string literal, a parenthesized group, or an
-      * identifier/number/dot chain with optional adjacent call-paren
-      * and subscript-bracket suffixes (`f(x)`, `m['k']`, `f(x)[1]`).
-      * -1 when the tokens there don't form one (incl. an unbalanced
-      * open paren/bracket).
-      */
-    def forwardFrom(fromIdx: Int): Int = {
-      if (fromIdx >= toks.length) return -1
-      val t = toks(fromIdx)
-      // last token index of the suffix-free head, or -1
-      val head: Int = t.kind match {
-        case Str => fromIdx
-        case LPar => brk(fromIdx)
-        case Word | Num =>
-          // dot member access chains across whitespace (`t . a` ==
-          // `t.a` — the reference parser is token-based, probed)
-          var i = fromIdx
-          var cont = true
-          while (cont && i + 2 < toks.length) {
-            if (toks(i + 1).isOp(".") &&
-                (toks(i + 2).kind == Word || toks(i + 2).kind == Num)) i += 2
-            else cont = false
-          }
-          i
-        case _ => -1
-      }
-      if (head < 0) return -1
-      // call-paren / subscript-bracket suffixes, whitespace allowed
-      // (`f (x)` is a call, `a [1]` a subscript — token-based like the
-      // reference). A string literal head takes none — '...'[0] is not
-      // element access in the dialect, matching the subscripts PlanCalls
-      // translates — and an operator/clause keyword never opens a call.
-      var last = head
-      var more = t.kind != Str
-      while (more && last + 1 < toks.length) {
-        toks(last + 1).kind match {
-          case LPar if toks(last).kind == Word && neverCallable(toks(last).up) =>
-            more = false
-          case LPar | LBrk =>
-            val close = brk(last + 1)
-            if (close < 0) return -1 else last = close
-          case _ => more = false
-        }
-      }
-      toks(last).end
-    }
   }
 
   /** Apply span replacements `(start, end, txt)` to `s` — spans must
@@ -376,28 +279,6 @@ private[graft] object SqlTok {
   // ---- character-level utilities shared by the remaining regex passes
   // (one home for ALL quote-parity logic; the token stream above is the
   // preferred consumer surface for new passes) ------------------------
-
-  /** Index of the `)` matching the `(` at `open` (skips quoted strings),
-    * or -1 when unbalanced.
-    */
-  def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' =>
-          i += 1
-          while (i < s.length && s.charAt(i) != '\'') i += 1
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
 
   /** Split an argument list at top-level commas (quotes/parens/brackets
     * respected).

@@ -107,13 +107,13 @@ private[plans] object PlanCalls {
     case _ => w
   }
 
-  /** A sum or difference over a translated `||` on its left that starts
-    * where it starts, as (the `||`'s other operands, its last operand). */
-  private object LooseConcat {
+  /** A sum or difference over a `||` on its left that starts where it
+    * starts, as (the `||`'s other operands, its last operand unwrapped). */
+  private[rewrite] object LooseConcat {
     def unapply(s: Expression): Option[(Seq[Expression], Expression)] = s match {
       case _: Add | _: Subtract => s.children.head match {
-        case c @ Concat(init :+ JsWrapped(last)) if c.origin.startIndex == s.origin.startIndex =>
-          Some((init, last))
+        case c @ Concat(init :+ last) if c.origin.startIndex == s.origin.startIndex =>
+          Some((init, JsWrapped.unapply(last).getOrElse(last)))
         case _ => None
       }
       case _ => None
@@ -169,11 +169,11 @@ private[plans] object PlanCalls {
 
   // ---- expression vocabulary ------------------------------------------
 
-  private def fn(name: String, args: Expression*): UnresolvedFunction =
+  private[rewrite] def fn(name: String, args: Expression*): UnresolvedFunction =
     UnresolvedFunction(Seq(name), args, isDistinct = false)
   private def js(e: Expression): Expression = fn("graft_js_str", e)
-  private def lit(v: Any): Literal = Literal(v)
-  private def cast(e: Expression, dt: DataType): Cast = {
+  private[rewrite] def lit(v: Any): Literal = Literal(v)
+  private[rewrite] def cast(e: Expression, dt: DataType): Cast = {
     val c = Cast(e, dt)
     c.setTagValue(Cast.USER_SPECIFIED_CAST, ())
     c
@@ -644,20 +644,7 @@ private[plans] object PlanCalls {
     "list_min" -> rename("array_min"),
     "list_max" -> rename("array_max"),
     "ord" -> rename("ascii"),
-    "epoch" -> rename("graft_epoch"),
-    // not a dialect name: the interval text pass emits it. A step whose
-    // operand is another step's output keeps that step's operand kind, so
-    // a date-only string stays date-only at every step of a chain, as in
-    // the reference; the pass threads the kind through a written chain
-    // itself, and this case does it for a chain through a select alias
-    "graft_js_interval" -> (f => f.arguments match {
-      case Seq(c: Cast, v, unit, op, _) => c.child match {
-        case step: UnresolvedFunction if step.nameParts == f.nameParts && step.arguments.length == 5 =>
-          f.copy(arguments = Seq(c, v, unit, op, step.arguments(4)))
-        case _ => f
-      }
-      case _ => f
-    }))
+    "epoch" -> rename("graft_epoch"))
 
   private def jsonExtract(name: String)(f: UnresolvedFunction): Expression = f.arguments match {
     case Seq(x, p) => fn("get_json_object", jsonStrictInput(name, x), jsonPath(p))

@@ -33,13 +33,6 @@ private[plans] object RewriteSupport {
   }
 
 
-  /** True when `s` has a comma OUTSIDE single quotes and parens — i.e.
-    * the call really has multiple arguments.
-    */
-  private[plans] def hasTopLevelComma(s: String): Boolean =
-    splitTopLevel(s).lengthIs > 1
-
-
   /** One-pass token-edit walker: tokenize once, collect disjoint span
     * replacements, splice. The shape every small keyword/operator
     * rewrite uses (string literals, comments and quoted identifiers are

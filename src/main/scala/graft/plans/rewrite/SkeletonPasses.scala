@@ -260,48 +260,38 @@ private[plans] object SkeletonPasses {
     // TVF aliases that expose a single default column: dot/subscript
     // access through the alias must route through that column
     val singleCol = scala.collection.mutable.ListBuffer[(String, String)]()
-    var s = sql
-    var guard = 0
+    val v = new SqlTok.View(sql)
+    val t = v.toks
+    val edits = Seq.newBuilder[(Int, Int, String)]
+    var sites = 0
+    // one left-to-right scan; a site inside the span an earlier site
+    // consumed (its arguments, alias or ON condition) stays as written
     var from = 0
-    var continue = true
-    while (continue && guard < 200) {
-      guard += 1
-      val v = new SqlTok.View(s)
-      val t = v.toks
-      // site: Comma | FROM | [CROSS|INNER|LEFT [OUTER]] JOIN, then TVF (
-      var site = -1 // TVF name token
-      var sep = "" // ",", "FROM", or the JOIN spelling (normalized)
-      var sepTok = -1
-      var i = 1
-      while (site < 0 && i + 1 < t.length) {
-        if (t(i).kind == SqlTok.Word && tvfNames(t(i).up) &&
-            t(i).start >= from && t(i + 1).kind == SqlTok.LPar &&
-            v.brk(i + 1) >= 0) {
-          val p = t(i - 1)
-          if (p.kind == SqlTok.Comma) { site = i; sep = ","; sepTok = i - 1 }
-          else if (p.is("FROM")) { site = i; sep = "FROM"; sepTok = i - 1 }
-          else if (p.is("JOIN")) {
-            site = i; sep = "JOIN"; sepTok = i - 1
-            if (i >= 2 && (t(i - 2).is("CROSS") || t(i - 2).is("INNER"))) {
-              sep = t(i - 2).up + " JOIN"; sepTok = i - 2
-            } else if (i >= 2 && t(i - 2).is("OUTER") && i >= 3 && t(i - 3).is("LEFT")) {
-              sep = "LEFT OUTER JOIN"; sepTok = i - 3
-            } else if (i >= 2 && t(i - 2).is("LEFT")) {
-              sep = "LEFT JOIN"; sepTok = i - 2
-            }
-          }
-        }
-        if (site < 0) i += 1
-      }
-      if (site < 0) continue = false
-      else {
+    for (site <- 1 until t.length - 1) {
+      val isTvf = t(site).kind == SqlTok.Word && tvfNames(t(site).up) &&
+        t(site).start >= from && t(site + 1).kind == SqlTok.LPar && v.brk(site + 1) >= 0
+      // the separator before the TVF name: Comma | FROM |
+      // [CROSS|INNER|LEFT [OUTER]] JOIN, as (normalized spelling, first token)
+      val sepAt: Option[(String, Int)] =
+        if (!isTvf) None
+        else if (t(site - 1).kind == SqlTok.Comma) Some((",", site - 1))
+        else if (t(site - 1).is("FROM")) Some(("FROM", site - 1))
+        else if (!t(site - 1).is("JOIN")) None
+        else if (site >= 2 && (t(site - 2).is("CROSS") || t(site - 2).is("INNER")))
+          Some((t(site - 2).up + " JOIN", site - 2))
+        else if (site >= 3 && t(site - 2).is("OUTER") && t(site - 3).is("LEFT"))
+          Some(("LEFT OUTER JOIN", site - 3))
+        else if (site >= 2 && t(site - 2).is("LEFT")) Some(("LEFT JOIN", site - 2))
+        else Some(("JOIN", site - 1))
+      sepAt.foreach { case (sep, sepTok) =>
+        sites += 1
         val close = v.brk(site + 1)
         val fname = t(site).up
-        val args = s.substring(t(site + 1).end, t(close).start)
-        def text(k: Int): String = s.substring(t(k).start, t(k).end)
+        val args = sql.substring(t(site + 1).end, t(close).start)
+        def text(k: Int): String = sql.substring(t(k).start, t(k).end)
         // [AS] alias [(col, ...)]
         var j = close + 1
-        var alias = s"__tvf$guard"
+        var alias = s"__tvf$sites"
         var cols = Seq.empty[String]
         val aliasIdx =
           if (j < t.length && t(j).is("AS") && j + 1 < t.length &&
@@ -320,7 +310,7 @@ private[plans] object SkeletonPasses {
             } && innerToks.length % 2 == 1
             if (clean) {
               cols = innerToks.collect { case x if x.kind == SqlTok.Word =>
-                s.substring(x.start, x.end) }.toSeq
+                sql.substring(x.start, x.end) }.toSeq
               j = ce + 1
             }
           }
@@ -348,8 +338,8 @@ private[plans] object SkeletonPasses {
             }
             if (scanning) m += 1
           }
-          val condEnd = if (endTok < t.length) t(endTok).start else s.length
-          onCond = Some(s.substring(t(j + 1).start, condEnd).trim)
+          val condEnd = if (endTok < t.length) t(endTok).start else sql.length
+          onCond = Some(sql.substring(t(j + 1).start, condEnd).trim)
             .filter(_.nonEmpty)
           j = endTok
         }
@@ -364,23 +354,8 @@ private[plans] object SkeletonPasses {
           if (cols.isEmpty) defCols
           else cols ++ defCols.drop(cols.length)
         if (cols.isEmpty && colList.size == 1) singleCol += alias -> colList.head
-        // a LITERAL scalar argument ('42') is statically visible:
-        // the reference throws at execution (json.js JSON_EACH
-        // guard) — data columns stay lenient like the JSON family
-        val scalarErr =
-          if (fname == "JSON_EACH" && !hasTopLevelComma(args))
-            jsonEachScalarErr(args)
-          else None
-        val inner =
-          if (scalarErr.isDefined)
-            "explode(map_from_entries(array(struct(CAST(raise_error(" +
-              s"'${scalarErr.get}') AS STRING), 'x'))))"
-          else if (fname == "JSON_EACH") {
-            val x = s"graft_json_input($args)"
-            s"explode(coalesce(from_json($x, 'map<string,string>'), " +
-              s"map_from_entries(transform(from_json($x, 'array<string>'), " +
-              s"(e, i) -> struct(cast(i AS string), e)))))"
-          } else s"explode($args)"
+        // PlanCalls expands json_each on the parsed plan
+        val inner = if (fname == "JSON_EACH") s"json_each($args)" else s"explode($args)"
         val aliased = s"$inner AS $alias(${colList.mkString(", ")})"
         val replacement = sep match {
           case "FROM" => s"FROM $aliased"
@@ -391,11 +366,11 @@ private[plans] object SkeletonPasses {
             val prefix = if (jn.startsWith("LEFT")) "LEFT " else ""
             s"${prefix}JOIN LATERAL (SELECT * FROM $aliased) AS $alias ON ${onCond.getOrElse("TRUE")}"
         }
-        val start = t(sepTok).start
-        s = s.substring(0, start) + replacement + s.substring(consumedEnd)
-        from = start + replacement.length
+        edits += ((t(sepTok).start, consumedEnd, replacement))
+        from = consumedEnd
       }
     }
+    var s = SqlTok.applyEdits(sql, edits.result())
     // dot/subscript access through a single-column TVF alias: `tc.name`
     // over exploded structs means field access on the element column
     singleCol.foreach { case (alias, col) =>

@@ -635,8 +635,7 @@ class FuzzSpec extends FuzzHarness {
       java.nio.file.Paths.get(s"$workDir/ivl_chain_out.json")))
     // graft side: the DIALECT TEXT itself (literal base ± chain) runs
     // through the full translation — this is what exercises kind threading.
-    // Batched ~25 per statement: the rewrite's per-statement scan
-    // guards cap at 100 interval ops.
+    // Batched 25 per statement.
     val sqlOf: ((String, Seq[(String, String, String)])) => String = { case (raw, steps) =>
       steps.map { case (vv, u, op) => s" $op INTERVAL $vv $u" }
         .mkString(s"'$raw'", "", "")

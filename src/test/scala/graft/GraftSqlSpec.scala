@@ -1018,6 +1018,22 @@ class GraftSqlSpec extends SparkSpec {
       "SELECT (d + INTERVAL 1 DAY) - INTERVAL 2 HOUR AS r FROM ivl_t").collect().head
     assert(paren.getAs[java.sql.Timestamp]("r").toInstant.toString
       == "2024-03-31T00:00:00Z", paren.toString)
+    // an operand wider than one primary is the whole subtree: each form
+    // equals its CAST or parenthesized spelling, and numbers are not dates
+    Seq(("2024-01-31", 2, 3, true)).toDF("d", "a", "b", "c").createOrReplaceTempView("ivl_ops")
+    val wide = GraftSql.sql(spark,
+      """SELECT '2024-01-31'::DATE + INTERVAL 1 MONTH   AS typed,
+        |  CAST('2024-01-31' AS DATE) + INTERVAL 1 MONTH AS typed_cast,
+        |  CASE WHEN c THEN d END + INTERVAL 1 MONTH     AS case_end,
+        |  (CASE WHEN c THEN d END) + INTERVAL 1 MONTH   AS case_paren,
+        |  a * b + INTERVAL 1 DAY                        AS product,
+        |  (a * b) + INTERVAL 1 DAY                      AS product_paren,
+        |  5 + INTERVAL 1 DAY                            AS num_lit
+        |FROM ivl_ops""".stripMargin).collect().head
+    def w(n: String) = Option(wide.getAs[java.sql.Timestamp](n)).map(_.toInstant.toString)
+    assert(w("typed") == w("typed_cast") && w("typed").contains("2024-03-02T00:00:00Z"), wide)
+    assert(w("case_end") == w("case_paren") && w("case_end").contains("2024-03-02T00:00:00Z"), wide)
+    assert(Seq("product", "product_paren", "num_lit").forall(w(_).isEmpty), wide)
   }
 
   test("time-window filter bounds stay constant-foldable and push to parquet") {
@@ -1122,6 +1138,9 @@ class GraftSqlSpec extends SparkSpec {
     val rejected = Seq(
       "SELECT a FROM lint_t WHERE" -> "dangling WHERE clause",
       "SELECT a AS FROM lint_t" -> "alias cannot be the clause keyword FROM",
+      // Spark reads the first keyword as an implicit alias of lint_t
+      "SELECT a FROM lint_t GROUP GROUP BY a" -> "alias cannot be the clause keyword GROUP",
+      "SELECT a FROM lint_t ORDER ORDER BY a" -> "alias cannot be the clause keyword ORDER",
       "WITH c AS (SELECT 1 AS x), C AS (SELECT 2 AS x) SELECT x FROM c" ->
         "duplicate CTE name: c",
       "SELECT 1 INTERSECT SELECT '1'" -> "heterogeneous set operation")
@@ -1139,6 +1158,8 @@ class GraftSqlSpec extends SparkSpec {
         assert(err.getMessage.startsWith("invalid query: ") && err.getMessage.contains(reason))
       }
     }
+    // a quoted alias is an identifier, never a clause keyword
+    assert(GraftSql.validate(spark, "SELECT a FROM lint_t \"group\" GROUP BY a").isRight)
   }
 
   test("double-quoted identifiers select dotted columns, not string literals") {

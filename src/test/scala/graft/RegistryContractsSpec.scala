@@ -31,6 +31,9 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   *
   * 6. Select aliases and NOT IN are read on the parsed plan, never by a
   *    text pass.
+  *
+  * 7. Interval arithmetic is read on the parsed plan, and no text pass
+  *    re-tokenizes its output after each site.
   */
 class RegistryContractsSpec extends SparkSpec {
 
@@ -193,6 +196,16 @@ class RegistryContractsSpec extends SparkSpec {
       Seq("rewriteAliasExpansion", "rewriteNotInSubquery", "__nin", "notInExists"))
     assert(offenders.isEmpty,
       s"substitute aliases and translate NOT IN on the parsed plan. Offenders:\n  " +
+        offenders.mkString("\n  "))
+  }
+
+  test("no text pass translates interval arithmetic or restarts its scan") {
+    // source scan: the parsed plan holds each `± INTERVAL` operand as one
+    // subtree (IntervalArith), where a text pass can only guess it; and a
+    // pass that re-tokenizes after every site needs a site cap (`guard <`)
+    val offenders = inTextPasses(Seq("graft_js_interval", "coerceTsExpr", "guard <"))
+    assert(offenders.isEmpty,
+      s"translate intervals on the parsed plan, in one scan per pass. Offenders:\n  " +
         offenders.mkString("\n  "))
   }
 }

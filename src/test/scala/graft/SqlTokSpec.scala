@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.{GraftSql, PlanCallSpec, SqlTok}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared lexer ([[graft.plans.SqlTok]]) that every GraftSql
@@ -64,24 +65,6 @@ class SqlTokSpec extends AnyFunSuite {
     assert(m.last == -1) // the stray ] maps to nothing
   }
 
-  test("View.primaryBefore / forwardFrom walk the operand shapes the interval passes need") {
-    val v = new View("SELECT g(t.x) - INTERVAL 1 DAY, 'lit' + n2")
-    val toks = v.toks
-    val minus = toks.indexWhere(_.isOp("-"))
-    val (_, s1, e1) = v.primaryBefore(minus)
-    assert(v.s.substring(s1, e1) == "g(t.x)")
-    // a dotted column chain (no call parens) spans whole
-    val v2 = new View("x FROM t WHERE t2.c3 + INTERVAL 1 DAY")
-    val plus2 = v2.toks.indexWhere(_.isOp("+"))
-    val (_, s3, e3) = v2.primaryBefore(plus2)
-    assert(v2.s.substring(s3, e3) == "t2.c3")
-    val plus = toks.indexWhere(_.isOp("+"))
-    val (_, s2, e2) = v.primaryBefore(plus)
-    assert(v.s.substring(s2, e2) == "'lit'")
-    val end = v.forwardFrom(plus + 1)
-    assert(v.s.substring(toks(plus + 1).start, end) == "n2")
-  }
-
   // ---- the three historical guard regressions, pinned on the translated plan ----
 
   test("regression pin (9652458): implicit alias after a window spec stays OUTSIDE the || wrap") {
@@ -131,11 +114,13 @@ class SqlTokSpec extends AnyFunSuite {
       "SELECT graft_get(a , (1)) AS r FROM t")
     translatesTo("SELECT f(x) [0] AS r FROM t",
       "SELECT graft_get(f(x) , (0)) AS r FROM t")
-    // dot member access chains across whitespace
-    val v = new View("x FROM t WHERE t2 . c3 + INTERVAL 1 DAY")
-    val plus = v.toks.indexWhere(_.isOp("+"))
-    val (_, s0, e0) = v.primaryBefore(plus)
-    assert(v.s.substring(s0, e0) == "t2 . c3")
+    // dot member access chains across whitespace: the interval call's
+    // operand is the whole column
+    val operands = PlanCallSpec.translatedPlan("SELECT x FROM t WHERE t2 . c3 + INTERVAL 1 DAY")
+      .flatMap(_.expressions).flatMap(_.collect {
+        case f: UnresolvedFunction if f.nameParts == Seq("graft_js_interval") => f.arguments.head
+      })
+    assert(operands.map(_.children) == Seq(Seq(UnresolvedAttribute(Seq("t2", "c3")))), operands)
     // an operator/clause keyword before ( or [ is NOT a call/subscript
     assert(GraftSql.rewrite("SELECT CASE WHEN a THEN [1] ELSE [2] END AS r FROM t") ==
       "SELECT CASE WHEN a THEN array(1) ELSE array(2) END AS r FROM t")

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.plans.rewrite.{NotInExists, PlanCalls, SelectAliases}
+import graft.plans.rewrite.{IntervalArith, NotInExists, PlanCalls, SelectAliases}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
 import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, ILike, Like}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
@@ -184,10 +184,10 @@ class PlanCallSpec extends SparkSpec {
 
 object PlanCallSpec {
   /** `sqlText` as the host entry points translate it, without a session:
-    * the text passes, Spark's parser, then the select aliases, NOT IN
-    * and PlanCalls. */
+    * the text passes, Spark's parser, then the select aliases, NOT IN,
+    * the interval arithmetic and PlanCalls. */
   def translatedPlan(sqlText: String): LogicalPlan =
-    PlanCalls(NotInExists(SelectAliases(CatalystSqlParser.parsePlan(GraftSql.rewrite(sqlText)))))
+    PlanCalls(IntervalArith(NotInExists(SelectAliases(CatalystSqlParser.parsePlan(GraftSql.rewrite(sqlText))))))
 
   /** A plan's text with its expression ids masked, so two parses compare. */
   def shown(p: LogicalPlan): String = p.toString.replaceAll("#\\d+", "#")
